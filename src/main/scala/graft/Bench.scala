@@ -27,8 +27,9 @@ import org.apache.spark.sql.SparkSession
   *     accumulated storage drove GC pressure high enough that the
   *     local executor missed heartbeats and the JVM died with
   *     ExecutorExitCode.HEARTBEAT_FAILURE (= the observed exit 56);
-  *   - heartbeat/network tolerances raised: a 32-thread local JVM
-  *     under full GC can pause past the 10 s default; and
+  *   - heartbeat/network tolerances raised ([[GraftSession]]): a
+  *     32-thread local JVM under full GC can pause past the 10 s
+  *     default; and
   *   - fixture-scaffolding time (scratch table copies, bucketed layout
   *     writes) is drained from [[Scaffold]] per query and reported as
   *     `setup_sec`, excluded from the query timing, so the baseline
@@ -40,41 +41,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // A hash(k1) exchange may serve a (k1, k2) join (subset-key
-      // co-partitioning — Spark made the conservative choice the
-      // default in 3.4); the engine's shared-exchange plans rely on it.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Scan-split sizing (guide §6) — round-13 MEASURED NEGATIVE
-      // finding, knob kept at the Spark default: openCostInBytes=4m
-      // floors the split size, so a 10.8 MB file scans as 3 tasks on
-      // 32 cores and CPU-heavy scan stages run at 3/32 of the
-      // machine. Lowering it to 64k won a kernel-heavy 14-gate subset
-      // by 8 % (LSH shingles 0.60×, n-grams 0.81×) — but a full-suite
-      // A/B in one host window read 492.4 s (64k, 3-pass) vs 426.8 s
-      // (4m control, 2-pass), geomean 1.15× AGAINST: the extra ~30-90
-      // tiny tasks per scan stage tax all ~500 sub-second gates more
-      // than the parallelism pays on the few kernel-dominant ones.
-      // Env-overridable for workloads that ARE kernel-dominant
-      // (SPARK_GRAFT_OPEN_COST, bytes); OPTIMIZATION_r13.md has the
-      // full table.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST",
-          (4 * 1024 * 1024).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Survive long driver GC pauses in local mode: the in-process
-      // executor shares the driver heap, and a full-GC stall past the
-      // heartbeat window kills the JVM with exit 56 (HEARTBEAT_FAILURE).
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def materialize(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,

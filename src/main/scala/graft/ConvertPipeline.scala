@@ -92,18 +92,23 @@ object ConvertPipeline extends Logging {
   }
 
   /** Run the conversion stage. Returns the produced parquet targets. */
-  def convert(spark: SparkSession, cfg: Config): Seq[String] = {
+  def convert(spark: SparkSession, cfg: Config): Seq[String] =
+    convertReporting(spark, cfg)._1
+
+  /** [[convert]]'s produced targets, and the sources that failed. */
+  private def convertReporting(spark: SparkSession,
+      cfg: Config): (Seq[String], Seq[String]) = {
     val csvs = discoverCsvs(cfg.sourceDir)
     Files.createDirectories(Paths.get(cfg.parquetDir))
     if (cfg.preserveFileNames) {
       // 1:1 naming parity (P9): x.csv → x.parquet, one small job per
       // file; a failure converts that file only (reference X1
       // isolation), others continue.
-      csvs.flatMap { csv =>
+      val outcomes = csvs.map { csv =>
         val name = Paths.get(csv).getFileName.toString
           .replaceAll("(?i)\\.csv$", ".parquet")
         val target = s"${cfg.parquetDir}/$name"
-        try {
+        csv -> (try {
           val df = CsvIngest.read(spark, csv, cfg.schema)
           ParquetSink.writeSingleFile(df, target)
           Some(target)
@@ -111,13 +116,14 @@ object ConvertPipeline extends Logging {
           case e: Exception =>
             logError(s"failed to convert $csv: ${e.getMessage}")
             None
-        }
+        })
       }
+      (outcomes.flatMap(_._2), outcomes.collect { case (csv, None) => csv })
     } else {
       // Scale path: one distributed job over all files.
       val df = CsvIngest.readAll(spark, csvs, cfg.schema)
       ParquetSink.write(df, cfg.parquetDir)
-      Seq(cfg.parquetDir)
+      (Seq(cfg.parquetDir), Seq.empty)
     }
   }
 
@@ -177,22 +183,27 @@ object ConvertPipeline extends Logging {
       s3.uri
     }
 
-  /** Full EP1: convert then upload. */
-  def run(spark: SparkSession, cfg: Config): Unit = {
-    val produced = convert(spark, cfg)
+  /** Full EP1: convert then upload. Returns the sources that failed
+    * to convert; the others are converted and uploaded. */
+  def run(spark: SparkSession, cfg: Config): Seq[String] = {
+    val (produced, failed) = convertReporting(spark, cfg)
     logInfo(s"converted ${produced.size} target(s)")
     upload(spark, cfg).foreach(u => logInfo(s"uploaded to $u"))
+    failed
   }
 
   def main(args: Array[String]): Unit = {
     val propsPath = args.lift(0).getOrElse("application.properties")
     val schemaPath = args.lift(1).getOrElse("schema.json")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-convert")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    try run(spark, configFrom(loadProperties(propsPath), schemaPath))
-    finally spark.stop()
+    val spark = GraftSession.builder("graft-convert",
+      master = sys.env.get("SPARK_MASTER")).getOrCreate()
+    val failed =
+      try run(spark, configFrom(loadProperties(propsPath), schemaPath))
+      finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[convert] ${failed.size} source(s) failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

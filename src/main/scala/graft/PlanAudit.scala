@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump formatted physical plans for selected queries and
@@ -47,17 +46,7 @@ object PlanAudit {
     val write = flags.contains("--write")
     val sfDir = pos.lift(0).getOrElse("/root/testdata/sf0.01")
     val only = pos.lift(1).filterNot(_ == "all").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // A hash(k1) exchange may serve a (k1, k2) join (subset-key
-      // co-partitioning — Spark made the conservative choice the
-      // default in 3.4); the engine's shared-exchange plans rely on it.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-plan-audit", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val inventory = scala.collection.mutable.TreeMap.empty[String, Seq[String]]
     var failures = 0

@@ -2,8 +2,6 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-run reproducibility check (round-10 verdict growth item c):
   * every gate must produce IDENTICAL rows under different
   * `spark.sql.shuffle.partitions` — pinning order-independence of
@@ -28,22 +26,14 @@ object ReproCheck {
     val sfDir = pos.lift(0).getOrElse("/root/testdata/sf0.001")
     val only = pos.lift(1).filterNot(_ == "all").map(_.split(",").toSet)
     val withStream = flags.contains("--stream")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-repro")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-repro", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def hashOf(name: String, parts: Int): String = {
       spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      // Round-13: the bench lowers files.openCostInBytes (finer scan
-      // splits on small inputs), so SCAN width joined shuffle width as
-      // a partitioning degree of freedom — vary both together and pin
-      // that every gate's hash is invariant to either.
+      // A gate's hash must not depend on how its scans are split
+      // either: vary scan width (openCostInBytes sets the split floor)
+      // together with shuffle width and pin invariance to both.
       spark.conf.set("spark.sql.files.openCostInBytes",
         if (parts == 5) (4 * 1024 * 1024).toString else (64 * 1024).toString)
       val rows = SparkEntry.queries(name)(spark, sfDir).collect()

@@ -2053,15 +2053,14 @@ object Similarity {
     * changelog checkpointing; state = the corpus partitioned by cell,
     * on local SSD. Recall caveat inherited from the batch gate:
     * cross-cell ≥θ pairs are missed by construction. */
-  /** The (vec_id, v, n) source frame [[streamSemDedup]] streams,
-    * exposed for the Prof5 scaling runner. */
-  private[graft] def streamSemDedupBase(s: SparkSession,
+  /** The (vec_id, v, n) source frame [[streamSemDedup]] streams. */
+  private def streamSemDedupBase(s: SparkSession,
       dir: String): DataFrame =
     withNearDuplicates(s, dir).withColumn("n", norm(col("v")))
 
   /** The batch gate's deterministic mult-hash seed pick, collected
     * driver-side (k rows of 64 doubles — metadata-sized). */
-  private[graft] def streamSemDedupSeeds(base: DataFrame,
+  private def streamSemDedupSeeds(base: DataFrame,
       k: Int): Array[(Seq[Double], Double)] =
     base
       .withColumn("h",

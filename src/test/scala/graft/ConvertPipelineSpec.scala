@@ -149,4 +149,16 @@ class ConvertPipelineSpec extends SparkSpec {
     assert(hc.get("fs.s3a.secret.key") == "sk")
     assert(hc.get("fs.s3a.path.style.access") == "true")
   }
+
+  test("run names the source that failed to convert; the others still convert") {
+    val out = tmpDir("conv_fail_out")
+    // A non-empty directory at sample2's target makes its move fail.
+    Files.createDirectories(Paths.get(out, "sample2.parquet", "occupied"))
+    val cfg = ConvertPipeline.Config(mkCsvDir(), out,
+      graft.schema.SchemaLoader.fromJson(schemaJson))
+    val failed = ConvertPipeline.run(spark, cfg)
+    assert(failed.map(p => Paths.get(p).getFileName.toString) ==
+      Seq("sample2.csv"))
+    assert(spark.read.parquet(s"$out/sample1.parquet").count() == 2)
+  }
 }

@@ -8,18 +8,7 @@ import org.apache.spark.sql.SparkSession
 class GraftExtensionsSpec extends SparkSpec {
 
   test("injected functions resolve and evaluate from pure SQL") {
-    spark // force the shared session (and its SparkContext) up first
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new GraftExtensions())
-        .getOrCreate()
-      assert(s2 ne spark, "expected a fresh session with extensions")
-
+    withBareSession(_.withExtensions(new GraftExtensions())) { s2 =>
       val dot = s2.sql(
         "SELECT graft_vector_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
         .head().getDouble(0)
@@ -56,9 +45,6 @@ class GraftExtensionsSpec extends SparkSpec {
         "SELECT graft_text_normalize('Héllo  Wörld')")
         .head().getString(0)
       assert(norm == "hello world")
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
     }
   }
 

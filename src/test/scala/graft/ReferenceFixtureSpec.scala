@@ -18,9 +18,19 @@ class ReferenceFixtureSpec extends SparkSpec {
 
   private val refRoot = "/root/reference/src/main/resources"
 
+  /** Path of one reference fixture. Without the reference checkout the
+    * test fails here, on one assertion that says how to fix it. */
+  private def ref(file: String): String = {
+    if (!Files.isDirectory(Paths.get(refRoot)))
+      fail(s"reference fixtures missing: $refRoot does not exist. " +
+        "Vendor schema.json, csv/sample1.csv, csv/sample2.csv and " +
+        "application.properties byte for byte into " +
+        "src/test/resources/reference/ and point refRoot there.")
+    s"$refRoot/$file"
+  }
+
   private lazy val refSchema: StructType =
-    SchemaLoader.fromJson(
-      Files.readString(Paths.get(s"$refRoot/schema.json")))
+    SchemaLoader.fromJson(Files.readString(Paths.get(ref("schema.json"))))
 
   test("reference schema.json compiles to the 28-column StructType") {
     assert(refSchema.fields.length == 28)
@@ -40,7 +50,7 @@ class ReferenceFixtureSpec extends SparkSpec {
   }
 
   test("sample2.csv ingests with golden values and empty→null semantics") {
-    val df = CsvIngest.read(spark, s"$refRoot/csv/sample2.csv", refSchema)
+    val df = CsvIngest.read(spark, ref("csv/sample2.csv"), refSchema)
       .cache()
     assert(df.count() == 10)
 
@@ -68,7 +78,7 @@ class ReferenceFixtureSpec extends SparkSpec {
 
   test("sample1.csv + sample2.csv round-trip through parquet unchanged") {
     val df = CsvIngest.readAll(spark,
-      Seq(s"$refRoot/csv/sample1.csv", s"$refRoot/csv/sample2.csv"),
+      Seq(ref("csv/sample1.csv"), ref("csv/sample2.csv")),
       refSchema)
     assert(df.count() == 13)
     val out = tmpDir("ref_roundtrip")
@@ -81,8 +91,7 @@ class ReferenceFixtureSpec extends SparkSpec {
 
   test("the reference's own application.properties parses completely") {
     import graft.sources.S3Conf
-    val p = ConvertPipeline.loadProperties(
-      s"/root/reference/src/main/resources/application.properties")
+    val p = ConvertPipeline.loadProperties(ref("application.properties"))
     val s3 = S3Conf.validated(S3Conf.fromProperties(p))
     assert(s3.bucket == "swcsample-bucket-name")
     assert(s3.prefix == "swcca")

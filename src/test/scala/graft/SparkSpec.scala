@@ -7,19 +7,35 @@ import org.scalatest.funsuite.AnyFunSuite
   * getOrCreate dedupes across suites in the same fork). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // A hash(k1) exchange may serve a (k1, k2) join (subset-key
-      // co-partitioning — Spark made the conservative choice the
-      // default in 3.4); the engine's shared-exchange plans rely on it.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("graft-test", 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `f` on a fresh session that carries none of
+    * [[GraftSession]]'s SQL settings, as a stock user session would.
+    * It shares the suite's SparkContext; the shared session is
+    * restored as default and active afterwards. */
+  def withBareSession[T](
+      extend: SparkSession.Builder => SparkSession.Builder = identity)(
+      f: SparkSession => T): T = {
+    spark // force the shared session (and its SparkContext) up first
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val bare = extend(SparkSession.builder().master("local[4]"))
+        .getOrCreate()
+      assert(bare ne spark, "expected a fresh session")
+      // The shared SparkContext's conf holds the contract; unset it so
+      // the session falls back to Spark's own defaults.
+      GraftSession.sqlSettings(cores = 1).keys.foreach(bare.conf.unset)
+      f(bare)
+    } finally {
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
   }
 
   def tmpDir(prefix: String): String =
