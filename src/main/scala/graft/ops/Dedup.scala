@@ -73,31 +73,43 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** DuckDB shingle-set builder over the bounded corpus subset. */
-  private val ShingleSetsSql: String =
-    """shingled AS (
-      |  SELECT doc_id, CASE WHEN len(toks) < 3
-      |    THEN [array_to_string(toks, ' ')]
-      |    ELSE list_distinct(list_transform(
-      |           generate_series(1, len(toks) - 2),
-      |           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
-      |    END AS sh
-      |  FROM (SELECT doc_id,
-      |          list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-      |                      t -> len(t) > 0) AS toks
-      |        FROM corpus WHERE doc_id % 10000 < 100)
-      |)""".stripMargin
+  /** DuckDB twin of [[shingleSets]]: the CTE `shingled(doc_id, sh)`,
+    * each doc's distinct word-3-gram set, over the `corpus` rows `docs`
+    * selects — `"corpus"` itself, or a subset such as
+    * `"corpus WHERE doc_id % 10000 < 100"`. */
+  private[graft] def shingleSetsSql(docs: String): String =
+    s"""shingled AS (
+       |  SELECT doc_id, CASE WHEN len(toks) < 3
+       |    THEN [array_to_string(toks, ' ')]
+       |    ELSE list_distinct(list_transform(
+       |           generate_series(1, len(toks) - 2),
+       |           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
+       |    END AS sh
+       |  FROM (SELECT doc_id,
+       |          list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
+       |                      t -> len(t) > 0) AS toks
+       |        FROM $docs)
+       |)""".stripMargin
+
+  /** The brute-force near-duplicate pairs over [[shingleSetsSql]]: the
+    * CTE `pairs(id_a, id_b, jaccard)`, one row per doc pair
+    * `id_a < id_b` whose shingle Jaccard is at least `threshold`. */
+  private[graft] def jaccardPairsSql(threshold: Double): String =
+    s"""pairs AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |    CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+       |      / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
+       |  FROM shingled a, shingled b
+       |  WHERE a.doc_id < b.doc_id
+       |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+       |      / len(list_distinct(list_concat(a.sh, b.sh))) >= $threshold)"""
+      .stripMargin
 
   val ngramJaccardSql: String =
     s"""WITH ${DocCorpus.CorpusSql},
-       |${ShingleSetsSql}
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-       |FROM shingled a, shingled b
-       |WHERE a.doc_id < b.doc_id
-       |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6
+       |${shingleSetsSql("corpus WHERE doc_id % 10000 < 100")},
+       |${jaccardPairsSql(0.6)}
+       |SELECT id_a, id_b, jaccard FROM pairs
        |ORDER BY id_a, id_b""".stripMargin
 
   // ---------------------------------------------------------------- //
@@ -188,25 +200,9 @@ object Dedup {
 
   val jaccardPrefixSql: String =
     s"""WITH ${DocCorpus.CorpusSql},
-       |shingled AS (
-       |  SELECT doc_id, CASE WHEN len(toks) < 3
-       |    THEN [array_to_string(toks, ' ')]
-       |    ELSE list_distinct(list_transform(
-       |           generate_series(1, len(toks) - 2),
-       |           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
-       |    END AS sh
-       |  FROM (SELECT doc_id,
-       |          list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-       |                      t -> len(t) > 0) AS toks
-       |        FROM corpus WHERE doc_id % 10000 < 200)
-       |)
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-       |FROM shingled a, shingled b
-       |WHERE a.doc_id < b.doc_id
-       |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6
+       |${shingleSetsSql("corpus WHERE doc_id % 10000 < 200")},
+       |${jaccardPairsSql(0.6)}
+       |SELECT id_a, id_b, jaccard FROM pairs
        |ORDER BY id_a, id_b""".stripMargin
 
   // ---------------------------------------------------------------- //
@@ -668,13 +664,8 @@ object Dedup {
     * components gate and the keep-best survivor gate. */
   private val ComponentsCteSql: String =
     s"""WITH RECURSIVE ${DocCorpus.CorpusSql},
-       |${ShingleSetsSql},
-       |pairs AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM shingled a, shingled b
-       |  WHERE a.doc_id < b.doc_id
-       |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6),
+       |${shingleSetsSql("corpus WHERE doc_id % 10000 < 100")},
+       |${jaccardPairsSql(0.6)},
        |edges AS (
        |  SELECT id_a AS src, id_b AS dst FROM pairs
        |  UNION ALL SELECT id_b, id_a FROM pairs),
@@ -775,21 +766,12 @@ object Dedup {
        |WHERE rn = 1
        |ORDER BY component""".stripMargin
 
-  /** Full-corpus shingle sets for the LSH oracle. */
-  private val FullShingleSetsSql: String =
-    ShingleSetsSql.replace("FROM corpus WHERE doc_id % 10000 < 100",
-      "FROM corpus")
-
+  /** The LSH oracle: every exact pair over the full corpus. */
   val minhashLshSql: String =
     s"""WITH ${DocCorpus.CorpusSql},
-       |${FullShingleSetsSql}
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-       |FROM shingled a, shingled b
-       |WHERE a.doc_id < b.doc_id
-       |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6
+       |${shingleSetsSql("corpus")},
+       |${jaccardPairsSql(0.6)}
+       |SELECT id_a, id_b, jaccard FROM pairs
        |ORDER BY id_a, id_b""".stripMargin
 
   // ---------------------------------------------------------------- //
@@ -2512,15 +2494,10 @@ object Dedup {
     * price of the TTL: every cross-horizon duplicate is forgotten. */
   val streamMinhashLshTtlSql: String =
     s"""WITH ${DocCorpus.CorpusSql},
-       |${FullShingleSetsSql}
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-       |FROM shingled a, shingled b
-       |WHERE a.doc_id < b.doc_id
-       |  AND (a.doc_id // 10000) % 2 = (b.doc_id // 10000) % 2
-       |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6
+       |${shingleSetsSql("corpus")},
+       |${jaccardPairsSql(0.6)}
+       |SELECT id_a, id_b, jaccard FROM pairs
+       |WHERE (id_a // 10000) % 2 = (id_b // 10000) % 2
        |ORDER BY id_a, id_b""".stripMargin
 
   /** Survivorship report — the per-document "why was I dropped"
@@ -2576,14 +2553,11 @@ object Dedup {
        |  FROM normed n JOIN normed e
        |    ON e.norm = n.norm AND e.doc_id < n.doc_id
        |  GROUP BY n.doc_id),
-       |${FullShingleSetsSql},
+       |${shingleSetsSql("corpus")},
+       |${jaccardPairsSql(0.6)},
        |nr AS (
-       |  SELECT b.doc_id, MIN(a.doc_id) AS partner
-       |  FROM shingled a, shingled b
-       |  WHERE a.doc_id < b.doc_id
-       |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6
-       |  GROUP BY b.doc_id)
+       |  SELECT id_b AS doc_id, MIN(id_a) AS partner
+       |  FROM pairs GROUP BY id_b)
        |SELECT c.doc_id,
        |  CASE WHEN ex.doc_id IS NOT NULL THEN 'exact'
        |       WHEN nr.doc_id IS NOT NULL THEN 'near'

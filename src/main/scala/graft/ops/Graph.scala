@@ -34,6 +34,45 @@ object Graph {
 
   private val One = 1000000000000L // rank scale: 10^12
 
+  /** The event-transition edges every event graph here is built on:
+    * per user, in `(ts, event_id)` order, each event's type paired
+    * with the next event's type — one `(src, dst)` row per consecutive
+    * pair (a user's last event has no successor and yields no row).
+    * One windowed pass over events, partitioned by user. Callers add
+    * their own step: `dst =!= src`, `src < dst`, `distinct` or a
+    * count. */
+  private[graft] def transitionPairs(ev: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    ev.select(col("event_type").as("src"),
+        lead(col("event_type"), 1).over(w).as("dst"))
+      .filter(col("dst").isNotNull)
+  }
+
+  /** [[transitionPairs]] counted: one `(src, dst, w)` row per distinct
+    * transition, `w` = how often it occurs. */
+  private[graft] def weightedTransitions(ev: DataFrame): DataFrame =
+    transitionPairs(ev)
+      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+
+  /** DuckDB twin of [[transitionPairs]]'s window: the CTE
+    * `ord(src, dst)`. Unlike the frame it keeps each user's last event
+    * (with a NULL `dst`), so readers filter `dst IS NOT NULL`. A `val`
+    * above every oracle that splices it, so it is set before they are
+    * built. */
+  private val OrdSql: String =
+    """ord AS (
+      |  SELECT event_type AS src,
+      |    LEAD(event_type) OVER (PARTITION BY user_id
+      |      ORDER BY ts, event_id) AS dst
+      |  FROM events)""".stripMargin
+
+  /** DuckDB twin of [[weightedTransitions]]: the CTE
+    * `edges(src, dst, w)` over [[OrdSql]]. */
+  private val EdgesSql: String =
+    """edges AS (SELECT src, dst, COUNT(*) AS w FROM ord
+      |          WHERE dst IS NOT NULL GROUP BY src, dst)""".stripMargin
+
   /** One PageRank round: rank mass flows along the (weighted) edges,
     * is damped, and re-assembles over the node set. Two physical
     * shapes behind the `broadcastRanks` knob:
@@ -77,13 +116,7 @@ object Graph {
   def pageRank(s: SparkSession, dir: String, iters: Int = 5,
       broadcastRanks: Boolean = true): DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edgesRaw = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+    val edgesRaw = weightedTransitions(ev)
     // Shuffle-join mode pays ONE up-front hash partition of the edge
     // list on the join key; every later round reuses that layout.
     val edges = (if (broadcastRanks) edgesRaw
@@ -107,18 +140,13 @@ object Graph {
     * iteration count is written out). */
   def pageRankSql(iters: Int = 5): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT src, dst, COUNT(*) AS w FROM ord
-        |          WHERE dst IS NOT NULL GROUP BY src, dst),
-        |outw AS (SELECT src, SUM(w) AS ow FROM edges GROUP BY src),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |nn AS (SELECT COUNT(*) AS n FROM nodes),
-        |it0 AS (SELECT node, 1000000000000 // (SELECT n FROM nn) AS r
-        |        FROM nodes)""".stripMargin
+      s"""WITH $OrdSql,
+         |$EdgesSql,
+         |outw AS (SELECT src, SUM(w) AS ow FROM edges GROUP BY src),
+         |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+         |nn AS (SELECT COUNT(*) AS n FROM nodes),
+         |it0 AS (SELECT node, 1000000000000 // (SELECT n FROM nn) AS r
+         |        FROM nodes)""".stripMargin
     val steps = (1 to iters).map { i =>
       s"""it$i AS (
          |  SELECT nd.node,
@@ -143,14 +171,7 @@ object Graph {
     * product-analytics engine serves directly, and the input to any
     * sequence-model pre-training filter on behavioral data. */
   def transitions(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+    val edges = weightedTransitions(Tables.events(s, dir))
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
     edges.join(broadcast(outw), "src")
       .select(col("src"), col("dst"), col("w"),
@@ -159,18 +180,13 @@ object Graph {
   }
 
   val transitionsSql: String =
-    """WITH ord AS (
-      |  SELECT event_type AS src,
-      |    LEAD(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY ts, event_id) AS dst
-      |  FROM events),
-      |edges AS (SELECT src, dst, COUNT(*) AS w FROM ord
-      |          WHERE dst IS NOT NULL GROUP BY src, dst),
-      |outw AS (SELECT src, SUM(w) AS ow FROM edges GROUP BY src)
-      |SELECT e.src, e.dst, e.w,
-      |  CAST((e.w * 1000000) // o.ow AS BIGINT) AS p_ppm
-      |FROM edges e JOIN outw o ON o.src = e.src
-      |ORDER BY e.src, e.dst""".stripMargin
+    s"""WITH $OrdSql,
+       |$EdgesSql,
+       |outw AS (SELECT src, SUM(w) AS ow FROM edges GROUP BY src)
+       |SELECT e.src, e.dst, e.w,
+       |  CAST((e.w * 1000000) // o.ow AS BIGINT) AS p_ppm
+       |FROM edges e JOIN outw o ON o.src = e.src
+       |ORDER BY e.src, e.dst""".stripMargin
 
   /** Distributed triangle counting via degree orientation (the
     * MapReduce-curse-breaking formulation, Suri & Vassilvitskii
@@ -220,24 +236,8 @@ object Graph {
 
   val trianglesSql: String =
     s"""WITH ${DocCorpus.CorpusSql},
-       |shingled AS (
-       |  SELECT doc_id, CASE WHEN len(toks) < 3
-       |    THEN [array_to_string(toks, ' ')]
-       |    ELSE list_distinct(list_transform(
-       |           generate_series(1, len(toks) - 2),
-       |           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
-       |    END AS sh
-       |  FROM (SELECT doc_id,
-       |          list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-       |                      t -> len(t) > 0) AS toks
-       |        FROM corpus WHERE doc_id % 10000 < 100)
-       |),
-       |pairs AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM shingled a, shingled b
-       |  WHERE a.doc_id < b.doc_id
-       |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6),
+       |${Dedup.shingleSetsSql("corpus WHERE doc_id % 10000 < 100")},
+       |${Dedup.jaccardPairsSql(0.6)},
        |tri AS (
        |  SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
        |  FROM pairs e1
@@ -289,24 +289,8 @@ object Graph {
 
   lazy val clusteringCoeffSql: String =
     s"""WITH ${DocCorpus.CorpusSql},
-       |shingled AS (
-       |  SELECT doc_id, CASE WHEN len(toks) < 3
-       |    THEN [array_to_string(toks, ' ')]
-       |    ELSE list_distinct(list_transform(
-       |           generate_series(1, len(toks) - 2),
-       |           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
-       |    END AS sh
-       |  FROM (SELECT doc_id,
-       |          list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-       |                      t -> len(t) > 0) AS toks
-       |        FROM corpus WHERE doc_id % 10000 < 100)
-       |),
-       |pairs AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM shingled a, shingled b
-       |  WHERE a.doc_id < b.doc_id
-       |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6),
+       |${Dedup.shingleSetsSql("corpus WHERE doc_id % 10000 < 100")},
+       |${Dedup.jaccardPairsSql(0.6)},
        |deg AS (
        |  SELECT node, COUNT(*) AS deg FROM (
        |    SELECT id_a AS node FROM pairs
@@ -373,24 +357,8 @@ object Graph {
 
   val powerlawAlphaSql: String =
     s"""WITH ${DocCorpus.CorpusSql},
-       |shingled AS (
-       |  SELECT doc_id, CASE WHEN len(toks) < 3
-       |    THEN [array_to_string(toks, ' ')]
-       |    ELSE list_distinct(list_transform(
-       |           generate_series(1, len(toks) - 2),
-       |           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
-       |    END AS sh
-       |  FROM (SELECT doc_id,
-       |          list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-       |                      t -> len(t) > 0) AS toks
-       |        FROM corpus WHERE doc_id % 10000 < 100)
-       |),
-       |pairs AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM shingled a, shingled b
-       |  WHERE a.doc_id < b.doc_id
-       |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-       |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6),
+       |${Dedup.shingleSetsSql("corpus WHERE doc_id % 10000 < 100")},
+       |${Dedup.jaccardPairsSql(0.6)},
        |deg AS (
        |  SELECT node, COUNT(*) AS d FROM (
        |    SELECT id_a AS node FROM pairs
@@ -460,24 +428,9 @@ object Graph {
   def kTrussSql(k: Int = 3, iters: Int = 3): String = {
     val prefix =
       s"""WITH ${DocCorpus.CorpusSql},
-         |shingled AS (
-         |  SELECT doc_id, CASE WHEN len(toks) < 3
-         |    THEN [array_to_string(toks, ' ')]
-         |    ELSE list_distinct(list_transform(
-         |           generate_series(1, len(toks) - 2),
-         |           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
-         |    END AS sh
-         |  FROM (SELECT doc_id,
-         |          list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-         |                      t -> len(t) > 0) AS toks
-         |        FROM corpus WHERE doc_id % 10000 < 100)
-         |),
-         |e0 AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM shingled a, shingled b
-         |  WHERE a.doc_id < b.doc_id
-         |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6)""".stripMargin
+         |${Dedup.shingleSetsSql("corpus WHERE doc_id % 10000 < 100")},
+         |${Dedup.jaccardPairsSql(0.6)},
+         |e0 AS (SELECT id_a, id_b FROM pairs)""".stripMargin
     val rounds = (0 until iters).map { i =>
       s"""sym$i AS (SELECT id_a AS u, id_b AS v FROM e$i
          |          UNION ALL SELECT id_b, id_a FROM e$i),
@@ -641,6 +594,21 @@ object Graph {
       |WHERE doc_id < 6 OR doc_id BETWEEN 10 AND 15
       |ORDER BY doc_id""".stripMargin
 
+  /** Symmetric weighted event-transition edges — the shared graph
+    * substrate for [[labelPropagation]] and [[conductance]]: each
+    * user's consecutive-event transitions become undirected weighted
+    * edges between event types. */
+  private[graft] def transitionEdgesSym(s: SparkSession,
+      dir: String): DataFrame = {
+    val directed = transitionPairs(Tables.events(s, dir))
+      .filter(col("dst") =!= col("src"))
+      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+    directed
+      .unionByName(directed.select(col("dst").as("src"),
+        col("src").as("dst"), col("w")))
+      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+  }
+
   /** Synchronous label propagation (community detection): every node
     * starts with a unique label (its rank in node order); each round,
     * a node adopts the WEIGHTED MAJORITY label among its neighbors
@@ -655,25 +623,6 @@ object Graph {
     * key count is bounded by the edge count, then a per-node top-1
     * (`max_by` over the vote struct — map-side combinable, no
     * window). Nodes without in-edges keep their label. */
-  /** Symmetric weighted event-transition edges — the shared graph
-    * substrate for [[labelPropagation]] and [[conductance]]: each
-    * user's consecutive-event transitions become undirected weighted
-    * edges between event types. */
-  private[graft] def transitionEdgesSym(s: SparkSession,
-      dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val directed = Tables.events(s, dir)
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("dst") =!= col("src"))
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-    directed
-      .unionByName(directed.select(col("dst").as("src"),
-        col("src").as("dst"), col("w")))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-  }
-
   def labelPropagation(s: SparkSession, dir: String,
       iters: Int = 4): DataFrame = {
     val ev = Tables.events(s, dir)
@@ -710,24 +659,20 @@ object Graph {
     * so composite oracles ([[conductanceSql]]) can extend the chain. */
   private def labelPropBody(iters: Int): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |dedges AS (SELECT src, dst, COUNT(*) AS w FROM ord
-        |           WHERE dst IS NOT NULL AND dst <> src
-        |           GROUP BY src, dst),
-        |edges AS (
-        |  SELECT src, dst, SUM(w) AS w FROM (
-        |    SELECT src, dst, w FROM dedges
-        |    UNION ALL SELECT dst, src, w FROM dedges)
-        |  GROUP BY src, dst),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |it0 AS (SELECT node,
-        |          CAST(row_number() OVER (ORDER BY node) AS BIGINT)
-        |            AS lab
-        |        FROM nodes)""".stripMargin
+      s"""WITH $OrdSql,
+         |dedges AS (SELECT src, dst, COUNT(*) AS w FROM ord
+         |           WHERE dst IS NOT NULL AND dst <> src
+         |           GROUP BY src, dst),
+         |edges AS (
+         |  SELECT src, dst, SUM(w) AS w FROM (
+         |    SELECT src, dst, w FROM dedges
+         |    UNION ALL SELECT dst, src, w FROM dedges)
+         |  GROUP BY src, dst),
+         |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+         |it0 AS (SELECT node,
+         |          CAST(row_number() OVER (ORDER BY node) AS BIGINT)
+         |            AS lab
+         |        FROM nodes)""".stripMargin
     val steps = (1 to iters).map { i =>
       s"""it$i AS (
          |  SELECT n.node, COALESCE(v.new_lab, p0.lab) AS lab
@@ -930,13 +875,7 @@ object Graph {
 
   def sssp(s: SparkSession, dir: String, iters: Int = 8): DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+    val edges = weightedTransitions(ev)
       .select(col("src"), col("dst"), expr("1000000 div w").as("cost"))
       .localCheckpoint()
     val nodes = ev.select(col("event_type").as("node"))
@@ -974,17 +913,13 @@ object Graph {
     * the per-round min-aggregation inside a recursive term). */
   def ssspSql(iters: Int = 8): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT src, dst, 1000000 // COUNT(*) AS cost
-        |          FROM ord WHERE dst IS NOT NULL GROUP BY src, dst),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |src0 AS (SELECT MIN(node) AS sn FROM nodes),
-        |it0 AS (SELECT node, CASE WHEN node = (SELECT sn FROM src0)
-        |  THEN 0 ELSE 1000000000000000 END AS d FROM nodes)""".stripMargin
+      s"""WITH $OrdSql,
+         |edges AS (SELECT src, dst, 1000000 // COUNT(*) AS cost
+         |          FROM ord WHERE dst IS NOT NULL GROUP BY src, dst),
+         |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+         |src0 AS (SELECT MIN(node) AS sn FROM nodes),
+         |it0 AS (SELECT node, CASE WHEN node = (SELECT sn FROM src0)
+         |  THEN 0 ELSE 1000000000000000 END AS d FROM nodes)""".stripMargin
     val steps = (1 to iters).map { i =>
       s"""it$i AS (
          |  SELECT n.node,
@@ -1017,14 +952,7 @@ object Graph {
     * term. */
   def hits(s: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      .localCheckpoint()
+    val edges = weightedTransitions(ev).localCheckpoint()
     val nodes = ev.select(col("event_type").as("node"))
       .distinct().localCheckpoint()
     var h = nodes.withColumn("h", lit(1000000L))
@@ -1056,15 +984,10 @@ object Graph {
   /** The identical integer recurrence unrolled. */
   def hitsSql(iters: Int = 5): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT src, dst, COUNT(*) AS w FROM ord
-        |          WHERE dst IS NOT NULL GROUP BY src, dst),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes)"""
+      s"""WITH $OrdSql,
+         |$EdgesSql,
+         |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+         |h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes)"""
         .stripMargin
     val its = (1 to iters).map { i =>
       s"""araw$i AS MATERIALIZED (
@@ -1101,14 +1024,7 @@ object Graph {
     * (src, dst), never a cross join; degrees are one map-combinable
     * aggregate each. Integer ppm for the ratio. */
   def degreeStats(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+    val edges = weightedTransitions(Tables.events(s, dir))
       .localCheckpoint()
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"),
       lit(1).as("has_rev"))
@@ -1131,32 +1047,27 @@ object Graph {
   }
 
   val degreeStatsSql: String =
-    """WITH ord AS (
-      |  SELECT event_type AS src,
-      |    LEAD(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY ts, event_id) AS dst
-      |  FROM events),
-      |edges AS (SELECT src, dst, COUNT(*) AS w FROM ord
-      |          WHERE dst IS NOT NULL GROUP BY src, dst),
-      |outd AS (
-      |  SELECT e.src, COUNT(*) AS out_deg,
-      |    CAST(SUM(e.w) AS BIGINT) AS out_w,
-      |    CAST(SUM(CASE WHEN r.src IS NOT NULL THEN e.w ELSE 0 END)
-      |      AS BIGINT) AS recip_w
-      |  FROM edges e LEFT JOIN edges r
-      |    ON r.src = e.dst AND r.dst = e.src
-      |  GROUP BY e.src),
-      |ind AS (SELECT dst, COUNT(*) AS in_deg,
-      |          CAST(SUM(w) AS BIGINT) AS in_w
-      |        FROM edges GROUP BY dst)
-      |SELECT COALESCE(o.src, i.dst) AS node,
-      |  COALESCE(o.out_deg, 0) AS out_deg,
-      |  COALESCE(o.out_w, 0) AS out_w,
-      |  COALESCE(i.in_deg, 0) AS in_deg,
-      |  COALESCE(i.in_w, 0) AS in_w,
-      |  COALESCE((o.recip_w * 1000000) // o.out_w, 0) AS recip_ppm
-      |FROM outd o FULL OUTER JOIN ind i ON i.dst = o.src
-      |ORDER BY node""".stripMargin
+    s"""WITH $OrdSql,
+       |$EdgesSql,
+       |outd AS (
+       |  SELECT e.src, COUNT(*) AS out_deg,
+       |    CAST(SUM(e.w) AS BIGINT) AS out_w,
+       |    CAST(SUM(CASE WHEN r.src IS NOT NULL THEN e.w ELSE 0 END)
+       |      AS BIGINT) AS recip_w
+       |  FROM edges e LEFT JOIN edges r
+       |    ON r.src = e.dst AND r.dst = e.src
+       |  GROUP BY e.src),
+       |ind AS (SELECT dst, COUNT(*) AS in_deg,
+       |          CAST(SUM(w) AS BIGINT) AS in_w
+       |        FROM edges GROUP BY dst)
+       |SELECT COALESCE(o.src, i.dst) AS node,
+       |  COALESCE(o.out_deg, 0) AS out_deg,
+       |  COALESCE(o.out_w, 0) AS out_w,
+       |  COALESCE(i.in_deg, 0) AS in_deg,
+       |  COALESCE(i.in_w, 0) AS in_w,
+       |  COALESCE((o.recip_w * 1000000) // o.out_w, 0) AS recip_ppm
+       |FROM outd o FULL OUTER JOIN ind i ON i.dst = o.src
+       |ORDER BY node""".stripMargin
 
   /** Directed modularity of the [[labelPropagation]] communities —
     * the quality score that turns "LPA emitted labels" into "LPA
@@ -1173,13 +1084,8 @@ object Graph {
     * (shared with every other graph op) touches the corpus. */
   def modularity(s: SparkSession, dir: String,
       iters: Int = 4): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val dedges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("dst") =!= col("src"))
+    val dedges = transitionPairs(Tables.events(s, dir))
+      .filter(col("dst") =!= col("src"))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
       .localCheckpoint()
     val labels = labelPropagation(s, dir, iters).localCheckpoint()
@@ -1215,12 +1121,8 @@ object Graph {
 
   def modularitySql(iters: Int = 4): String =
     s"""WITH lp AS (SELECT * FROM (${labelPropagationSql(iters)})),
-       |ord2 AS (
-       |  SELECT event_type AS src,
-       |    LEAD(event_type) OVER (PARTITION BY user_id
-       |      ORDER BY ts, event_id) AS dst
-       |  FROM events),
-       |dd AS (SELECT src, dst, COUNT(*) AS w FROM ord2
+       |$OrdSql,
+       |dd AS (SELECT src, dst, COUNT(*) AS w FROM ord
        |       WHERE dst IS NOT NULL AND dst <> src
        |       GROUP BY src, dst),
        |mm AS (SELECT CAST(SUM(w) AS BIGINT) AS m FROM dd),
@@ -1274,14 +1176,8 @@ object Graph {
   private def typeGraphDistances(s: SparkSession, dir: String,
       iters: Int): DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("dst") =!= col("src"))
-      .select(col("src"), col("dst")).distinct()
-      .localCheckpoint()
+    val edges = transitionPairs(ev).filter(col("dst") =!= col("src"))
+      .distinct().localCheckpoint()
     val nodes = ev.select(col("event_type").as("node"))
       .distinct().localCheckpoint()
     var dist = nodes.select(col("node").as("s"), col("node"),
@@ -1335,41 +1231,15 @@ object Graph {
       .orderBy(col("node"))
   }
 
-  /** Unrolled BFS CTE chain over the event-type graph — shared by
-    * the closeness and harmonic oracles. */
-  private def typeGraphBfsCte(iters: Int): String = {
-    val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT DISTINCT src, dst FROM ord
-        |          WHERE dst IS NOT NULL AND dst <> src),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |it0 AS (SELECT node AS s, node, CAST(0 AS BIGINT) AS d
-        |        FROM nodes)""".stripMargin
-    val steps = (1 to iters).map { i =>
-      s"""it$i AS (
-         |  SELECT s, node, MIN(d) AS d FROM (
-         |    SELECT s, node, d FROM it${i - 1}
-         |    UNION ALL
-         |    SELECT q.s, e.dst AS node, q.d + 1 AS d
-         |    FROM it${i - 1} q JOIN edges e ON e.src = q.node)
-         |  GROUP BY s, node)""".stripMargin
-    }
-    (base +: steps).mkString(",\n")
-  }
-
   def harmonicSql(iters: Int = 6): String =
-    typeGraphBfsCte(iters) +
+    transitionBfsSql(iters) +
       s"""
          |SELECT s AS node, CAST(COUNT(*) AS BIGINT) AS n_reach,
          |  CAST(SUM(1000000 // d) AS BIGINT) AS harmonic_e6
          |FROM it$iters WHERE d > 0 GROUP BY s ORDER BY node""".stripMargin
 
   def closenessSql(iters: Int = 6): String = {
-    typeGraphBfsCte(iters) +
+    transitionBfsSql(iters) +
       s"""
          |SELECT s AS node,
          |  COUNT(*) - 1 AS n_reach,
@@ -1401,14 +1271,8 @@ object Graph {
   def betweenness(s: SparkSession, dir: String,
       iters: Int = 6): DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("dst") =!= col("src"))
-      .select(col("src"), col("dst")).distinct()
-      .localCheckpoint()
+    val edges = transitionPairs(ev).filter(col("dst") =!= col("src"))
+      .distinct().localCheckpoint()
     val nodes = ev.select(col("event_type").as("node"))
       .distinct().localCheckpoint()
     var dist = nodes.select(col("node").as("s"), col("node"),
@@ -1473,16 +1337,12 @@ object Graph {
 
   def betweennessSql(iters: Int = 6): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT DISTINCT src, dst FROM ord
-        |          WHERE dst IS NOT NULL AND dst <> src),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |dt0 AS (SELECT node AS s, node, CAST(0 AS BIGINT) AS d
-        |        FROM nodes)""".stripMargin
+      s"""WITH $OrdSql,
+         |edges AS (SELECT DISTINCT src, dst FROM ord
+         |          WHERE dst IS NOT NULL AND dst <> src),
+         |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+         |dt0 AS (SELECT node AS s, node, CAST(0 AS BIGINT) AS d
+         |        FROM nodes)""".stripMargin
     val dSteps = (1 to iters).map { i =>
       s"""dt$i AS (
          |  SELECT s, node, MIN(d) AS d FROM (
@@ -1551,14 +1411,7 @@ object Graph {
     * the node set outgrows a broadcast. */
   def ppr(s: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      .localCheckpoint()
+    val edges = weightedTransitions(ev).localCheckpoint()
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
       .localCheckpoint()
     val nodes = ev.select(col("event_type").as("node"))
@@ -1585,20 +1438,15 @@ object Graph {
 
   def pprSql(iters: Int = 5): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT src, dst, COUNT(*) AS w FROM ord
-        |          WHERE dst IS NOT NULL GROUP BY src, dst),
-        |outw AS (SELECT src, SUM(w) AS ow FROM edges GROUP BY src),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |sd AS (SELECT MIN(node) AS seed FROM nodes),
-        |it0 AS (SELECT node,
-        |  CASE WHEN node = (SELECT seed FROM sd)
-        |    THEN 1000000000000 ELSE 0 END AS r
-        |  FROM nodes)""".stripMargin
+      s"""WITH $OrdSql,
+         |$EdgesSql,
+         |outw AS (SELECT src, SUM(w) AS ow FROM edges GROUP BY src),
+         |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+         |sd AS (SELECT MIN(node) AS seed FROM nodes),
+         |it0 AS (SELECT node,
+         |  CASE WHEN node = (SELECT seed FROM sd)
+         |    THEN 1000000000000 ELSE 0 END AS r
+         |  FROM nodes)""".stripMargin
     val steps = (1 to iters).map { i =>
       s"""it$i AS (
          |  SELECT nd.node,
@@ -1633,13 +1481,8 @@ object Graph {
   def walks(s: SparkSession, dir: String, nWalks: Int = 2,
       steps: Int = 4): DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val ranked = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("dst") =!= col("src"))
-      .select(col("src"), col("dst")).distinct()
+    val ranked = transitionPairs(ev).filter(col("dst") =!= col("src"))
+      .distinct()
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
       .withColumn("deg", count(lit(1)).over(
@@ -1671,25 +1514,21 @@ object Graph {
 
   def walksSql(nWalks: Int = 2, steps: Int = 4): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT DISTINCT src, dst FROM ord
-        |          WHERE dst IS NOT NULL AND dst <> src),
-        |ranked AS (
-        |  SELECT src, dst,
-        |    row_number() OVER (PARTITION BY src ORDER BY dst) - 1
-        |      AS rk,
-        |    COUNT(*) OVER (PARTITION BY src) AS deg
-        |  FROM edges),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |w0 AS (
-        |  SELECT node AS start, CAST(wi AS BIGINT) AS walk_id,
-        |    node AS pos, node AS path
-        |  FROM nodes, (SELECT unnest(range(0, %d)) AS wi) ws)"""
-        .stripMargin.format(nWalks)
+      s"""WITH $OrdSql,
+         |edges AS (SELECT DISTINCT src, dst FROM ord
+         |          WHERE dst IS NOT NULL AND dst <> src),
+         |ranked AS (
+         |  SELECT src, dst,
+         |    row_number() OVER (PARTITION BY src ORDER BY dst) - 1
+         |      AS rk,
+         |    COUNT(*) OVER (PARTITION BY src) AS deg
+         |  FROM edges),
+         |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+         |w0 AS (
+         |  SELECT node AS start, CAST(wi AS BIGINT) AS walk_id,
+         |    node AS pos, node AS path
+         |  FROM nodes, (SELECT unnest(range(0, $nWalks)) AS wi) ws)"""
+        .stripMargin
     val stepCtes = (1 to steps).map { t =>
       s"""w$t AS (
          |  SELECT w.start, w.walk_id,
@@ -1717,14 +1556,8 @@ object Graph {
   private def transitionBfs(s: SparkSession, dir: String,
       iters: Int): DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("dst") =!= col("src"))
-      .select(col("src"), col("dst")).distinct()
-      .localCheckpoint()
+    val edges = transitionPairs(ev).filter(col("dst") =!= col("src"))
+      .distinct().localCheckpoint()
     var dist = ev.select(col("event_type").as("node")).distinct()
       .select(col("node").as("s"), col("node"), lit(0L).as("d"))
     for (_ <- 1 to iters) {
@@ -1754,16 +1587,12 @@ object Graph {
     * `it$iters` is the fixpoint (s, node, d) table. */
   private def transitionBfsSql(iters: Int): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT DISTINCT src, dst FROM ord
-        |          WHERE dst IS NOT NULL AND dst <> src),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |it0 AS (SELECT node AS s, node, CAST(0 AS BIGINT) AS d
-        |        FROM nodes)""".stripMargin
+      s"""WITH $OrdSql,
+         |edges AS (SELECT DISTINCT src, dst FROM ord
+         |          WHERE dst IS NOT NULL AND dst <> src),
+         |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+         |it0 AS (SELECT node AS s, node, CAST(0 AS BIGINT) AS d
+         |        FROM nodes)""".stripMargin
     val steps = (1 to iters).map { i =>
       s"""it$i AS (
          |  SELECT s, node, MIN(d) AS d FROM (
@@ -1872,15 +1701,9 @@ object Graph {
     * (x, y) frame joins the node-sized degree tables (broadcast);
     * the final reduce is map-combinable. Nothing is quadratic. */
   def assortativity(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("dst") =!= col("src"))
-      .select(col("src"), col("dst")).distinct()
-      .localCheckpoint()
+    val edges = transitionPairs(Tables.events(s, dir))
+      .filter(col("dst") =!= col("src"))
+      .distinct().localCheckpoint()
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("x"))
     val inDeg = edges.groupBy(col("dst")).agg(count(lit(1)).as("y"))
     edges.join(broadcast(outDeg), "src").join(broadcast(inDeg), "dst")
@@ -1906,33 +1729,29 @@ object Graph {
   }
 
   val assortativitySql: String =
-    """WITH ord AS (
-      |  SELECT event_type AS src,
-      |    LEAD(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY ts, event_id) AS dst
-      |  FROM events),
-      |edges AS (SELECT DISTINCT src, dst FROM ord
-      |          WHERE dst IS NOT NULL AND dst <> src),
-      |od AS (SELECT src, COUNT(*) AS x FROM edges GROUP BY src),
-      |id AS (SELECT dst, COUNT(*) AS y FROM edges GROUP BY dst),
-      |s AS (
-      |  SELECT COUNT(*) AS n,
-      |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-      |    CAST(SUM(x * y) AS BIGINT) AS sxy,
-      |    CAST(SUM(x * x) AS BIGINT) AS sxx,
-      |    CAST(SUM(y * y) AS BIGINT) AS syy
-      |  FROM edges e
-      |  JOIN od ON od.src = e.src
-      |  JOIN id ON id.dst = e.dst)
-      |SELECT n AS n_edges,
-      |  CAST(n * sxy - sx * sy AS BIGINT) AS num,
-      |  CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0
-      |    THEN 0.0
-      |    ELSE CAST(n * sxy - sx * sy AS DOUBLE)
-      |      / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-      |             * CAST(n * syy - sy * sy AS DOUBLE))
-      |  END AS r
-      |FROM s""".stripMargin
+    s"""WITH $OrdSql,
+       |edges AS (SELECT DISTINCT src, dst FROM ord
+       |          WHERE dst IS NOT NULL AND dst <> src),
+       |od AS (SELECT src, COUNT(*) AS x FROM edges GROUP BY src),
+       |id AS (SELECT dst, COUNT(*) AS y FROM edges GROUP BY dst),
+       |s AS (
+       |  SELECT COUNT(*) AS n,
+       |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+       |    CAST(SUM(x * y) AS BIGINT) AS sxy,
+       |    CAST(SUM(x * x) AS BIGINT) AS sxx,
+       |    CAST(SUM(y * y) AS BIGINT) AS syy
+       |  FROM edges e
+       |  JOIN od ON od.src = e.src
+       |  JOIN id ON id.dst = e.dst)
+       |SELECT n AS n_edges,
+       |  CAST(n * sxy - sx * sy AS BIGINT) AS num,
+       |  CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0
+       |    THEN 0.0
+       |    ELSE CAST(n * sxy - sx * sy AS DOUBLE)
+       |      / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
+       |             * CAST(n * syy - sy * sy AS DOUBLE))
+       |  END AS r
+       |FROM s""".stripMargin
 
   // ---------------------------------------------------------------- //
 
@@ -1954,12 +1773,7 @@ object Graph {
     * groupBy-max over the O(types²) edge frame. */
   def topoLayers(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("src") < col("dst"))
+    val edges = transitionPairs(ev).filter(col("src") < col("dst"))
       .distinct().cache()
     val nodes = ev.select(col("event_type").as("node")).distinct()
     def relax(l: DataFrame): DataFrame = edges
@@ -1989,22 +1803,18 @@ object Graph {
   }
 
   val topoLayersSql: String =
-    """WITH RECURSIVE ord AS (
-      |  SELECT event_type AS src,
-      |    LEAD(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY ts, event_id) AS dst
-      |  FROM events),
-      |edges AS (SELECT DISTINCT src, dst FROM ord
-      |          WHERE dst IS NOT NULL AND src < dst),
-      |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-      |reach(node, d) AS (
-      |  SELECT node, 0 FROM nodes
-      |  UNION
-      |  SELECT e.dst, r.d + 1 FROM reach r JOIN edges e
-      |    ON e.src = r.node)
-      |SELECT node, CAST(MAX(d) AS BIGINT) AS layer
-      |FROM reach GROUP BY node
-      |ORDER BY node""".stripMargin
+    s"""WITH RECURSIVE $OrdSql,
+       |edges AS (SELECT DISTINCT src, dst FROM ord
+       |          WHERE dst IS NOT NULL AND src < dst),
+       |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+       |reach(node, d) AS (
+       |  SELECT node, 0 FROM nodes
+       |  UNION
+       |  SELECT e.dst, r.d + 1 FROM reach r JOIN edges e
+       |    ON e.src = r.node)
+       |SELECT node, CAST(MAX(d) AS BIGINT) AS layer
+       |FROM reach GROUP BY node
+       |ORDER BY node""".stripMargin
 
   /** Directed 3-node MOTIF CENSUS over the event-transition digraph:
     * reciprocal dyads, transitive (feed-forward) triads — edges
@@ -2020,14 +1830,9 @@ object Graph {
     * bounded by the type vocabulary, not the corpus; the corpus is
     * touched once to build edges. */
   def motifCensus(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("dst") =!= col("src"))
-      .select(col("src"), col("dst")).distinct()
+    val edges = transitionPairs(Tables.events(s, dir))
+      .filter(col("dst") =!= col("src"))
+      .distinct()
       .localCheckpoint() // O(types²) metadata; cut for the self-joins
     val recip = edges.as("e1")
       .join(edges.as("e2"),
@@ -2051,15 +1856,11 @@ object Graph {
   }
 
   val motifCensusSql: String =
-    """WITH ord AS (
-      |  SELECT event_type AS src,
-      |    LEAD(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY ts, event_id) AS dst
-      |  FROM events),
-      |edges AS (
-      |  SELECT DISTINCT src, dst FROM ord
-      |  WHERE dst IS NOT NULL AND dst <> src)
-      |SELECT
+    s"""WITH $OrdSql,
+       |edges AS (
+       |  SELECT DISTINCT src, dst FROM ord
+       |  WHERE dst IS NOT NULL AND dst <> src)
+       |SELECT
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM edges) AS n_edges,
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM edges e1
       |   JOIN edges e2 ON e1.src = e2.dst AND e1.dst = e2.src
@@ -2181,12 +1982,7 @@ object Graph {
   def viterbiPath(s: SparkSession, dir: String, k: Int = 3)
       : DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val probs = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
+    val probs = transitionPairs(ev)
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("wn"))
       .withColumn("ow", sum(col("wn")).over(
         Window.partitionBy(col("src"))))
@@ -2222,19 +2018,15 @@ object Graph {
 
   def viterbiPathSql(k: Int = 3): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |probs AS (
-        |  SELECT src, dst, (wn * 1000000) // ow AS p_ppm FROM (
-        |    SELECT src, dst, COUNT(*) AS wn,
-        |      SUM(COUNT(*)) OVER (PARTITION BY src) AS ow
-        |    FROM ord WHERE dst IS NOT NULL GROUP BY src, dst)),
-        |s0 AS (
-        |  SELECT (SELECT MIN(event_type) FROM events) AS node,
-        |    CAST(1000000 AS BIGINT) AS score_ppm)""".stripMargin
+      s"""WITH $OrdSql,
+         |$EdgesSql,
+         |probs AS (
+         |  SELECT src, dst,
+         |    (w * 1000000) // SUM(w) OVER (PARTITION BY src) AS p_ppm
+         |  FROM edges),
+         |s0 AS (
+         |  SELECT (SELECT MIN(event_type) FROM events) AS node,
+         |    CAST(1000000 AS BIGINT) AS score_ppm)""".stripMargin
     val steps = (1 to k).map { i =>
       val prev = if (i == 1) "s0" else s"s${i - 1}"
       s"""c$i AS (
@@ -2270,15 +2062,10 @@ object Graph {
     * against the O(types²) edge frame — all metadata-sized, joined
     * by broadcast. */
   def richClub(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val und = ev
-      .select(col("event_type").as("a"),
-        lead(col("event_type"), 1).over(w).as("b"))
-      .filter(col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"),
-        greatest(col("a"), col("b")).as("v"))
+    val und = transitionPairs(Tables.events(s, dir))
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
       .distinct()
     val deg = und.select(col("u").as("node"))
       .unionAll(und.select(col("v").as("node")))
@@ -2306,40 +2093,36 @@ object Graph {
   }
 
   val richClubSql: String =
-    """WITH ord AS (
-      |  SELECT event_type AS a,
-      |    LEAD(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY ts, event_id) AS b
-      |  FROM events),
-      |und AS (
-      |  SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v
-      |  FROM ord WHERE b IS NOT NULL AND a <> b),
-      |deg AS (
-      |  SELECT node, COUNT(*) AS deg FROM (
-      |    SELECT u AS node FROM und
-      |    UNION ALL SELECT v FROM und)
-      |  GROUP BY node),
-      |ks AS (
-      |  SELECT unnest(range(0, (SELECT MAX(deg) FROM deg))) AS k),
-      |nk AS (
-      |  SELECT k, CAST(COUNT(d.node) AS BIGINT) AS n_rich
-      |  FROM ks LEFT JOIN deg d ON d.deg > ks.k
-      |  GROUP BY k),
-      |edged AS (
-      |  SELECT und.u, und.v, du.deg AS du, dv.deg AS dv
-      |  FROM und
-      |  JOIN deg du ON du.node = und.u
-      |  JOIN deg dv ON dv.node = und.v),
-      |ek AS (
-      |  SELECT k, CAST(COUNT(e.u) AS BIGINT) AS e_rich
-      |  FROM ks LEFT JOIN edged e ON e.du > ks.k AND e.dv > ks.k
-      |  GROUP BY k)
-      |SELECT CAST(ks.k AS BIGINT) AS k, nk.n_rich, ek.e_rich,
-      |  CASE WHEN nk.n_rich >= 2 THEN
-      |    (2 * ek.e_rich * 1000000) // (nk.n_rich * (nk.n_rich - 1))
-      |  END AS phi_ppm
-      |FROM ks JOIN nk ON nk.k = ks.k JOIN ek ON ek.k = ks.k
-      |ORDER BY k""".stripMargin
+    s"""WITH $OrdSql,
+       |und AS (
+       |  SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
+       |  FROM ord WHERE dst IS NOT NULL AND src <> dst),
+       |deg AS (
+       |  SELECT node, COUNT(*) AS deg FROM (
+       |    SELECT u AS node FROM und
+       |    UNION ALL SELECT v FROM und)
+       |  GROUP BY node),
+       |ks AS (
+       |  SELECT unnest(range(0, (SELECT MAX(deg) FROM deg))) AS k),
+       |nk AS (
+       |  SELECT k, CAST(COUNT(d.node) AS BIGINT) AS n_rich
+       |  FROM ks LEFT JOIN deg d ON d.deg > ks.k
+       |  GROUP BY k),
+       |edged AS (
+       |  SELECT und.u, und.v, du.deg AS du, dv.deg AS dv
+       |  FROM und
+       |  JOIN deg du ON du.node = und.u
+       |  JOIN deg dv ON dv.node = und.v),
+       |ek AS (
+       |  SELECT k, CAST(COUNT(e.u) AS BIGINT) AS e_rich
+       |  FROM ks LEFT JOIN edged e ON e.du > ks.k AND e.dv > ks.k
+       |  GROUP BY k)
+       |SELECT CAST(ks.k AS BIGINT) AS k, nk.n_rich, ek.e_rich,
+       |  CASE WHEN nk.n_rich >= 2 THEN
+       |    (2 * ek.e_rich * 1000000) // (nk.n_rich * (nk.n_rich - 1))
+       |  END AS phi_ppm
+       |FROM ks JOIN nk ON nk.k = ks.k JOIN ek ON ek.k = ks.k
+       |ORDER BY k""".stripMargin
 
   /** Bipartite projection of the user–event-type graph onto types
     * (Newman 2001's collaboration-weight idea, cosine-normalized):
@@ -2407,13 +2190,7 @@ object Graph {
     * Scale: the corpus collapses to O(types²) weighted edges in one
     * windowed pass; everything here is arithmetic on that grid. */
   def transitionEntropy(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
+    val edges = transitionPairs(Tables.events(s, dir))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("wn"))
       .withColumn("ow", sum(col("wn")).over(
         Window.partitionBy(col("src"))))
@@ -2435,24 +2212,18 @@ object Graph {
   }
 
   val transitionEntropySql: String =
-    """WITH ord AS (
-      |  SELECT event_type AS src,
-      |    LEAD(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY ts, event_id) AS dst
-      |  FROM events),
-      |edges AS (
-      |  SELECT src, dst, COUNT(*) AS wn FROM ord
-      |  WHERE dst IS NOT NULL GROUP BY src, dst),
-      |ow AS (
-      |  SELECT src, dst, wn,
-      |    CAST(SUM(wn) OVER (PARTITION BY src) AS BIGINT) AS ow
-      |  FROM edges),
-      |terms AS (
-      |  SELECT src, ow,
-      |    CAST(floor(-(CAST(wn AS DOUBLE)/CAST(ow AS DOUBLE))
-      |      * ln(CAST(wn AS DOUBLE)/CAST(ow AS DOUBLE))
-      |      * 1e9 + 0.5) AS BIGINT) AS term9
-      |  FROM ow)
+    s"""WITH $OrdSql,
+       |$EdgesSql,
+       |ow AS (
+       |  SELECT src, dst, w,
+       |    CAST(SUM(w) OVER (PARTITION BY src) AS BIGINT) AS ow
+       |  FROM edges),
+       |terms AS (
+       |  SELECT src, ow,
+       |    CAST(floor(-(CAST(w AS DOUBLE)/CAST(ow AS DOUBLE))
+       |      * ln(CAST(w AS DOUBLE)/CAST(ow AS DOUBLE))
+       |      * 1e9 + 0.5) AS BIGINT) AS term9
+       |  FROM ow)
       |SELECT src, COUNT(*) AS n_out,
       |  CAST(MAX(ow) AS BIGINT) AS out_w,
       |  CAST(SUM(term9) AS BIGINT) AS entropy_e9,
@@ -2477,14 +2248,8 @@ object Graph {
   def dagPaths(s: SparkSession, dir: String, iters: Int = 5)
       : DataFrame = {
     val ev = Tables.events(s, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val edges = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull && col("src") < col("dst"))
-      .select(col("src"), col("dst")).distinct()
-      .localCheckpoint()
+    val edges = transitionPairs(ev).filter(col("src") < col("dst"))
+      .distinct().localCheckpoint()
     val nodes = ev.select(col("event_type").as("node")).distinct()
       .localCheckpoint()
     val sources = nodes.join(edges.select(col("dst").as("node"))
@@ -2511,20 +2276,16 @@ object Graph {
 
   def dagPathsSql(iters: Int = 5): String = {
     val base =
-      """WITH ord AS (
-        |  SELECT event_type AS src,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (
-        |  SELECT DISTINCT src, dst FROM ord
-        |  WHERE dst IS NOT NULL AND src < dst),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        |p0 AS (
-        |  SELECT node,
-        |    CASE WHEN node NOT IN (SELECT dst FROM edges)
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS p
-        |  FROM nodes)""".stripMargin
+      s"""WITH $OrdSql,
+         |edges AS (
+         |  SELECT DISTINCT src, dst FROM ord
+         |  WHERE dst IS NOT NULL AND src < dst),
+         |nodes AS (SELECT DISTINCT event_type AS node FROM events),
+         |p0 AS (
+         |  SELECT node,
+         |    CASE WHEN node NOT IN (SELECT dst FROM edges)
+         |      THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS p
+         |  FROM nodes)""".stripMargin
     val steps = (1 to iters).map { i =>
       s"""p$i AS (
          |  SELECT n.node,

@@ -1577,8 +1577,8 @@ object ParityQueries {
       |FROM orders""".stripMargin
 
   /** DYNAMIC partition overwrite — the INSERT OVERWRITE semantics
-    * every partitioned lakehouse table depends on: with
-    * `partitionOverwriteMode=dynamic`, an overwrite REPLACES only
+    * every partitioned lakehouse table depends on: with the write
+    * option `partitionOverwriteMode=dynamic`, an overwrite REPLACES only
     * the partitions present in the incoming batch and leaves every
     * other partition byte-untouched (static mode would truncate the
     * whole table first — the classic data-loss foot-gun this gate
@@ -1600,11 +1600,11 @@ object ParityQueries {
     val control = "1995-06"
     val restated = o.filter(col("mon") === target)
       .withColumn("o_totalprice", col("o_totalprice") * 2.0)
-    val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try restated.write.mode("overwrite").partitionBy("mon")
-      .parquet(base)
-    finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    // A per-write option, which Spark's file-source insert reads
+    // before the session setting: the session conf never changes.
+    restated.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("mon").parquet(base)
     val after = s.read.parquet(base)
     def cents(mon: String) = after.filter(col("mon") === mon)
       .agg(coalesce(sum(expr(

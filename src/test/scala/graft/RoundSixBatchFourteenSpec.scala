@@ -38,10 +38,14 @@ class RoundSixBatchFourteenSpec extends SparkSpec {
       Row(2L, 1L, "F", 100.0, new Timestamp(mar + 86400000L), "1"),
       Row(3L, 1L, "F", 50.0, new Timestamp(jun), "1"),
       Row(4L, 1L, "F", 50.0, new Timestamp(jun + 86400000L), "1")))
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(mode)
     val r = ParityQueries.convDynamicOverwrite(spark, dir)
       .collect().head
     assert((r.getLong(0), r.getLong(1), r.getLong(2))
       === ((4L, 40000L, 10000L)))
+    // dynamic mode is a per-write option: the session value is untouched
+    assert(spark.conf.getOption(mode) === before)
   }
 
   test("q56_null_safe_join: NULL keys match each other under <=>, " +
