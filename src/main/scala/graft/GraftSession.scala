@@ -38,4 +38,25 @@ object GraftSession {
       // heartbeat window kills the JVM with exit 56 (HEARTBEAT_FAILURE).
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "600s")
+
+  /** Run `f` with each of `settings` set on `s`, then put every key
+    * back as it was: its previous value, or unset when it was unset.
+    * Restores on exceptions too. The previous values come from
+    * `getAll`, not `getOption`: `getOption` reports a registered key's
+    * default, and restoring that would pin the default in the session.
+    * Settings a query captures when it starts (a stream's state-store
+    * provider and partition count) stay with that query after the
+    * block ends. */
+  private[graft] def withConf[T](s: SparkSession,
+      settings: (String, String)*)(f: => T): T = {
+    val set = s.conf.getAll
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
+    try {
+      settings.foreach { case (k, v) => s.conf.set(k, v) }
+      f
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

@@ -2,6 +2,9 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+
 /** Accounting for gate-fixture scaffolding (scratch-table copies,
   * CSV exports, bucketed-layout writes) so the benchmark can report
   * setup cost separately from engine cost. Several gate queries must
@@ -33,6 +36,26 @@ object Scaffold {
     if (shm.isDirectory && shm.canWrite) "/dev/shm/graft_scratch"
     else "/tmp/graft_scratch"
   }
+
+  /** Gate scratch path `name` for the input dir `dir`, namespaced per
+    * input (the dir with every character outside `[A-Za-z0-9.]` made
+    * `_`) so sf0.01 verify and sf0.1 bench runs don't collide. */
+  private[graft] def scratch(dir: String, name: String): String =
+    s"$scratchBase/${tag(dir)}/$name"
+
+  /** The per-input namespace [[scratch]] files under; also the suffix
+    * of gate-scoped query and checkpoint names. */
+  private[graft] def tag(dir: String): String =
+    dir.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** Recursively delete each of `paths` through the Hadoop FileSystem
+    * API; a missing path is a no-op. */
+  private[graft] def rm(s: SparkSession, paths: String*): Unit =
+    paths.foreach { p =>
+      val path = new Path(p)
+      path.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .delete(path, true)
+    }
 
   /** Run `f`, attributing its wall time to setup. */
   def setup[T](f: => T): T = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Scaffold, Tables}
 
 /** Bucketed (pre-partitioned, co-located) joins — the "reuse a
   * partitioning across stages" lever: both sides are written
@@ -22,15 +22,12 @@ import graft.Tables
   */
 object Bucketing {
 
-  private def scratch(dir: String): String =
-    s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/bucketed"
-
   val NBuckets = 8
 
   /** Write orders + customer bucketed on the join key (idempotent:
     * re-registers and overwrites). */
   def writeBucketed(s: SparkSession, dir: String): Unit = {
-    val root = scratch(dir)
+    val root = Scaffold.scratch(dir, "bucketed")
     Seq("g_orders_b", "g_customer_b").foreach(t =>
       s.sql(s"DROP TABLE IF EXISTS $t"))
     Tables.orders(s, dir)

@@ -419,8 +419,8 @@ object DataQuality {
     * classification closed-form. */
   def schemaDrift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val baseDir = dqScratch(dir, "drift/base")
-    val newDir = dqScratch(dir, "drift/new")
+    val baseDir = graft.Scaffold.scratch(dir, "dq/drift/base")
+    val newDir = graft.Scaffold.scratch(dir, "dq/drift/new")
     graft.Scaffold.setup {
       val o = Tables.orders(s, dir)
       o.write.mode("overwrite").parquet(baseDir)
@@ -457,9 +457,6 @@ object DataQuality {
       |  ('o_totalprice', 'type_changed')
       |) AS t("column", status)
       |ORDER BY "column"""".stripMargin
-
-  private def dqScratch(dir: String, name: String): String =
-    s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/dq/$name"
 
   def dqBenford(s: SparkSession, dir: String): DataFrame = {
     val l = Tables.lineitem(s, dir)

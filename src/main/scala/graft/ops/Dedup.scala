@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Scaffold, Tables}
+import graft.streaming.EventStreams
 import graft.functions.TextFunctions._
 
 /** Deduplication operators over the documents corpus (SURVEY §2.9):
@@ -1429,47 +1430,17 @@ object Dedup {
     * contract); a bounded deployment passes a TTL and accepts the
     * trailing-horizon cut, as `stream_dedup_ttl` prices. */
   def streamExactSubstring(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    def scratch(name: String): String =
-      s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
-    val srcDir = scratch("essstream/src")
-    val marksDir = scratch("essstream/marks")
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "essstream_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    val fs = new Path(srcDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def rm(p: String): Unit = fs.delete(new Path(p), true): Unit
+    val marksDir = Scaffold.scratch(dir, "essstream/marks")
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
-    graft.Scaffold.setup {
-      Seq(srcDir, marksDir, ck).foreach(rm)
-      docs.filter(col("doc_id") % 3 === 0).coalesce(2).write
-        .mode("overwrite").parquet(srcDir)
-    }
-    graft.streaming.EventStreams.withRocksDb(s, statePartitions = 8) {
-      val marks = exactSubstrStateMarks(
-        s.readStream.schema(docs.schema).parquet(srcDir))
-      val q = marks.toDF().writeStream
-        .format("parquet")
-        .option("path", marksDir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          docs.filter(col("doc_id") % 3 === 1).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          docs.filter(col("doc_id") % 3 === 2).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.streaming.EventStreams.dropCheckpoint(ck)
+    Scaffold.setup(Scaffold.rm(s, marksDir))
+    val batches = (0 to 2).map(m =>
+      docs.filter(col("doc_id") % 3 === m).coalesce(2))
+    EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay("essstream_" + Scaffold.tag(dir),
+          Scaffold.scratch(dir, "essstream/src"), batches) { (stream, ck) =>
+        EventStreams.toParquet(
+          exactSubstrStateMarks(stream).toDF(), marksDir, ck)
       }
     }
     val docTokens = Tables.documents(s, dir)
@@ -2216,48 +2187,16 @@ object Dedup {
   }
 
   def streamDupRate(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    def scratch(name: String): String =
-      s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
-    val srcDir = scratch("dupstream/src")
-    val outDir = scratch("dupstream/updates")
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "dupstream_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    def rm(p: String): Unit = {
-      val path = new Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true): Unit
-    }
+    val outDir = Scaffold.scratch(dir, "dupstream/updates")
     val docs = Tables.documents(s, dir)
-    graft.Scaffold.setup {
-      Seq(srcDir, outDir, ck).foreach(rm)
-      docs.filter(col("doc_id") % 3 === 0).coalesce(2).write
-        .mode("overwrite").parquet(srcDir)
-    }
-    graft.streaming.EventStreams.withRocksDb(s, statePartitions = 8) {
-      val updates = dupRateStateUpdates(
-        s.readStream.schema(docs.schema).parquet(srcDir))
-      val q = updates.toDF().writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          docs.filter(col("doc_id") % 3 === 1).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          docs.filter(col("doc_id") % 3 === 2).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.streaming.EventStreams.dropCheckpoint(ck)
+    Scaffold.setup(Scaffold.rm(s, outDir))
+    val batches = (0 to 2).map(m =>
+      docs.filter(col("doc_id") % 3 === m).coalesce(2))
+    EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay("dupstream_" + Scaffold.tag(dir),
+          Scaffold.scratch(dir, "dupstream/src"), batches) { (stream, ck) =>
+        EventStreams.toParquet(
+          dupRateStateUpdates(stream).toDF(), outDir, ck)
       }
     }
     s.read.parquet(outDir)
@@ -2302,49 +2241,17 @@ object Dedup {
     * final pair set must equal [[minhashLsh]]'s — the oracle IS the
     * batch gate's SQL verbatim. */
   def streamMinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import graft.functions.TextFunctions
-    def scratch(name: String): String =
-      s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
-    val srcDir = scratch("mhstream/src")
-    val pairsDir = scratch("mhstream/pairs")
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "mhstream_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    val fs = new Path(srcDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def rm(p: String): Unit =
-      fs.delete(new Path(p), true): Unit
+    val pairsDir = Scaffold.scratch(dir, "mhstream/pairs")
     val corpus = DocCorpus.withDuplicates(s, dir)
       .select(col("doc_id"), col("text"))
-    graft.Scaffold.setup {
-      Seq(srcDir, pairsDir, ck).foreach(rm)
-      corpus.filter(col("doc_id") % 3 === 0).coalesce(2).write
-        .mode("overwrite").parquet(srcDir)
-    }
-    graft.streaming.EventStreams.withRocksDb(s, statePartitions = 8) {
-      val pairs = minhashStateMiner(
-        s.readStream.schema(corpus.schema).parquet(srcDir))
-      val q = pairs.toDF().writeStream
-        .format("parquet")
-        .option("path", pairsDir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          corpus.filter(col("doc_id") % 3 === 1).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          corpus.filter(col("doc_id") % 3 === 2).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.streaming.EventStreams.dropCheckpoint(ck)
+    Scaffold.setup(Scaffold.rm(s, pairsDir))
+    val batches = (0 to 2).map(m =>
+      corpus.filter(col("doc_id") % 3 === m).coalesce(2))
+    EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay("mhstream_" + Scaffold.tag(dir),
+          Scaffold.scratch(dir, "mhstream/src"), batches) { (stream, ck) =>
+        EventStreams.toParquet(
+          minhashStateMiner(stream).toDF(), pairsDir, ck)
       }
     }
     s.read.parquet(pairsDir)
@@ -2376,7 +2283,6 @@ object Dedup {
     * O(corpus) — the knob that makes the miner deployable where the
     * corpus outgrows fleet SSD. */
   def streamMinhashLshTtl(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     // TTL 3 s / gap 5 s (round-11 ADVICE margin widening): expiry
     // still guaranteed (gap > ttl by 2 s and the TTL filter runs at
     // read time), while same-horizon survival gets a 3 s ingest+probe
@@ -2385,21 +2291,14 @@ object Dedup {
     // instead of producing a silently-wrong pair set.
     val ttl = java.time.Duration.ofMillis(3000L)
     val gapMillis = 5000L // > ttl: the earlier horizon is provably dead
-    def scratch(name: String): String =
-      s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
-    val srcDir = scratch("mhttl/src")
-    val pairsDir = scratch("mhttl/pairs")
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "mhttl_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    val fs = new Path(srcDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def rm(p: String): Unit =
-      fs.delete(new Path(p), true): Unit
+    val srcDir = Scaffold.scratch(dir, "mhttl/src")
+    val pairsDir = Scaffold.scratch(dir, "mhttl/pairs")
+    val ck = EventStreams.gateCheckpoint("mhttl_" + Scaffold.tag(dir))
     val corpus = DocCorpus.withDuplicates(s, dir)
       .select(col("doc_id"), col("text"))
     val horizon = expr("(doc_id div 10000) % 2")
-    graft.Scaffold.setup {
-      Seq(srcDir, pairsDir, ck).foreach(rm)
+    Scaffold.setup {
+      Scaffold.rm(s, srcDir, pairsDir, ck)
       corpus.filter(horizon === 0).coalesce(2).write
         .mode("overwrite").parquet(srcDir)
     }
@@ -2414,15 +2313,10 @@ object Dedup {
     // horizon AND a trailing empty batch proves the sink committed,
     // then stop the run.
     def runHorizon(minRows: Long): Unit =
-      graft.streaming.EventStreams.withRocksDb(s, statePartitions = 8) {
-        val pairs = minhashStateMiner(
+      EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+        val q = EventStreams.toParquet(minhashStateMiner(
           s.readStream.schema(corpus.schema).parquet(srcDir), Some(ttl))
-        val q = pairs.toDF().writeStream
-          .format("parquet")
-          .option("path", pairsDir)
-          .option("checkpointLocation", ck)
-          .outputMode("append")
-          .start()
+          .toDF(), pairsDir, ck)
         try {
           val seen = scala.collection.mutable.Map.empty[Long, Long]
           // wall-clock ceiling (round-11 ADVICE): a dead query stops
@@ -2466,7 +2360,7 @@ object Dedup {
         } finally q.stop()
       }
     try {
-      runHorizon(graft.Scaffold.setup {
+      runHorizon(Scaffold.setup {
         corpus.filter(horizon === 0).count()
       })
       // The two-horizon gap: wall-clock, because state TTL is
@@ -2474,7 +2368,7 @@ object Dedup {
       // racy — gap > ttl and the TTL filter runs at read time.
       // Scaffold-attributed: the gap simulates calendar time between
       // scheduled ingests, it is not operator cost.
-      val n1 = graft.Scaffold.setup {
+      val n1 = Scaffold.setup {
         Thread.sleep(gapMillis)
         corpus.filter(horizon === 1).coalesce(2).write
           .mode("append").parquet(srcDir)
@@ -2482,7 +2376,7 @@ object Dedup {
       }
       runHorizon(n1)
     } finally {
-      graft.streaming.EventStreams.dropCheckpoint(ck)
+      EventStreams.dropCheckpoint(ck)
     }
     s.read.parquet(pairsDir)
       .select(col("id_a"), col("id_b"), col("jaccard"))

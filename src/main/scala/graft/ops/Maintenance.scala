@@ -6,7 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Scaffold, Tables}
+import graft.Scaffold.scratch
+import graft.streaming.EventStreams
 import graft.sources.ParquetSink
 
 /** Table-maintenance operators for plain-parquet lakes: CDC-style
@@ -102,9 +104,6 @@ object Maintenance {
 
   // -------------------------------------------------------------- //
 
-  private def scratch(dir: String, name: String): String =
-    s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
-
   private def dsum(c: org.apache.spark.sql.Column, scale: Int = 2)
       : org.apache.spark.sql.Column =
     sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
@@ -158,41 +157,16 @@ object Maintenance {
     * path itself, not a batch stand-in. */
   def cdcApply(s: SparkSession, dir: String): DataFrame = {
     val baseDir = scratch(dir, "cdc/orders")
-    val srcDir = scratch(dir, "cdc/changes")
-    // Gate-scoped checkpoint on tmpfs (EventStreams.ckBase rationale):
-    // the replay is bounded and the dir is removed below, so the
-    // per-micro-batch commit-log fsyncs buy nothing on disk.
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "cdc_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    def rm(p: String): Unit = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true)
-    }
     val o = Tables.orders(s, dir)
     def batch(mod: Int, factor: Double, status: String): DataFrame =
       o.filter(col("o_orderkey") % mod === 0)
         .withColumn("o_totalprice", col("o_totalprice") * factor)
         .withColumn("o_orderstatus", lit(status))
-    graft.Scaffold.setup {
-      // Fresh state per run: a stale checkpoint would silently skip
-      // the change files of this pass.
-      Seq(srcDir, ck).foreach(rm)
-      ParquetSink.write(o, baseDir)
-      batch(11, 0.8, "U1").write.mode("overwrite").parquet(srcDir)
-    }
-    val q = applyCdcStream(
-      s.readStream.schema(o.schema).parquet(srcDir),
-      baseDir, Seq("o_orderkey"), ck)
-    try {
-      q.processAllAvailable()
-      graft.Scaffold.setup {
-        batch(13, 1.1, "U2").write.mode("append").parquet(srcDir)
-      }
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      graft.streaming.EventStreams.dropCheckpoint(ck)
+    Scaffold.setup(ParquetSink.write(o, baseDir))
+    EventStreams.replay("cdc_" + Scaffold.tag(dir),
+        scratch(dir, "cdc/changes"),
+        Seq(batch(11, 0.8, "U1"), batch(13, 1.1, "U2"))) { (stream, ck) =>
+      applyCdcStream(stream, baseDir, Seq("o_orderkey"), ck)
     }
     s.read.parquet(baseDir)
       .groupBy(col("o_orderstatus"))
@@ -216,15 +190,7 @@ object Maintenance {
     * transactional-sink pattern every exactly-once Spark pipeline
     * uses against object stores. */
   def idempotentSink(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = scratch(dir, "idem/src")
     val ledger = scratch(dir, "idem/ledger")
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "idem_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    def rm(p: String): Unit = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true)
-    }
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("value"))
     def half(parity: Int): DataFrame =
@@ -243,24 +209,13 @@ object Maintenance {
         require(fs.rename(tmp, outP), s"ledger commit rename failed")
       }
     }
-    graft.Scaffold.setup {
-      Seq(srcDir, ledger, ck).foreach(rm)
-      half(0).write.mode("overwrite").parquet(srcDir)
-    }
-    val q = s.readStream.schema(ev.schema).parquet(srcDir)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) => commit(b, id) }
-      .start()
-    try {
-      q.processAllAvailable()
-      graft.Scaffold.setup {
-        half(1).write.mode("append").parquet(srcDir)
-      }
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      graft.streaming.EventStreams.dropCheckpoint(ck)
+    Scaffold.setup(Scaffold.rm(s, ledger))
+    EventStreams.replay("idem_" + Scaffold.tag(dir),
+        scratch(dir, "idem/src"), Seq(half(0), half(1))) { (stream, ck) =>
+      stream.writeStream.outputMode("append")
+        .option("checkpointLocation", ck)
+        .foreachBatch { (b: DataFrame, id: Long) => commit(b, id) }
+        .start()
     }
     // at-least-once retries: redeliver BOTH batch payloads
     commit(half(0), 0L)
@@ -717,56 +672,35 @@ object Maintenance {
     * two incremental merges == full recompute, exactly (decimal
     * partials make the merge associative). */
   def streamMvMaintain(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = scratch(dir, "mvstream/src")
     val mvDir = scratch(dir, "mvstream/mv")
-    // Tmpfs gate checkpoint — same rationale as cdcApply.
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "mvstream_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    def rm(p: String): Unit = {
-      val path = new Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true): Unit
-    }
     val o = Tables.orders(s, dir)
-    graft.Scaffold.setup {
-      Seq(srcDir, mvDir, ck).foreach(rm)
-      o.filter(col("o_orderkey") % 2 === 0).write
-        .mode("overwrite").parquet(srcDir)
-    }
+    Scaffold.setup(Scaffold.rm(s, mvDir))
     val fs = new Path(mvDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val q = s.readStream.schema(o.schema).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val part = batch.groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("o_totalprice").cast(DecimalType(18, 2)))
-              .cast(DecimalType(28, 2)).as("sum_price"))
-        val merged =
-          if (fs.exists(new Path(s"$mvDir/_SUCCESS")))
-            batch.sparkSession.read.parquet(mvDir).unionByName(part)
-              .groupBy(col("o_orderpriority"))
-              .agg(sum(col("cnt")).as("cnt"),
-                sum(col("sum_price")).cast(DecimalType(28, 2))
-                  .as("sum_price"))
-          else part
-        val staging = s"$mvDir.staging"
-        merged.write.mode("overwrite").parquet(staging)
-        rm(mvDir)
-        fs.rename(new Path(staging), new Path(mvDir)): Unit
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      graft.Scaffold.setup {
-        o.filter(col("o_orderkey") % 2 =!= 0).write
-          .mode("append").parquet(srcDir)
-      }
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      graft.streaming.EventStreams.dropCheckpoint(ck)
+    EventStreams.replay("mvstream_" + Scaffold.tag(dir),
+        scratch(dir, "mvstream/src"),
+        Seq(o.filter(col("o_orderkey") % 2 === 0),
+          o.filter(col("o_orderkey") % 2 =!= 0))) { (stream, ck) =>
+      stream.writeStream
+        .option("checkpointLocation", ck)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val part = batch.groupBy(col("o_orderpriority"))
+            .agg(count(lit(1)).as("cnt"),
+              sum(col("o_totalprice").cast(DecimalType(18, 2)))
+                .cast(DecimalType(28, 2)).as("sum_price"))
+          val merged =
+            if (fs.exists(new Path(s"$mvDir/_SUCCESS")))
+              batch.sparkSession.read.parquet(mvDir).unionByName(part)
+                .groupBy(col("o_orderpriority"))
+                .agg(sum(col("cnt")).as("cnt"),
+                  sum(col("sum_price")).cast(DecimalType(28, 2))
+                    .as("sum_price"))
+            else part
+          val staging = s"$mvDir.staging"
+          merged.write.mode("overwrite").parquet(staging)
+          TableSwap.swapIn(batch.sparkSession, mvDir, staging)
+        }
+        .start()
     }
     s.read.parquet(mvDir)
       .select(col("o_orderpriority"), col("cnt"),
@@ -804,14 +738,9 @@ object Maintenance {
     * auditable operator, the plain-parquet VACUUM. */
   def vacuumGate(s: SparkSession, dir: String): DataFrame = {
     val tgt = scratch(dir, "vacuum/orders")
-    def rm(p: String): Unit = {
-      val path = new Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true): Unit
-    }
     val o = Tables.orders(s, dir)
-    graft.Scaffold.setup {
-      Seq(tgt, s"$tgt.bak0", s"$tgt.bak1", s"$tgt.bak2").foreach(rm)
+    Scaffold.setup {
+      Scaffold.rm(s, tgt, s"$tgt.bak0", s"$tgt.bak1", s"$tgt.bak2")
       ParquetSink.write(o, tgt)
       val st1 = s"$tgt.staging1"
       ParquetSink.write(o.filter(col("o_orderkey") % 2 === 0), st1)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Scaffold, Tables}
+import graft.Scaffold.scratch
 import graft.schema.SchemaLoader
 import graft.sources.{AvroIngest, CsvIngest, ParquetSink}
 
@@ -16,11 +17,6 @@ import graft.sources.{AvroIngest, CsvIngest, ParquetSink}
   * the scratch files.
   */
 object ParityQueries {
-
-  /** Scratch root, namespaced per scale factor so sf0.01 verify and
-    * sf0.1 bench runs don't collide. */
-  private def scratch(dir: String, name: String): String =
-    s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
 
   /** The lineitem table declared in the reference's schema-JSON
     * dialect — exercises SchemaLoader end-to-end (INT32/INT64,
@@ -1289,11 +1285,6 @@ object ParityQueries {
     val src = s"$root/src"
     val led = s"$root/ledger.txt"
     val tgt = s"$root/tgt"
-    def rm(p: String): Unit = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true)
-    }
     val orders = Tables.orders(s, dir)
       .filter(col("o_custkey") < 300)
       .select(col("o_orderkey"), col("o_custkey"),
@@ -1304,7 +1295,7 @@ object ParityQueries {
         .csv(s"$src/drop$m")
     def readBatch(p: String): DataFrame =
       s.read.schema(orders.schema).option("header", "true").csv(p)
-    graft.Scaffold.setup { rm(root); drop(0); drop(1) }
+    Scaffold.setup { Scaffold.rm(s, root); drop(0); drop(1) }
     val r1 = graft.sources.IngestLedger.ingest(s, src, led, tgt, readBatch)
     graft.Scaffold.setup { drop(2) }
     val r2 = graft.sources.IngestLedger.ingest(s, src, led, tgt, readBatch)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
+import graft.Scaffold.scratch
 
 /** Runtime filtering — the two Spark mechanisms that turn a selective
   * join into a selective SCAN, which at 100 TB is the difference
@@ -26,9 +27,6 @@ import graft.Tables
   * plan assertions live in RuntimeFiltersSpec.
   */
 object RuntimeFilters {
-
-  private def scratch(dir: String, name: String): String =
-    s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
 
   /** Year-partitioned copy of orders (built once per sfDir). */
   private[ops] def partitionedOrders(s: SparkSession, dir: String): String = {
@@ -109,30 +107,22 @@ object RuntimeFilters {
   /** Gate: run the query with the runtime bloom filter FORCED ON for
     * this data size (the application-side threshold defaults to
     * 10 GB), materialize the one-row answer, restore the confs. */
-  def bloomGate(s: SparkSession, dir: String): DataFrame = {
-    val conf = s.conf
-    val keys = Seq(
+  def bloomGate(s: SparkSession, dir: String): DataFrame =
+    GraftSession.withConf(s,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled" -> "false",
       // injection is skipped when the join could be planned as a
       // broadcast hash join — at 100 TB neither side broadcasts, which
       // is exactly the regime the bloom filter exists for
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = keys.map { case (k, _) => k -> conf.getOption(k) }
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val rows = bloomQuery(s, dir).collect().toSeq
       s.createDataFrame(
         s.sparkContext.parallelize(rows, 1),
         StructType(Seq(StructField("n_lines", LongType),
           StructField("n_orders", LongType),
           StructField("sum_qty", DoubleType))))
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
     }
-  }
 
   val bloomSql: String =
     """SELECT COUNT(*) AS n_lines,

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Scaffold, Tables}
+import graft.streaming.EventStreams
 
 /** Similarity search over `embeddings` (64-dim unit float vectors):
   * brute-force cosine top-k as the correctness baseline, a
@@ -948,7 +949,7 @@ object Similarity {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
   private def ensureBaseIndex(s: SparkSession, dir: String): String =
     idxMemo.computeIfAbsent((s, dir), _ => {
-      val indexDir = s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/ann_ivf_index"
+      val indexDir = Scaffold.scratch(dir, "ann_ivf_index")
       graft.Scaffold.setup { annIvfBuildIndex(s, dir, indexDir) }
       indexDir
     })
@@ -984,7 +985,7 @@ object Similarity {
     * regardless of floating-point centroid assembly order, so the
     * oracle states it as constants. */
   def annIndexAppendGate(s: SparkSession, dir: String): DataFrame = {
-    val indexDir = s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/ann_ivf_index_append"
+    val indexDir = Scaffold.scratch(dir, "ann_ivf_index_append")
     // The append gate's BASE index is a filesystem copy of the shared
     // one (parquet directories are location-independent) — the build
     // runs once per (session, sfDir) across both index gates.
@@ -1069,53 +1070,22 @@ object Similarity {
     * as its rank-1 neighbor — the SAME oracle constants as the batch
     * append gate, so stream-vs-batch equivalence is the gate. */
   def streamAnnAppend(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val baseDir = ensureBaseIndex(s, dir)
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"${graft.Scaffold.scratchBase}/$tag/annstream/src"
-    val outDir = s"${graft.Scaffold.scratchBase}/$tag/annstream/postings"
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "annstream_" + tag)
-    def rm(p: String): Unit = {
-      val path = new Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true): Unit
-    }
+    val outDir = Scaffold.scratch(dir, "annstream/postings")
     val cents = s.read.parquet(s"$baseDir/centroids")
     val centArr = cents.select(col("cell"), col("cv"))
       .orderBy(col("cell")).collect().map(_.getSeq[Double](1))
     val twins = withNearDuplicates(s, dir)
       .filter(col("vec_id") >= 10000)
       .select(col("vec_id"), col("v"))
-    graft.Scaffold.setup {
-      Seq(srcDir, outDir, ck).foreach(rm)
-      twins.filter(col("vec_id") % 3 === 0).coalesce(2).write
-        .mode("overwrite").parquet(srcDir)
-    }
-    graft.streaming.EventStreams.withRocksDb(s, statePartitions = 8) {
-      val postings = annAppendStateEvents(
-        s.readStream.schema(twins.schema).parquet(srcDir), centArr)
-      val q = postings.toDF().writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          twins.filter(col("vec_id") % 3 === 1).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          twins.filter(col("vec_id") % 3 === 2).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.streaming.EventStreams.dropCheckpoint(ck)
+    Scaffold.setup(Scaffold.rm(s, outDir))
+    val batches = (0 to 2).map(m =>
+      twins.filter(col("vec_id") % 3 === m).coalesce(2))
+    EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay("annstream_" + Scaffold.tag(dir),
+          Scaffold.scratch(dir, "annstream/src"), batches) { (stream, ck) =>
+        EventStreams.toParquet(
+          annAppendStateEvents(stream, centArr).toDF(), outDir, ck)
       }
     }
     // Probe the maintained index: standing base lists UNION the
@@ -2071,48 +2041,21 @@ object Similarity {
 
   def streamSemDedup(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
     val theta = SemDedupTheta
-    import org.apache.hadoop.fs.Path
     val base = streamSemDedupBase(s, dir)
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"${graft.Scaffold.scratchBase}/$tag/semstream/src"
-    val outDir = s"${graft.Scaffold.scratchBase}/$tag/semstream/events"
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "semstream_" + tag)
-    val fs = new Path(srcDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def rm(p: String): Unit = fs.delete(new Path(p), true): Unit
+    val outDir = Scaffold.scratch(dir, "semstream/events")
     // seeds: the batch gate's deterministic mult-hash rule, collected
     // driver-side (k rows of 64 doubles — metadata-sized)
-    val seeds = graft.Scaffold.setup {
-      Seq(srcDir, outDir, ck).foreach(rm)
-      base.filter(col("vec_id") % 3 === 0).coalesce(2)
-        .write.mode("overwrite").parquet(srcDir)
+    val seeds = Scaffold.setup {
+      Scaffold.rm(s, outDir)
       streamSemDedupSeeds(base, k)
     }
-    graft.streaming.EventStreams.withRocksDb(s, statePartitions = 8) {
-      val events = semDedupStateEvents(
-        s.readStream.schema(base.schema).parquet(srcDir), seeds, theta)
-      val q = events.toDF().writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          base.filter(col("vec_id") % 3 === 1).coalesce(2)
-            .write.mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          base.filter(col("vec_id") % 3 === 2).coalesce(2)
-            .write.mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.streaming.EventStreams.dropCheckpoint(ck)
+    val batches = (0 to 2).map(m =>
+      base.filter(col("vec_id") % 3 === m).coalesce(2))
+    EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay("semstream_" + Scaffold.tag(dir),
+          Scaffold.scratch(dir, "semstream/src"), batches) { (stream, ck) =>
+        EventStreams.toParquet(
+          semDedupStateEvents(stream, seeds, theta).toDF(), outDir, ck)
       }
     }
     s.read.parquet(outDir)
@@ -3362,18 +3305,8 @@ object Similarity {
     * harness bound, not the design bound. */
   def streamHnswInsert(s: SparkSession, dir: String, m: Int = 8,
       nTables: Int = 8): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"${graft.Scaffold.scratchBase}/$tag/hnswins/src"
-    val outDir = s"${graft.Scaffold.scratchBase}/$tag/hnswins/adj"
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "hnswins_" + tag)
-    def rm(p: String): Unit = {
-      val path = new Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true): Unit
-    }
+    val outDir = Scaffold.scratch(dir, "hnswins/adj")
     val base = vecs(s, dir)
     val n = base.count()
     val bits = math.max(4,
@@ -3385,59 +3318,38 @@ object Similarity {
         norm(col("v")).as("tn")).localCheckpoint()
     val arrivals = hnswNodes(s, dir).filter(col("vec_id") >= 10000)
       .select(col("vec_id"), col("v"))
-    graft.Scaffold.setup {
-      Seq(srcDir, outDir, ck).foreach(rm)
-      arrivals.filter(col("vec_id") % 3 === 0).coalesce(2).write
-        .mode("overwrite").parquet(srcDir)
-    }
-    graft.streaming.EventStreams.withRocksDb(s, statePartitions = 8) {
-      org.apache.spark.sql.GraftSqlBridge
-        .ensureStateStoreCoordinator(s)
-      import s.implicits._
-      val stream = s.readStream.schema(arrivals.schema).parquet(srcDir)
-      val scored = stream
-        .select(col("vec_id").as("new_id"), col("v"),
-          norm(col("v")).as("nn"),
-          posexplode(array((0 until nTables).map(t =>
-            lshBucket(col("v"), t, bits)): _*)))
-        .select(col("new_id"), col("v"), col("nn"),
-          col("pos").as("table"), col("col").as("bucket"))
-        .join(baseTables, Seq("table", "bucket"))
-        .join(baseVecs, "target_id")
-        .select(col("new_id"), col("target_id"),
-          (dot(col("v"), col("tv")) / (col("nn") * col("tn")))
-            .as("sim"))
-      val requests = scored
-        .select(col("new_id").as("node_id"),
-          col("target_id").as("other_id"), col("sim"))
-        .union(scored.select(col("target_id").as("node_id"),
-          col("new_id").as("other_id"), col("sim")))
-      val events = requests.as[(Long, Long, Double)]
-        .groupByKey(_._1)
-        .transformWithState(
-          new graft.streaming.HnswAttachProcessor(m),
-          TimeMode.None(), OutputMode.Append())
-      val q = events.toDF().writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          arrivals.filter(col("vec_id") % 3 === 1).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          arrivals.filter(col("vec_id") % 3 === 2).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.streaming.EventStreams.dropCheckpoint(ck)
+    Scaffold.setup(Scaffold.rm(s, outDir))
+    val batches = (0 to 2).map(m =>
+      arrivals.filter(col("vec_id") % 3 === m).coalesce(2))
+    EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay("hnswins_" + Scaffold.tag(dir),
+          Scaffold.scratch(dir, "hnswins/src"), batches) { (stream, ck) =>
+        org.apache.spark.sql.GraftSqlBridge
+          .ensureStateStoreCoordinator(s)
+        import s.implicits._
+        val scored = stream
+          .select(col("vec_id").as("new_id"), col("v"),
+            norm(col("v")).as("nn"),
+            posexplode(array((0 until nTables).map(t =>
+              lshBucket(col("v"), t, bits)): _*)))
+          .select(col("new_id"), col("v"), col("nn"),
+            col("pos").as("table"), col("col").as("bucket"))
+          .join(baseTables, Seq("table", "bucket"))
+          .join(baseVecs, "target_id")
+          .select(col("new_id"), col("target_id"),
+            (dot(col("v"), col("tv")) / (col("nn") * col("tn")))
+              .as("sim"))
+        val requests = scored
+          .select(col("new_id").as("node_id"),
+            col("target_id").as("other_id"), col("sim"))
+          .union(scored.select(col("target_id").as("node_id"),
+            col("new_id").as("other_id"), col("sim")))
+        val events = requests.as[(Long, Long, Double)]
+          .groupByKey(_._1)
+          .transformWithState(
+            new graft.streaming.HnswAttachProcessor(m),
+            TimeMode.None(), OutputMode.Append())
+        EventStreams.toParquet(events.toDF(), outDir, ck)
       }
     }
     val wv = Window.partitionBy(col("node_id"))

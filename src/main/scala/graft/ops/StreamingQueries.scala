@@ -2,8 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.Tables
+import graft.{GraftSession, Scaffold, Tables}
 import graft.streaming.EventStreams
 
 /** Batch-mode gate queries for the streaming operators: the SAME
@@ -13,6 +14,21 @@ import graft.streaming.EventStreams
   * semantics (tumbling/sliding alignment, session gap logic, dedup).
   */
 object StreamingQueries {
+
+  /** Memory-sink query name of gate `gate` over input `dir`: the sink
+    * registers a temp view, so it must be an SQL identifier — no dots. */
+  private def sinkName(gate: String, dir: String): String =
+    gate + "_" + Scaffold.tag(dir).replace(".", "_")
+
+  /** Start `df` into an append-mode memory sink named `name`. */
+  private def toMemory(df: DataFrame, name: String, ck: String)
+      : StreamingQuery =
+    df.writeStream
+      .format("memory")
+      .queryName(name)
+      .option("checkpointLocation", ck)
+      .outputMode("append")
+      .start()
 
   def tumbling(s: SparkSession, dir: String): DataFrame =
     EventStreams.tumblingCounts(Tables.events(s, dir))
@@ -159,17 +175,15 @@ object StreamingQueries {
     * oracle's plain GROUP BY. Exact-long accumulation makes the
     * value total order-independent, so the gate is hash-checkable. */
   def running(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"${graft.Scaffold.scratchBase}/$tag/stream_running_src"
+    val srcDir = Scaffold.scratch(dir, "stream_running_src")
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    graft.Scaffold.setup {
+    Scaffold.setup {
       ev.repartition(4).write.mode("overwrite").parquet(srcDir)
     }
-    // memory-sink query names are SQL identifiers — no dots
     val out = EventStreams.runAsStream(s, srcDir, ev.schema,
-      "stream_running_" + tag.replace(".", "_"),
+      sinkName("stream_running", dir),
       df => EventStreams.runningUserTotalsExact(df).toDF)
     out.groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("total_v4"))).as("m"))
@@ -212,17 +226,16 @@ object StreamingQueries {
 
   private def rocksDbRunning(s: SparkSession, dir: String, name: String,
       transform: DataFrame => DataFrame): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"${graft.Scaffold.scratchBase}/$tag/${name}_src"
+    val srcDir = Scaffold.scratch(dir, s"${name}_src")
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    graft.Scaffold.setup {
+    Scaffold.setup {
       ev.repartition(4).write.mode("overwrite").parquet(srcDir)
     }
     val out = EventStreams.withRocksDb(s) {
       EventStreams.runAsStream(s, srcDir, ev.schema,
-        name + "_" + tag.replace(".", "_"), transform)
+        sinkName(name, dir), transform)
     }
     out.groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("total_v4"))).as("m"))
@@ -248,52 +261,19 @@ object StreamingQueries {
     * The un-emitted tail (windows still open at shutdown) is part of
     * the stated set: `window_end ≤ max(ts) − 10 min`. */
   def lateDrop(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"${graft.Scaffold.scratchBase}/$tag/stream_late_src"
-    val cut = "2024-01-01 02:00:00"
+    val name = sinkName("stream_late", dir)
+    val cut = lit("2024-01-01 02:00:00").cast("timestamp")
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    def rm(p: String): Unit = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true)
-    }
-    graft.Scaffold.setup {
-      rm(srcDir)
-      ev.filter(col("ts") >= lit(cut).cast("timestamp"))
-        .repartition(2).write.mode("overwrite").parquet(srcDir)
-    }
-    val stream = s.readStream.schema(ev.schema).parquet(srcDir)
-    // The aggregate holds O(windows·types) state — 8 state partitions
-    // ample; the session default (sized for corpus shuffles) would pay
-    // per-partition state-store setup ×4 in EVERY micro-batch. The
-    // conf is captured at query start, then restored.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val lateCk = graft.streaming.EventStreams.gateCheckpoint(
-      "stream_late_" + tag.replace(".", "_"))
-    val q =
-      try EventStreams.tumblingCounts(stream).writeStream
-        .format("memory")
-        .queryName("stream_late_" + tag.replace(".", "_"))
-        .option("checkpointLocation", lateCk)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try {
-      q.processAllAvailable()
-      graft.Scaffold.setup {
-        ev.filter(col("ts") < lit(cut).cast("timestamp"))
-          .write.mode("append").parquet(srcDir)
+    GraftSession.withConf(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay(name, Scaffold.scratch(dir, "stream_late_src"),
+          Seq(ev.filter(col("ts") >= cut).repartition(2),
+            ev.filter(col("ts") < cut))) { (stream, ck) =>
+        toMemory(EventStreams.tumblingCounts(stream), name, ck)
       }
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      graft.streaming.EventStreams.dropCheckpoint(lateCk)
     }
-    s.table("stream_late_" + tag.replace(".", "_"))
-      .orderBy(col("window_start"), col("event_type"))
+    s.table(name).orderBy(col("window_start"), col("event_type"))
   }
 
   /** Keyed-state EXPIRY via event-time timeout
@@ -306,52 +286,27 @@ object StreamingQueries {
     * part of the contract. Oracle = plain per-user GROUP BY, since
     * each user's full history precedes its close. */
   def stateTtl(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"${graft.Scaffold.scratchBase}/$tag/stream_ttl_src"
+    val name = sinkName("stream_ttl", dir)
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    def rm(p: String): Unit = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true)
+    // nudge: one event a year past the corpus drags the watermark
+    // beyond every user's last_seen + gap
+    val nudge = Scaffold.setup {
+      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+      val nudgeTs = new java.sql.Timestamp(
+        maxTs.getTime + 365L * 86400000L)
+      import s.implicits._
+      Seq((-1L, nudgeTs, -1L, "nudge", 0.0))
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
     }
-    graft.Scaffold.setup {
-      rm(srcDir)
-      ev.repartition(2).write.mode("overwrite").parquet(srcDir)
-    }
-    val stream = s.readStream.schema(ev.schema).parquet(srcDir)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val name = "stream_ttl_" + tag.replace(".", "_")
-    val ck = graft.streaming.EventStreams.gateCheckpoint(name)
-    val q =
-      try EventStreams
-        .sessionTtlCloseouts(stream, gapSec = 3600, delaySec = 60)
-        .toDF.writeStream
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ck)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try {
-      q.processAllAvailable()
-      graft.Scaffold.setup {
-        // nudge: one event a year past the corpus drags the
-        // watermark beyond every user's last_seen + gap
-        val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-        val nudgeTs = new java.sql.Timestamp(
-          maxTs.getTime + 365L * 86400000L)
-        import s.implicits._
-        Seq((-1L, nudgeTs, -1L, "nudge", 0.0))
-          .toDF("event_id", "ts", "user_id", "event_type", "value")
-          .write.mode("append").parquet(srcDir)
+    GraftSession.withConf(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay(name, Scaffold.scratch(dir, "stream_ttl_src"),
+          Seq(ev.repartition(2), nudge)) { (stream, ck) =>
+        toMemory(EventStreams
+          .sessionTtlCloseouts(stream, gapSec = 3600, delaySec = 60)
+          .toDF, name, ck)
       }
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      graft.streaming.EventStreams.dropCheckpoint(ck)
     }
     s.table(name).orderBy(col("user_id"))
   }
@@ -403,46 +358,18 @@ object StreamingQueries {
     * state outliving its event-time bound (missing nulls), and late
     * rows re-entering the join (extra pairs). */
   def outerMiss(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"${graft.Scaffold.scratchBase}/$tag/stream_outer_src"
-    val cut = "2024-01-01 02:00:00"
+    val name = sinkName("stream_outer", dir)
+    val cut = lit("2024-01-01 02:00:00").cast("timestamp")
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    def rm(p: String): Unit = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true)
-    }
-    graft.Scaffold.setup {
-      rm(srcDir)
-      ev.filter(col("ts") >= lit(cut).cast("timestamp"))
-        .repartition(2).write.mode("overwrite").parquet(srcDir)
-    }
-    val stream = s.readStream.schema(ev.schema).parquet(srcDir)
-    val name = "stream_outer_" + tag.replace(".", "_")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val ck = graft.streaming.EventStreams.gateCheckpoint(name)
-    val q =
-      try EventStreams.intervalJoin(stream, "view", "purchase",
-          joinType = "left_outer").writeStream
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ck)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try {
-      q.processAllAvailable()
-      graft.Scaffold.setup {
-        ev.filter(col("ts") < lit(cut).cast("timestamp"))
-          .write.mode("append").parquet(srcDir)
+    GraftSession.withConf(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay(name, Scaffold.scratch(dir, "stream_outer_src"),
+          Seq(ev.filter(col("ts") >= cut).repartition(2),
+            ev.filter(col("ts") < cut))) { (stream, ck) =>
+        toMemory(EventStreams.intervalJoin(stream, "view", "purchase",
+          joinType = "left_outer"), name, ck)
       }
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      graft.streaming.EventStreams.dropCheckpoint(ck)
     }
     s.table(name).orderBy(col("user_id"), col("a_id"), col("b_id"))
   }
@@ -518,49 +445,17 @@ object StreamingQueries {
     * SQL — each row tested against the stats of strictly earlier
     * batches via a RANGE window on the batch index. */
   def streamAnomalyZ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    def scratch(name: String): String =
-      s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
-    val srcDir = scratch("anomstream/src")
-    val outDir = scratch("anomstream/updates")
-    val ck = EventStreams.gateCheckpoint(
-      "anomstream_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    def rm(p: String): Unit = {
-      val path = new Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true): Unit
-    }
+    val outDir = Scaffold.scratch(dir, "anomstream/updates")
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("value"))
-    graft.Scaffold.setup {
-      Seq(srcDir, outDir, ck).foreach(rm)
-      ev.filter(col("event_id") % 3 === 0).coalesce(2).write
-        .mode("overwrite").parquet(srcDir)
-    }
-    EventStreams.withRocksDb(s, statePartitions = 8) {
-      val updates = anomalyStateUpdates(
-        s.readStream.schema(ev.schema).parquet(srcDir))
-      val q = updates.toDF().writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          ev.filter(col("event_id") % 3 === 1).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          ev.filter(col("event_id") % 3 === 2).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        EventStreams.dropCheckpoint(ck)
+    Scaffold.setup(Scaffold.rm(s, outDir))
+    val batches = (0 to 2).map(m =>
+      ev.filter(col("event_id") % 3 === m).coalesce(2))
+    EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay("anomstream_" + Scaffold.tag(dir),
+          Scaffold.scratch(dir, "anomstream/src"), batches) { (stream, ck) =>
+        EventStreams.toParquet(
+          anomalyStateUpdates(stream).toDF(), outDir, ck)
       }
     }
     s.read.parquet(outDir)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Scaffold, Tables}
+import graft.streaming.EventStreams
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators over `documents` (SURVEY §2.9 extensions):
@@ -1697,48 +1698,16 @@ object TextAnalysis {
     * split by doc_id mod 3; the converged scoreboard must equal the
     * batch rollup — the oracle is the batch SQL verbatim. */
   def streamWatermarkRate(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    def scratch(name: String): String =
-      s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
-    val srcDir = scratch("wmstream/src")
-    val outDir = scratch("wmstream/updates")
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "wmstream_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    def rm(p: String): Unit = {
-      val path = new Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true): Unit
-    }
+    val outDir = Scaffold.scratch(dir, "wmstream/updates")
     val docs = Tables.documents(s, dir)
-    graft.Scaffold.setup {
-      Seq(srcDir, outDir, ck).foreach(rm)
-      docs.filter(col("doc_id") % 3 === 0).coalesce(2).write
-        .mode("overwrite").parquet(srcDir)
-    }
-    graft.streaming.EventStreams.withRocksDb(s, statePartitions = 8) {
-      val updates = watermarkStateUpdates(
-        s.readStream.schema(docs.schema).parquet(srcDir))
-      val q = updates.toDF().writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          docs.filter(col("doc_id") % 3 === 1).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          docs.filter(col("doc_id") % 3 === 2).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.streaming.EventStreams.dropCheckpoint(ck)
+    Scaffold.setup(Scaffold.rm(s, outDir))
+    val batches = (0 to 2).map(m =>
+      docs.filter(col("doc_id") % 3 === m).coalesce(2))
+    EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay("wmstream_" + Scaffold.tag(dir),
+          Scaffold.scratch(dir, "wmstream/src"), batches) { (stream, ck) =>
+        EventStreams.toParquet(
+          watermarkStateUpdates(stream).toDF(), outDir, ck)
       }
     }
     s.read.parquet(outDir)

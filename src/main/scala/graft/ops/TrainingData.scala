@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{Scaffold, Tables}
+import graft.streaming.EventStreams
 
 /** Training-data curation operators beyond the reference's surface:
   * benchmark decontamination, repetition-quality filtering, and
@@ -287,19 +288,9 @@ object TrainingData {
     * converged scoreboard must equal the batch census — the oracle
     * states the same semantics in batch SQL. */
   def streamDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val mBits = 1 << 17
     val k = 3
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"${graft.Scaffold.scratchBase}/$tag/dcstream/src"
-    val outDir = s"${graft.Scaffold.scratchBase}/$tag/dcstream/updates"
-    val ck = graft.streaming.EventStreams.gateCheckpoint(
-      "dcstream_" + tag)
-    def rm(p: String): Unit = {
-      val path = new Path(p)
-      path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(path, true): Unit
-    }
+    val outDir = Scaffold.scratch(dir, "dcstream/updates")
     val docs = Tables.documents(s, dir)
     val corpus = docs.filter(col("doc_id") % 101 =!= 0)
     // Benchmark artifacts, built once driver-side (Scaffold: shared
@@ -318,35 +309,15 @@ object TrainingData {
         .collect().foreach { r =>
           val p = r.getInt(0); words(p >>> 6) |= (1L << (p & 63))
         }
-      Seq(srcDir, outDir, ck).foreach(rm)
-      corpus.filter(col("doc_id") % 3 === 0).coalesce(2).write
-        .mode("overwrite").parquet(srcDir)
+      Scaffold.rm(s, outDir)
     }
-    graft.streaming.EventStreams.withRocksDb(s, statePartitions = 8) {
-      val updates = decontamStateUpdates(
-        s.readStream.schema(docs.schema).parquet(srcDir),
-        benchGrams, words.toSeq, mBits, k)
-      val q = updates.toDF().writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          corpus.filter(col("doc_id") % 3 === 1).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-        graft.Scaffold.setup {
-          corpus.filter(col("doc_id") % 3 === 2).coalesce(2).write
-            .mode("append").parquet(srcDir)
-        }
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.streaming.EventStreams.dropCheckpoint(ck)
+    val batches = (0 to 2).map(m =>
+      corpus.filter(col("doc_id") % 3 === m).coalesce(2))
+    EventStreams.withRocksDb(s, EventStreams.GateStatePartitions) {
+      EventStreams.replay("dcstream_" + Scaffold.tag(dir),
+          Scaffold.scratch(dir, "dcstream/src"), batches) { (stream, ck) =>
+        EventStreams.toParquet(decontamStateUpdates(stream,
+          benchGrams, words.toSeq, mBits, k).toDF(), outDir, ck)
       }
     }
     s.read.parquet(outDir)
@@ -993,8 +964,7 @@ object TrainingData {
     * layout, and content all survive the round trip. Oracle =
     * [[packShardsSql]]: byte-identical to summarizing the source. */
   def exportJsonlGate(s: SparkSession, dir: String): DataFrame = {
-    val outDir =
-      s"${graft.Scaffold.scratchBase}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/jsonl_export"
+    val outDir = Scaffold.scratch(dir, "jsonl_export")
     exportJsonlShards(s, dir, outDir)
     val schema = "doc_id BIGINT, text STRING"
     s.read.text(outDir)

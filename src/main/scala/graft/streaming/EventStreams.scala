@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Event-time streaming operators over the `events` table (SURVEY
@@ -328,6 +329,18 @@ object EventStreams {
 
   // ---------------------------------------------------------------- //
 
+  /** The state-store partition count of the gate replays, as the
+    * session setting a stateful query reads when it STARTS: its
+    * state-store count is fixed from then on for the checkpoint's life
+    * (AQE is off for stateful workloads, so it is never re-planned),
+    * and every micro-batch opens and commits every store whatever it
+    * holds. So the count follows STATE VOLUME, not the session's
+    * batch-shuffle width: gate-scale state wants a handful, a 100 TB
+    * stream wants keys÷(target keys per store). Scope it with
+    * [[graft.GraftSession.withConf]] or [[withRocksDb]]. */
+  private[graft] val GateStatePartitions: (String, String) =
+    "spark.sql.shuffle.partitions" -> "8"
+
   /** Run `f` with the RocksDB state-store provider + changelog
     * checkpointing scoped to the streaming queries it starts (the
     * conf is captured at query START, so set-and-restore confines it
@@ -336,39 +349,16 @@ object EventStreams {
     * checkpointing ships only the keys a micro-batch TOUCHED to the
     * checkpoint (vs. a full SST snapshot per batch), which is what
     * makes per-batch checkpoint I/O proportional to the batch rather
-    * than to accumulated state.
-    *
-    * `statePartitions` (when ≥ 1) additionally scopes
-    * `spark.sql.shuffle.partitions`, which a stateful streaming query
-    * CAPTURES AT START as its state-store partition count, immutable
-    * for the checkpoint's life — the one sizing decision that cannot
-    * be re-planned later (AQE is disabled for stateful workloads).
-    * Every micro-batch pays a fixed open+commit per state store
-    * instance regardless of data, so the count must be sized to
-    * STATE VOLUME, not to the session's batch-shuffle width: a
-    * gate-scale corpus wants a handful, a 100 TB stream wants
-    * thousands. Callers whose state is gate-sized pass a small
-    * count; production reuses the same transform with a count sized
-    * to keys÷(target keys per store). */
+    * than to accumulated state. `more` scopes further settings the
+    * same way — the gates pass [[GateStatePartitions]]. */
   private[graft] def withRocksDb[T](s: SparkSession,
-      statePartitions: Int = -1)(f: => T): T = {
-    val keys = Seq(
+      more: (String, String)*)(f: => T): T =
+    graft.GraftSession.withConf(s, Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         ("org.apache.spark.sql.execution.streaming." +
           "state.RocksDBStateStoreProvider"),
       ("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled") -> "true") ++
-      (if (statePartitions >= 1)
-        Seq("spark.sql.shuffle.partitions" -> statePartitions.toString)
-      else Seq.empty)
-    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+        "changelogCheckpointing.enabled") -> "true") ++ more: _*)(f)
 
   /** Checkpoint base for the bounded gate replays: tmpfs when the
     * host offers it, else /tmp. The replays are finite
@@ -393,6 +383,48 @@ object EventStreams {
 
   private[graft] def dropCheckpoint(ck: String): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+
+  /** The bounded replay every multi-batch stream gate runs: clear
+    * `srcDir` and write `batches.head` there, start the caller's query
+    * over a parquet file stream of it (`start` gets the stream and a
+    * fresh checkpoint under [[ckBase]]), process it to completion,
+    * then append each later batch and process again. The query is
+    * stopped and its checkpoint dropped however the run ends; a query
+    * failure is rethrown. Source writes count as
+    * [[graft.Scaffold.setup]]; the transform, the sink and anything
+    * read back after the run are the caller's. */
+  private[graft] def replay(name: String, srcDir: String,
+      batches: Seq[DataFrame])(
+      start: (DataFrame, String) => StreamingQuery): Unit = {
+    val s = batches.head.sparkSession
+    graft.Scaffold.setup {
+      graft.Scaffold.rm(s, srcDir)
+      batches.head.write.mode("overwrite").parquet(srcDir)
+    }
+    val ck = gateCheckpoint(name)
+    try {
+      val q = start(
+        s.readStream.schema(batches.head.schema).parquet(srcDir), ck)
+      try {
+        q.processAllAvailable()
+        batches.tail.foreach { b =>
+          graft.Scaffold.setup { b.write.mode("append").parquet(srcDir) }
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    } finally dropCheckpoint(ck)
+  }
+
+  /** Start `updates` into an append-mode parquet sink at `outDir` —
+    * the sink the keyed-state gates read back once their replay ends. */
+  private[graft] def toParquet(updates: DataFrame, outDir: String,
+      ck: String): StreamingQuery =
+    updates.writeStream
+      .format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", ck)
+      .outputMode("append")
+      .start()
 
   /** Drive a windowed transform through a real Structured Streaming
     * query: parquet file source → transform → memory sink, processed
