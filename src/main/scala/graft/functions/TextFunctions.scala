@@ -77,8 +77,6 @@ object TextFunctions {
   /** Fraction of tokens that are stopwords (quality signal). */
   def stopwordRatio(text: Column, stopwords: Seq[String] = EnStopwords)
       : Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.TextExpressions.register)
     val toks = tokens(lower(text))
     val hits = graft.plans.TextExpressions.countInSet(toks, stopwords)
     when(size(toks) === 0, 0.0)
@@ -116,12 +114,9 @@ object TextFunctions {
   /** Marker-hit count for one language (codegen'd set-membership
     * kernel; the `filter`+`isin` formulation interprets a k-wide
     * comparison chain per token). */
-  def langHits(text: Column, lang: String): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.TextExpressions.register)
+  def langHits(text: Column, lang: String): Column =
     graft.plans.TextExpressions.countInSet(
       tokens(lower(text)), LangMarkers(lang))
-  }
 
   /** Heuristic language ID: argmax of marker hits, ties broken by
     * language code order, "und" (undetermined) when nothing hits. */
@@ -148,12 +143,9 @@ object TextFunctions {
     * formulation interprets three nested lambdas per gram); gram
     * strings are bit-identical, so minhash signatures and every
     * downstream LSH bucket are unchanged. */
-  def shingles(text: Column, n: Int = 3): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.TextExpressions.register)
+  def shingles(text: Column, n: Int = 3): Column =
     graft.plans.TextExpressions.tokenNGrams(
       tokens(lower(text)), n, emitWholeShortDoc = true)
-  }
 
   /** Distinct shingle hashes (the MinHash input set). */
   def shingleHashes(text: Column, n: Int = 3): Column =
@@ -175,11 +167,8 @@ object TextFunctions {
     * hash array — measured as the dominant projection cost of every
     * minhash gate); signatures are bit-identical, so every band
     * bucket and recorded LSH study is unchanged (pinned by spec). */
-  def minhashSignatureOfHashes(hashes: Column, k: Int = 32): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.TextExpressions.register)
+  def minhashSignatureOfHashes(hashes: Column, k: Int = 32): Column =
     graft.plans.TextExpressions.minhashSignature(hashes, k)
-  }
 
   /** The interpreted-HOF signature formulation [[MinhashSignature]]
     * replaced — kept as the bit-identity witness the kernel's spec
@@ -210,11 +199,8 @@ object TextFunctions {
     * separate per-bit aggregates — are both interpreted
     * (CodegenFallback HOFs, resp. a codegen-method-size blowout) and
     * measured far slower; the hash value itself is unchanged. */
-  def simhash64(text: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.TextExpressions.register)
+  def simhash64(text: Column): Column =
     graft.plans.TextExpressions.simhash64(tokens(lower(text)))
-  }
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column =

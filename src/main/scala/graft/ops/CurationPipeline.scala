@@ -244,7 +244,6 @@ object CurationPipeline {
     * stochastic-greedy variants drop rounds, not the per-round plan.
     * The oracle unrolls the same k argmax rounds. */
   def setCover(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     // Coverage unit: distinct word BIGRAMS (the unigram vocabulary of
     // the corpus saturates after one document; bigrams keep the
     // marginal-gain structure the greedy needs).
@@ -356,7 +355,6 @@ object CurationPipeline {
     * reduce is O(domains) metadata broadcast through scalar cross
     * joins. */
   def doremiStep(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     def snapE6(x: org.apache.spark.sql.Column) =
       floor(x * 1000000.0 + 0.5).cast(LongType)
     val docs = Tables.documents(s, dir)

@@ -933,7 +933,6 @@ object Dedup {
     * counts), so the invariant holds at any scale factor even when
     * the base corpus itself contains duplicate texts. */
   def unicodeDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val mangled = docs.select((col("doc_id") + 50000L).as("doc_id"),
       Seq(("A", "Á"), ("E", "Ë"), ("O", "Ö"), (" ", "  "))
@@ -1226,7 +1225,6 @@ object Dedup {
     * 8× narrower exchange; the fixture gate ships the strings so the
     * DuckDB oracle shares the exact grouping key). */
   def exactSubstring(s: SparkSession, dir: String, l: Int = 8): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast(LongType).as("n_tokens"),
@@ -1320,7 +1318,6 @@ object Dedup {
 
   private def plantedSubstr(s: SparkSession, dir: String, l: Int,
       crossDocOnly: Boolean): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val corpus = Tables.documents(s, dir)
       .select(col("doc_id"),
         when(col("doc_id") % 17 === 3,
@@ -1398,7 +1395,6 @@ object Dedup {
       : org.apache.spark.sql.Dataset[graft.streaming.GramMark] = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import stream.sparkSession.implicits._
-    graft.plans.TextExpressions.register(stream.sparkSession)
     org.apache.spark.sql.GraftSqlBridge
       .ensureStateStoreCoordinator(stream.sparkSession)
     stream
@@ -1845,7 +1841,6 @@ object Dedup {
     * corpus×corpus. */
   def minhashEstimate(s: SparkSession, dir: String, k: Int = 64)
       : DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val docs = Tables.documents(s, dir)
     val sh = docs.select(col("doc_id"),
         explode(graft.plans.TextExpressions.tokenNGrams(
@@ -2002,7 +1997,6 @@ object Dedup {
     * cross-doc chunk dedup is then exact-dedup machinery on the
     * fingerprint key (8 B/chunk shuffle). */
   def cdcChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     // One compiled pass per doc (CdcChunkStats kernel): the HOF
     // formulation (transform/filter/zip_with over the code array,
     // with an `aggregate(slice)` roll PER POSITION) was interpreted —
@@ -2543,7 +2537,6 @@ object Dedup {
     * outside the risk model by construction (excluded, as in the
     * published measurements). */
   def memorizationRisk(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"), col("n_chars"),
         explode(graft.plans.TextExpressions.tokenNGrams(

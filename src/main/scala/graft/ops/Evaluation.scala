@@ -46,7 +46,6 @@ object Evaluation {
   private def systemTopK(s: SparkSession, dir: String, nQueries: Int,
       k: Int): DataFrame = {
     val par = s.sparkContext.defaultParallelism
-    graft.plans.VectorExpressions.register(s)
     val vecs = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val q = vecs.filter(col("vec_id") < nQueries)
@@ -1417,7 +1416,6 @@ object Evaluation {
     * an accident. Overlap joins carry (doc, gram, count) rows,
     * hash-partitioned on the gram; output is O(sources). */
   def rougePairs(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
         filter(split(lower(col("text")), " "), t => t =!= "").as("ts"))
@@ -1625,7 +1623,6 @@ object Evaluation {
     * Scale: same shapes as rougePairs — equi/bucketed joins, counts
     * map-side combined, ONE output row. */
   def bleuPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
         filter(split(lower(col("text")), " "), t => t =!= "").as("ts"))

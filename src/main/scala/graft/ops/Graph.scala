@@ -432,15 +432,15 @@ object Graph {
          |${Dedup.jaccardPairsSql(0.6)},
          |e0 AS (SELECT id_a, id_b FROM pairs)""".stripMargin
     val rounds = (0 until iters).map { i =>
-      s"""sym$i AS (SELECT id_a AS u, id_b AS v FROM e$i
+      s"""sym$i AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM e$i
          |          UNION ALL SELECT id_b, id_a FROM e$i),
-         |s$i AS (
+         |s$i AS MATERIALIZED (
          |  SELECT e.id_a, e.id_b, COUNT(*) AS sup
          |  FROM e$i e
          |  JOIN sym$i n1 ON n1.u = e.id_a
          |  JOIN sym$i n2 ON n2.u = e.id_b AND n2.v = n1.v
          |  GROUP BY e.id_a, e.id_b),
-         |e${i + 1} AS (SELECT id_a, id_b FROM s$i
+         |e${i + 1} AS MATERIALIZED (SELECT id_a, id_b FROM s$i
          |              WHERE sup >= ${k - 2})""".stripMargin
     }
     val f = iters
@@ -1344,7 +1344,7 @@ object Graph {
          |dt0 AS (SELECT node AS s, node, CAST(0 AS BIGINT) AS d
          |        FROM nodes)""".stripMargin
     val dSteps = (1 to iters).map { i =>
-      s"""dt$i AS (
+      s"""dt$i AS MATERIALIZED (
          |  SELECT s, node, MIN(d) AS d FROM (
          |    SELECT s, node, d FROM dt${i - 1}
          |    UNION ALL
@@ -1358,7 +1358,7 @@ object Graph {
          |sg0 AS (SELECT s, node, CAST(1 AS BIGINT) AS sig, d
          |        FROM dist WHERE d = 0)""".stripMargin
     val sSteps = (1 to iters).map { i =>
-      s"""sg$i AS (
+      s"""sg$i AS MATERIALIZED (
          |  SELECT g.s, g.node, CAST(SUM(g.sig) AS BIGINT) AS sig,
          |    MIN(g.d) AS d
          |  FROM (

@@ -32,6 +32,11 @@ object LanguageModel {
 
   private def words(text: Column): Column = split(lower(text), " ")
 
+  /** One row per word bigram of `text` (codegen'd n-gram kernel). */
+  private def bigrams(text: Column): Column =
+    explode(graft.plans.TextExpressions.tokenNGrams(
+      words(text), 2, emitWholeShortDoc = false)).as("bg")
+
   /** 1e-6-snapped natural log of a double expression. */
   private def snap(x: Column): Column =
     floor(x * 1000000.0 + 0.5).cast(LongType)
@@ -53,10 +58,7 @@ object LanguageModel {
       explode(words(col("text"))).as("w"))
     val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("c1"))
     val vocab = uni.agg(count(lit(1)).as("v"))
-    val big = docs.select(col("doc_id"),
-        explode(graft.plans.TextExpressions.tokenNGrams(
-          { graft.plans.TextExpressions.register(s); words(col("text")) },
-          2, emitWholeShortDoc = false)).as("bg"))
+    val big = docs.select(col("doc_id"), bigrams(col("text")))
       .withColumn("w1", element_at(split(col("bg"), " "), 1))
     val bgc = big.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
     big.join(bgc, "bg")
@@ -659,10 +661,7 @@ object LanguageModel {
     val toks = docs.select(explode(words(col("text"))).as("w"))
     val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val tot = toks.agg(count(lit(1)).as("t"))
-    graft.plans.TextExpressions.register(s)
-    val big = docs.select(
-        explode(graft.plans.TextExpressions.tokenNGrams(
-          words(col("text")), 2, emitWholeShortDoc = false)).as("bg"))
+    val big = docs.select(bigrams(col("text")))
       .groupBy(col("bg")).agg(count(lit(1)).as("cxy"))
       .filter(col("cxy") >= minCount)
       .withColumn("w1", element_at(split(col("bg"), " "), 1))
@@ -791,10 +790,8 @@ object LanguageModel {
     * the two dimension tables broadcast; top-k via orderBy+limit is
     * TakeOrderedAndProject (per-partition heaps, k-row reduce). */
   def kneserNey(s: SparkSession, dir: String, k: Int = 50): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val big = Tables.documents(s, dir)
-      .select(explode(graft.plans.TextExpressions.tokenNGrams(
-        words(col("text")), 2, emitWholeShortDoc = false)).as("bg"))
+      .select(bigrams(col("text")))
       .select(col("bg"),
         element_at(split(col("bg"), " "), 1).as("w1"),
         element_at(split(col("bg"), " "), 2).as("w2"))
@@ -851,14 +848,11 @@ object LanguageModel {
     * DSIR gate justifies, and totals are scalar cross joins. */
   def pmiBigrams(s: SparkSession, dir: String, minSup: Long = 5L,
       topk: Int = 50): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val docs = Tables.documents(s, dir)
     val toks = docs.select(explode(words(col("text"))).as("w"))
     val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("c1"))
     val t1 = toks.agg(count(lit(1)).as("t1"))
-    val big = docs.select(
-      explode(graft.plans.TextExpressions.tokenNGrams(
-        words(col("text")), 2, emitWholeShortDoc = false)).as("bg"))
+    val big = docs.select(bigrams(col("text")))
     val t = big.agg(count(lit(1)).as("t"))
     val bgc = big.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
       .filter(col("c2") >= minSup)
@@ -925,7 +919,6 @@ object LanguageModel {
     * scalar broadcast, the bigram join on the gram key; the val side
     * is one explode + two equi joins + one global reduce. */
   def lmPerplexity(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val docs = Tables.documents(s, dir)
       .withColumn("bucket",
         pmod(TrainingData.rowHash32(col("doc_id")), lit(1000L)))
@@ -934,13 +927,9 @@ object LanguageModel {
     val uni = train.select(explode(words(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c1"))
     val vocab = uni.agg(count(lit(1)).as("v"))
-    val bgc = train.select(
-        explode(graft.plans.TextExpressions.tokenNGrams(
-          words(col("text")), 2, emitWholeShortDoc = false)).as("bg"))
+    val bgc = train.select(bigrams(col("text")))
       .groupBy(col("bg")).agg(count(lit(1)).as("c2"))
-    val evalBg = valid.select(col("doc_id"),
-        explode(graft.plans.TextExpressions.tokenNGrams(
-          words(col("text")), 2, emitWholeShortDoc = false)).as("bg"))
+    val evalBg = valid.select(col("doc_id"), bigrams(col("text")))
       .withColumn("w1", element_at(split(col("bg"), " "), 1))
     val scored = evalBg
       .join(bgc, Seq("bg"), "left")
@@ -1015,15 +1004,12 @@ object LanguageModel {
     * over O(docs) score rows — at corpus scale the terciles come
     * from two-pass quantile cutpoints instead, same downstream. */
   def pplBuckets(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val docs = Tables.documents(s, dir)
     val toks = docs.select(col("doc_id"),
       explode(words(col("text"))).as("w"))
     val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("c1"))
     val vocab = uni.agg(count(lit(1)).as("v"))
-    val big = docs.select(col("doc_id"),
-        explode(graft.plans.TextExpressions.tokenNGrams(
-          words(col("text")), 2, emitWholeShortDoc = false)).as("bg"))
+    val big = docs.select(col("doc_id"), bigrams(col("text")))
       .withColumn("w1", element_at(split(col("bg"), " "), 1))
     val bgc = big.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
     val perDoc = big.join(bgc, "bg")

@@ -392,7 +392,6 @@ object Linkage {
     * Scale: candidates from equi joins (never a cross join), scoring
     * is a pure compiled projection per pair. */
   def jaroWinklerGate(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val clean = cleanReg(s, dir)
     val dirty = dirtyReg(s, dir)
     val omit = Seq((15, 2), (17, 2))
@@ -453,7 +452,6 @@ object Linkage {
     * unrestricted byte-level variant (verified 'ca'→'abc' = 2), so
     * the gate is a direct cross-engine kernel parity check. */
   def damerauGate(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val clean = cleanReg(s, dir)
     val dirty = clean.select(
       (col("id") + 100000L).as("id"),

@@ -259,7 +259,6 @@ object Multimodal {
     * codec would do anyway), two map-combinable aggregates, zero
     * joins wider than (doc, 32 cells). */
   def phash(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     // Per-cell sums in ONE compiled scan pass (CellByteStats kernel):
     // the posexplode(per-char transform) formulation interpreted a
     // CodegenFallback lambda per CHARACTER and shuffled one row per
@@ -331,7 +330,6 @@ object Multimodal {
     * anyway; output is 16 rows per media item. */
   def resize(s: SparkSession, dir: String, cells: Int = 16)
       : DataFrame = {
-    graft.plans.TextExpressions.register(s)
     // One compiled scan pass (CellByteStats kernel — see [[phash]]):
     // the per-char explode + (doc, cell) shuffle is gone; output rows
     // and values are bit-identical, the oracle is unchanged.

@@ -41,10 +41,8 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Original vectors with elements as double. Registers the native
-    * vector kernel on the session as a side effect. */
+  /** Original vectors with elements as double. */
   private def vecs(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(s)
     Tables.embeddings(s, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
   }
@@ -251,7 +249,6 @@ object Similarity {
     * Scale: the label filter prunes BEFORE the distance work — the
     * whole point; everything else is the [[topK]] discipline. */
   def filteredTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(s)
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"),
         col("label"))
@@ -1033,7 +1030,6 @@ object Similarity {
       : org.apache.spark.sql.Dataset[graft.streaming.AnnPosting] = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import stream.sparkSession.implicits._
-    graft.plans.VectorExpressions.register(stream.sparkSession)
     org.apache.spark.sql.GraftSqlBridge
       .ensureStateStoreCoordinator(stream.sparkSession)
     val csims = cents.zipWithIndex.map { case (cv, j) =>
@@ -1339,7 +1335,6 @@ object Similarity {
     * parallel.
     */
   def quantizeInt8(df: DataFrame): DataFrame = {
-    graft.plans.VectorExpressions.register(df.sparkSession)
     import graft.plans.VectorExpressions.{vectorMaxAbs, vectorQuantizeInt8}
     df
       .withColumn("scale", greatest(vectorMaxAbs(col("v")), lit(1e-30)))
@@ -1635,7 +1630,6 @@ object Similarity {
     * sequential IEEE order — bit-identical across engines, so argmax
     * and the full matrix are hash-exact. */
   def classifyByCentroid(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(s)
     val cents = centroids(s, dir)
       .groupBy(col("label"))
       .agg(array_sort(collect_list(struct(col("pos"), col("centroid"))))
@@ -1980,7 +1974,6 @@ object Similarity {
       : org.apache.spark.sql.Dataset[graft.streaming.SemDedupEvent] = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import stream.sparkSession.implicits._
-    graft.plans.VectorExpressions.register(stream.sparkSession)
     org.apache.spark.sql.GraftSqlBridge
       .ensureStateStoreCoordinator(stream.sparkSession)
     val csims = seeds.zipWithIndex.map { case ((sv, sn), j) =>
@@ -2080,7 +2073,6 @@ object Similarity {
     */
   def randomProjection(s: SparkSession, dir: String,
       outDims: Int = 8, inDims: Int = 64): DataFrame = {
-    graft.plans.VectorExpressions.register(s)
     val v = Tables.embeddings(s, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val projCols = (0 until outDims).map { j =>
@@ -2130,7 +2122,6 @@ object Similarity {
     * probing then scans codes, not floats. */
   def pqEncode(s: SparkSession, dir: String, m: Int = 4,
       k: Int = 16): DataFrame = {
-    graft.plans.VectorExpressions.register(s)
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label").cast(LongType).as("label"),
         asDouble(col("embedding")).as("v"))
@@ -2289,7 +2280,6 @@ object Similarity {
 
   def pqAdc(s: SparkSession, dir: String, m: Int = 8, k: Int = 16,
       shortlist: Int = 25, topk: Int = 5): DataFrame = {
-    graft.plans.VectorExpressions.register(s)
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cb = pqCodebook(base, m, k)
@@ -2446,7 +2436,6 @@ object Similarity {
     * itself is an O(Q·k) groupBy, never corpus-wide. */
   def knnClassify(s: SparkSession, dir: String, k: Int = 5,
       nQueries: Int = 25): DataFrame = {
-    graft.plans.VectorExpressions.register(s)
     val par = s.sparkContext.defaultParallelism
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"),
@@ -2592,7 +2581,6 @@ object Similarity {
     * [[classifyByCentroid]] (deterministic centroid doubles + pinned
     * fold order). */
   def labelAffinity(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(s)
     val cents = centroids(s, dir)
       .groupBy(col("label"))
       .agg(array_sort(collect_list(struct(col("pos"), col("centroid"))))
@@ -3787,7 +3775,6 @@ object Similarity {
     val all = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         asDouble(col("embedding")).as("v"))
-    graft.plans.VectorExpressions.register(s)
     val anchors = all.filter(col("vec_id") < nAnchors)
       .select(col("vec_id").as("aid"), col("label").as("alabel"),
         col("v").as("av"), norm(col("v")).as("an"))

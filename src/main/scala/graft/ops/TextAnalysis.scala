@@ -451,7 +451,6 @@ object TextAnalysis {
     */
   def heavyHitters(s: SparkSession, dir: String,
       phi: Double = 0.0015, depth: Int = 4, width: Int = 1024): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     def grams =
       Tables.documents(s, dir).select(explode(
         graft.plans.TextExpressions.tokenNGrams(
@@ -496,7 +495,6 @@ object TextAnalysis {
     * parity between the JVM and DuckDB's utf8proc, not a no-op pass
     * over ASCII. Pure codegen projection, zero shuffles. */
   def textNormalizeGate(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val mangled = Seq(("A", "Á"), ("E", "Ë"), ("O", "Ö"),
       (" ", "  ")).foldLeft(upper(col("text"))) {
         case (c, (from, to)) => regexp_replace(c, from, to)
@@ -623,7 +621,6 @@ object TextAnalysis {
     * the same `floor(c·ln(n/c)·1e9 + 0.5)` scaled-long terms the
     * oracle states. */
   def charEntropy(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"),
         graft.plans.TextExpressions.charEntropyStats(col("text")).as("st"))
@@ -958,7 +955,6 @@ object TextAnalysis {
     * shuffles are the df count and the final per-source ledger. */
   def boilerplateStrip(s: SparkSession, dir: String,
       topK: Int = 5): DataFrame = {
-    graft.plans.TextExpressions.register(s)
     val docs = Tables.documents(s, dir)
     val grams = docs.select(col("doc_id"),
         explode(array_distinct(graft.plans.TextExpressions.tokenNGrams(

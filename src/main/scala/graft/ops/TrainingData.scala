@@ -26,11 +26,9 @@ object TrainingData {
     * Built on the codegen'd [[graft.plans.TokenNGrams]] kernel — the
     * built-in `transform(sequence, i -> concat_ws(slice))` formulation
     * is three nested CodegenFallback HOFs interpreted per gram. */
-  private def wordGrams(text: Column, n: Int): Column = {
-    SparkSession.getActiveSession.foreach(graft.plans.TextExpressions.register)
+  private def wordGrams(text: Column, n: Int): Column =
     graft.plans.TextExpressions.tokenNGrams(
       split(text, " "), n, emitWholeShortDoc = false)
-  }
 
   /** Benchmark decontamination: find corpus documents sharing any word
     * 3-gram with a held-out benchmark set (here: `doc_id % 101 == 0`,
@@ -245,8 +243,8 @@ object TrainingData {
         array_distinct(wordGrams(col("text"), 3)).as("grams"))
       .select(col("source"),
         size(col("grams")).cast(LongType).as("n_grams"),
-        call_function(graft.plans.TextExpressions.CountInSetFnName,
-          filter(col("grams"), g => probe(g)), typedlit(benchGrams))
+        graft.plans.TextExpressions.countInSet(
+          filter(col("grams"), g => probe(g)), benchGrams)
           .cast(LongType).as("n_hits"))
   }
 

@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -979,159 +978,67 @@ case class Poly31Hash(child: Expression) extends UnaryExpression {
 
 object TextExpressions {
 
-  val NGramsFnName = "graft_token_ngrams"
-  val Poly31FnName = "graft_poly31"
-  val NormalizeFnName = "graft_text_normalize"
-  val HashArrayFnName = "graft_xxhash_array"
-  val SimHashFnName = "graft_simhash64"
-  val CountInSetFnName = "graft_count_in_set"
-  val CharEntropyFnName = "graft_char_entropy"
-  val JaroWinklerFnName = "graft_jaro_winkler"
-  val DamerauFnName = "graft_damerau_levenshtein"
-  val MinhashSigFnName = "graft_minhash_signature"
-  val PolyMinhashFnName = "graft_poly_minhash"
-  val CellStatsFnName = "graft_cell_stats"
-  val CdcChunksFnName = "graft_cdc_chunks"
-
-  /** Idempotent per-session registration. n and the short-doc flag
-    * must be literals — they parameterize the generated code. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      NGramsFnName,
-      exprs => TokenNGrams(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Boolean]),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Poly31FnName,
-      exprs => Poly31Hash(exprs(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      HashArrayFnName,
-      exprs => XxHashArray(exprs(0),
-        exprs(1).eval() match {
-          case l: Long => l
-          case i: Int => i.toLong
-        }),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PolyMinhashFnName,
-      exprs => PolyMinhashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MinhashSigFnName,
-      exprs => MinhashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SimHashFnName,
-      exprs => SimHash64FromTokens(exprs(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      NormalizeFnName,
-      exprs => TextNormalize(exprs(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CountInSetFnName,
-      exprs => TokenCountInSet(exprs(0),
-        exprs(1).eval().asInstanceOf[
-          org.apache.spark.sql.catalyst.util.ArrayData]
-          .toArray[UTF8String](StringType).toSeq.map(_.toString)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CharEntropyFnName,
-      exprs => CharEntropyStats(exprs(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CellStatsFnName,
-      exprs => CellByteStats(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CdcChunksFnName,
-      exprs => CdcChunkStats(exprs(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      JaroWinklerFnName,
-      exprs => JaroWinkler(exprs(0), exprs(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DamerauFnName,
-      exprs => DamerauLevenshtein(exprs(0), exprs(1)),
-      "scala_udf")
-  }
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 
   /** Codegen'd unrestricted byte-level Damerau–Levenshtein (see
-    * [[DamerauLevenshtein]]). Requires [[register]]. */
+    * [[DamerauLevenshtein]]). */
   def damerauLevenshtein(a: Column, b: Column): Column =
-    call_function(DamerauFnName, a, b)
+    column(DamerauLevenshtein(expression(a), expression(b)))
 
-  /** Codegen'd byte-level Jaro–Winkler (see [[JaroWinkler]]). The
-    * session must have called [[register]] first. */
+  /** Codegen'd byte-level Jaro–Winkler (see [[JaroWinkler]]). */
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function(JaroWinklerFnName, a, b)
+    column(JaroWinkler(expression(a), expression(b)))
 
-  /** Codegen'd Unicode canonicalization (see [[TextNormalize]]). The
-    * session must have called [[register]] (query builders do). */
+  /** Codegen'd Unicode canonicalization (see [[TextNormalize]]). */
   def textNormalize(text: Column): Column =
-    call_function(NormalizeFnName, text)
+    column(TextNormalize(expression(text)))
 
-  /** Codegen'd word n-grams over a token-array column. The session
-    * must have called [[register]] (query builders do). */
+  /** Codegen'd word n-grams over a token-array column; n and the
+    * short-doc flag parameterize the generated code. */
   def tokenNGrams(tokens: Column, n: Int,
       emitWholeShortDoc: Boolean): Column =
-    call_function(NGramsFnName, tokens,
-      org.apache.spark.sql.functions.lit(n),
-      org.apache.spark.sql.functions.lit(emitWholeShortDoc))
+    column(TokenNGrams(expression(tokens), n, emitWholeShortDoc))
 
   /** Codegen'd rolling poly-31 string hash (see [[Poly31Kernel]]). */
   def poly31Hash(text: Column): Column =
-    call_function(Poly31FnName, text)
+    column(Poly31Hash(expression(text)))
 
   /** Codegen'd per-element xxhash64 over an array<string> column;
     * seed 42 = Spark's `xxhash64` default. */
   def xxhashArray(arr: Column, seed: Long = 42L): Column =
-    call_function(HashArrayFnName, arr,
-      org.apache.spark.sql.functions.lit(seed))
+    column(XxHashArray(expression(arr), seed))
 
   /** Codegen'd affine-family (portable, cross-engine) MinHash
     * signature over an array<long> column (see
     * [[PolyMinhashSignature]]). */
   def polyMinhash(hashes: Column, k: Int): Column =
-    call_function(PolyMinhashFnName, hashes,
-      org.apache.spark.sql.functions.lit(k))
+    column(PolyMinhashSignature(expression(hashes), k))
 
   /** Codegen'd k-permutation MinHash signature over an array<long>
     * shingle-hash column (see [[MinhashSignature]]). */
   def minhashSignature(hashes: Column, k: Int): Column =
-    call_function(MinhashSigFnName, hashes,
-      org.apache.spark.sql.functions.lit(k))
+    column(MinhashSignature(expression(hashes), k))
 
   /** Codegen'd 64-bit SimHash over a token-array column. */
   def simhash64(tokens: Column): Column =
-    call_function(SimHashFnName, tokens)
+    column(SimHash64FromTokens(expression(tokens)))
 
   /** Codegen'd count of tokens contained in a fixed string set. */
   def countInSet(tokens: Column, values: Seq[String]): Column =
-    call_function(CountInSetFnName, tokens,
-      org.apache.spark.sql.functions.array(
-        values.map(org.apache.spark.sql.functions.lit): _*))
+    column(TokenCountInSet(expression(tokens), values))
 
   /** Codegen'd per-document char-entropy stats
     * `[n_chars, n_distinct, term9_sum]`. */
   def charEntropyStats(text: Column): Column =
-    call_function(CharEntropyFnName, text)
+    column(CharEntropyStats(expression(text)))
 
   /** Codegen'd per-document cell stats (box-filter bins over the
     * code-point stream) `array<struct<cell, cnt, sum>>`. */
   def cellStats(text: Column, cells: Int): Column =
-    call_function(CellStatsFnName, text,
-      org.apache.spark.sql.functions.lit(cells))
+    column(CellByteStats(expression(text), cells))
 
   /** Codegen'd per-document CDC chunk stats
     * `[n_chunks, sum_len, max_chunk, fp_sum]`. */
   def cdcChunkStats(text: Column): Column =
-    call_function(CdcChunksFnName, text)
+    column(CdcChunkStats(expression(text)))
 }

@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native (whole-stage-codegen) vector kernels.
@@ -25,9 +24,10 @@ import org.apache.spark.sql.types._
   *
   * Array elements are assumed non-null (enforced upstream by the
   * embedding schema); a null ARRAY still yields null via
-  * `nullSafeEval`/`nullSafeCodeGen`. Exposed through the session
-  * `FunctionRegistry` + `call_function` (public API; the
-  * Column↔Expression bridge is private[sql] in Spark 4).
+  * `nullSafeEval`/`nullSafeCodeGen`. The typed helpers in
+  * [[VectorExpressions]] wrap the kernel as a `Column` through
+  * `GraftSqlBridge.column` (no function-registry entry); pure SQL
+  * reaches it as `graft_vector_dot` via [[graft.GraftExtensions]].
   */
 case class VectorDot(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -227,38 +227,21 @@ case class VectorQuantizeInt8(left: Expression, right: Expression)
 
 object VectorExpressions {
 
-  val FnName = "graft_vector_dot"
-  val L2FnName = "graft_vector_l2sq"
-  val MaxAbsFnName = "graft_vector_max_abs"
-  val QuantizeFnName = "graft_vector_quantize_int8"
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => VectorDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      L2FnName, exprs => VectorL2Sq(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MaxAbsFnName, exprs => VectorMaxAbs(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      QuantizeFnName,
-      exprs => VectorQuantizeInt8(exprs(0), exprs(1)), "scala_udf")
-  }
-
-  /** Codegen'd dot product over array<double> columns. The session
-    * must have called [[register]] (query builders do). */
+  /** Codegen'd dot product over array<double> columns. */
   def vectorDot(a: Column, b: Column): Column =
-    call_function(FnName, a, b)
+    column(VectorDot(expression(a), expression(b)))
 
   /** Codegen'd squared euclidean distance over array<double>. */
   def vectorL2Sq(a: Column, b: Column): Column =
-    call_function(L2FnName, a, b)
+    column(VectorL2Sq(expression(a), expression(b)))
 
   /** Codegen'd max |element| over array<double>. */
   def vectorMaxAbs(a: Column): Column =
-    call_function(MaxAbsFnName, a)
+    column(VectorMaxAbs(expression(a)))
 
   /** Codegen'd symmetric int8 quantization codes. */
   def vectorQuantizeInt8(a: Column, scale: Column): Column =
-    call_function(QuantizeFnName, a, scale)
+    column(VectorQuantizeInt8(expression(a), expression(scale)))
 }

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.{array, lit}
 
 /** GraftExtensions: the spark.sql.extensions installation path makes
-  * every graft kernel callable from pure SQL on a session that never
-  * ran the imperative register() calls. */
+  * every graft kernel callable from pure SQL; the Scala helpers and
+  * gate builders need no function-registry entry. */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("injected functions resolve and evaluate from pure SQL") {
@@ -46,6 +47,47 @@ class GraftExtensionsSpec extends SparkSpec {
         .head().getString(0)
       assert(norm == "hello world")
     }
+  }
+
+  test("the extension resolves all 17 names; each SQL builder " +
+      "evaluates to the same kernel as its typed Scala helper") {
+    import graft.plans.TextExpressions._
+    val text = "The quick brown fox jumps over the lazy dog. " * 6
+    val hashes = array(lit(3L), lit(-7L), lit(11L), lit(42L))
+    val cases: Seq[(String, Column)] = Seq(
+      "graft_poly31('héllo wörld')" -> poly31Hash(lit("héllo wörld")),
+      s"graft_char_entropy('$text')" -> charEntropyStats(lit(text)),
+      "graft_jaro_winkler('MARTHA', 'MARHTA')" ->
+        jaroWinkler(lit("MARTHA"), lit("MARHTA")),
+      "graft_damerau_levenshtein('ca', 'abc')" ->
+        damerauLevenshtein(lit("ca"), lit("abc")),
+      "graft_minhash_signature(array(3L, -7L, 11L, 42L), 8)" ->
+        minhashSignature(hashes, 8),
+      "graft_poly_minhash(array(3L, -7L, 11L, 42L), 8)" ->
+        polyMinhash(hashes, 8),
+      s"graft_cell_stats('$text', 4)" -> cellStats(lit(text), 4),
+      s"graft_cdc_chunks('$text')" -> cdcChunkStats(lit(text)))
+    // typed helpers on the shared stock session (no extension)
+    val expected = cases.map { case (_, c) =>
+      spark.range(1).select(c).head().get(0) }
+
+    withBareSession(_.withExtensions(new GraftExtensions())) { s2 =>
+      val names = GraftExtensions.builders.map(_._1)
+      assert(names.size == 17 && names.distinct.size == 17, names)
+      names.foreach(n => assert(s2.catalog.functionExists(n), n))
+      cases.zip(expected).foreach { case ((call, _), want) =>
+        assert(s2.sql(s"SELECT $call").head().get(0) == want, call)
+      }
+    }
+  }
+
+  test("gate builders leave the session's function registry alone") {
+    val sf = "/root/testdata/sf0.001"
+    Seq("sim_hard_negatives", "dedup_memorization_risk", "text_lang_id")
+      .foreach(g => SparkEntry.queries(g)(spark, sf).collect())
+    val graftFns = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_"))
+    assert(graftFns.isEmpty, graftFns)
   }
 
   private def builtinHash(s: SparkSession, v: String): Long =

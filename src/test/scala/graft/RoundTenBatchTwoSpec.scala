@@ -17,7 +17,6 @@ class RoundTenBatchTwoSpec extends SparkSpec {
       "zero joins, per-doc counts a scan-side projection; batch-mode " +
       "totals equal a direct batch census") {
     graft.streaming.EventStreams.withRocksDb(spark) {
-      graft.plans.TextExpressions.register(spark)
       val docs = Tables.documents(spark, sf)
       val corpus = docs.filter(col("doc_id") % 101 =!= 0)
       // benchmark artifacts exactly as the gate builds them

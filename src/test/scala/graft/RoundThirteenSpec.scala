@@ -16,7 +16,6 @@ class RoundThirteenSpec extends SparkSpec {
   /** 2-D fixture: cosines to the query (1,0) rise along the chain
     * n1 → n2 → n3 → n4, node 99 is isolated (no adjacency rows). */
   private def walkFixture() = {
-    graft.plans.VectorExpressions.register(spark)
     def nm(v: Seq[Double]) = math.sqrt(v.map(x => x * x).sum)
     val vecs = Seq(
       1L -> Seq(0.0, 1.0),      // cos 0

@@ -23,7 +23,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("matches the HOF formulation exactly (skip-short convention)") {
     import spark.implicits._
-    TextExpressions.register(spark)
     for (n <- Seq(1, 2, 3, 5)) {
       val df = fixtures.toDF("text")
       val got = df.select(
@@ -37,7 +36,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("whole-short-doc convention matches legacy shingles semantics") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val df = fixtures.toDF("text")
     val n = 3
     val toks = split(col("text"), " ")
@@ -53,7 +51,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("xxhashArray matches per-element builtin xxhash64") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val df = fixtures.toDF("text")
     val toks = split(col("text"), " ")
     val got = df.select(TextExpressions.xxhashArray(toks).as("h")).collect()
@@ -64,7 +61,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("simhash64 kernel = per-bit majority vote of builtin xxhash64") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val df = fixtures.filter(_.nonEmpty).toDF("text")
     val toks = split(col("text"), " ")
     val got = df.select(TextExpressions.simhash64(toks).as("sh"))
@@ -82,7 +78,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("countInSet matches size(filter(isin)) builtin formulation") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val df = fixtures.toDF("text")
     val toks = split(col("text"), " ")
     val set = Seq("a", "b", "the", "double")
@@ -96,7 +91,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("interpreted eval path agrees with codegen") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val df = fixtures.toDF("text")
     val expr = TextExpressions.tokenNGrams(split(col("text"), " "), 2,
       emitWholeShortDoc = true).as("g")
@@ -122,7 +116,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("textNormalize: accents, composition forms, case, whitespace, null") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val cases = Seq(
       "H\u00e9llo  W\u00f6rld",            // composed accents + double space
       "He\u0301llo Wo\u0308rld",           // decomposed base + combining mark
@@ -166,7 +159,6 @@ class TextExpressionsSpec extends SparkSpec {
       .toSeq == Seq(3L, 2L, term9(2, 3) + term9(1, 3)))
     // Codegen path agrees with the kernel.
     import spark.implicits._
-    TextExpressions.register(spark)
     val viaExpr = Seq("aab").toDF("text")
       .select(TextExpressions.charEntropyStats(col("text")))
       .as[Seq[Long]].collect()(0)
@@ -193,7 +185,6 @@ class TextExpressionsSpec extends SparkSpec {
     assert(jw("ABQQQQQQ", "ABZZZZZZZZZZ") === 0.47222222222222215)
     // codegen path agrees with the kernel
     import spark.implicits._
-    TextExpressions.register(spark)
     val viaJw = Seq(("MARTHA", "MARHTA")).toDF("a", "b")
       .select(TextExpressions.jaroWinkler(col("a"), col("b")))
       .as[Double].collect()(0)
@@ -217,7 +208,6 @@ class TextExpressionsSpec extends SparkSpec {
     // byte-level: É is two UTF-8 bytes (DuckDB parity)
     assert(dl("ÉA", "EA") === 2L)
     import spark.implicits._
-    TextExpressions.register(spark)
     val via = Seq(("ca", "abc")).toDF("a", "b")
       .select(TextExpressions.damerauLevenshtein(col("a"), col("b")))
       .as[Long].collect()(0)
@@ -226,7 +216,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("minhash signature kernel is bit-identical to the HOF formulation") {
     import spark.implicits._
-    TextExpressions.register(spark)
     // real corpus docs + edge shapes (empty set is guarded by callers,
     // but the kernel must still mirror the HOF's k nulls)
     val docs = graft.ops.DocCorpus
@@ -265,7 +254,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("poly minhash kernel matches the explode/groupBy-min affine formulation") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val xs = Seq(
       Seq(0L, 1L, 999999999L),
       Seq(123456789L),

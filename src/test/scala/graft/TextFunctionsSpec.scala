@@ -73,7 +73,6 @@ class TextFunctionsSpec extends SparkSpec {
   test("heavy hitters: sketch-independent exactness and joinless probe") {
     import org.apache.spark.sql.functions.{count => fcount}
     val sf = "/root/testdata/sf0.001"
-    graft.plans.TextExpressions.register(spark)
     val exact = {
       val grams = Tables.documents(spark, sf).select(explode(
         graft.plans.TextExpressions.tokenNGrams(
