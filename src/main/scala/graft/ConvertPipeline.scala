@@ -1,29 +1,39 @@
 package graft
 
+import java.io.{FileNotFoundException, IOException}
 import java.nio.file.{Files, Paths}
 import java.util.Properties
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
-import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.schema.SchemaLoader
 import graft.sources.{CsvIngest, ParquetSink, S3Conf}
 
 /** EP1 — the reference's end-to-end batch product (SURVEY.md §3):
   * properties config → JSON schema → discover CSVs → typed convert →
-  * Snappy parquet → optional S3 upload. Re-expressed as one
-  * declarative Spark pipeline:
+  * Snappy parquet → optional S3 upload:
   *
-  *   `spark.read.csv(dir)` → cast projection → `write.parquet(out)`
-  *   [→ `write.parquet("s3a://bucket/prefix")`]
+  *   discover (Hadoop FileSystem listing) → `spark.read.csv` → cast
+  *   projection → `write.parquet(out)` [→ byte copy of every converted
+  *   file to `s3a://bucket/prefix`]
   *
-  * The reference's 4-thread file pool (X1), temp-file + atomic rename
-  * (K2) and 4-thread S3 putObject pool (X2) are all replaced by Spark
-  * task parallelism and the commit protocol.
+  * The reference's 4-thread file pool (X1) and 4-thread S3 putObject
+  * pool (X2) become a bounded pool per call (at most
+  * `defaultParallelism` threads): [[convertChecked]] runs its per-file
+  * writes on it side by side, [[upload]] its per-file copies. The
+  * temp-file + atomic rename (K2) is Spark's commit protocol plus the
+  * staging move of [[ParquetSink.writeSingleFile]]. Upload sends the
+  * converted files byte for byte under their 1:1 names, as
+  * `S3Uploader` does: no row is decoded or encoded twice.
   *
   * Property keys mirror the reference's `application.properties:1-8`
   * (`SourceFilePath`, `ParquetFilePath`, `bucketName`, `prefix`,
@@ -78,17 +88,58 @@ object ConvertPipeline extends Logging {
   }
 
   /** Discover `*.csv` under the source dir; error when none — the
-    * reference's empty-dir contract (`Main.java:34-40`). */
-  def discoverCsvs(dir: String): Seq[String] = {
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p))
-      throw new java.io.FileNotFoundException(s"source dir not found: $dir")
-    val csvs = Files.list(p).iterator().asScala
-      .filter(_.getFileName.toString.toLowerCase.endsWith(".csv"))
-      .map(_.toString).toSeq.sorted
+    * reference's empty-dir contract (`Main.java:34-40`). Lists through
+    * the Hadoop FileSystem API, so `s3a://` and HDFS directories work
+    * like local ones (with the active session's Hadoop settings). */
+  def discoverCsvs(dir: String): Seq[String] =
+    listCsvs(SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .fold(new Configuration())(_.sparkContext.hadoopConfiguration), dir)
+
+  private def listCsvs(conf: Configuration, dir: String): Seq[String] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    val isDir = try fs.getFileStatus(root).isDirectory
+      catch { case _: FileNotFoundException => false }
+    if (!isDir)
+      throw new FileNotFoundException(s"source dir not found: $dir")
+    val csvs = fs.listStatus(root).toSeq
+      .filter(st => st.isFile &&
+        st.getPath.getName.toLowerCase.endsWith(".csv"))
+      .map(st => new Path(root, st.getPath.getName).toString).sorted
     if (csvs.isEmpty)
-      throw new java.io.FileNotFoundException(s"no CSV files in $dir")
+      throw new FileNotFoundException(s"no CSV files in $dir")
     csvs
+  }
+
+  /** The source CSVs; creates the output dir. */
+  private def discover(spark: SparkSession, cfg: Config): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val csvs = listCsvs(conf, cfg.sourceDir)
+    val out = new Path(cfg.parquetDir)
+    if (!out.getFileSystem(conf).mkdirs(out))
+      throw new IOException(s"cannot create ${cfg.parquetDir}")
+    csvs
+  }
+
+  /** The 1:1 target of `csv` (P9): x.csv → `parquetDir/x.parquet`. */
+  private def targetOf(cfg: Config, csv: String): String =
+    s"${cfg.parquetDir}/" +
+      new Path(csv).getName.replaceAll("(?i)\\.csv$", ".parquet")
+
+  /** Runs `tasks` side by side on a pool of at most
+    * `defaultParallelism` threads owned by this call, and returns each
+    * task's outcome, in order, once EVERY task has settled — so no
+    * write or copy is still running when a caller rethrows. */
+  private def settled[T](spark: SparkSession,
+      tasks: Seq[() => T]): Seq[Try[T]] = {
+    val pool = Executors.newFixedThreadPool(math.max(1,
+      math.min(tasks.size, spark.sparkContext.defaultParallelism)))
+    try tasks
+      .map(t => pool.submit(new Callable[T] { def call(): T = t() }))
+      .map(f => try Success(f.get())
+        catch { case e: ExecutionException => Failure(e.getCause) })
+    finally pool.shutdown()
   }
 
   /** Run the conversion stage. Returns the produced parquet targets. */
@@ -98,16 +149,13 @@ object ConvertPipeline extends Logging {
   /** [[convert]]'s produced targets, and the sources that failed. */
   private def convertReporting(spark: SparkSession,
       cfg: Config): (Seq[String], Seq[String]) = {
-    val csvs = discoverCsvs(cfg.sourceDir)
-    Files.createDirectories(Paths.get(cfg.parquetDir))
+    val csvs = discover(spark, cfg)
     if (cfg.preserveFileNames) {
       // 1:1 naming parity (P9): x.csv → x.parquet, one small job per
       // file; a failure converts that file only (reference X1
       // isolation), others continue.
       val outcomes = csvs.map { csv =>
-        val name = Paths.get(csv).getFileName.toString
-          .replaceAll("(?i)\\.csv$", ".parquet")
-        val target = s"${cfg.parquetDir}/$name"
+        val target = targetOf(cfg, csv)
         csv -> (try {
           val df = CsvIngest.read(spark, csv, cfg.schema)
           ParquetSink.writeSingleFile(df, target)
@@ -130,56 +178,114 @@ object ConvertPipeline extends Logging {
   /** Conversion with row-level quarantine: bad rows (malformed lines,
     * failed strict casts) are diverted to `cfg.quarantineDir` with
     * their raw cells + source file + reason, good rows written as
-    * usual. One distributed job regardless of file count; per-file
-    * accounting is a second aggregate over the pruned (raw-cells-free)
-    * scan. The driver-side collect is per-FILE metadata (like the
-    * directory listing itself), not per-row data. */
+    * usual.
+    *
+    * Each CSV is parsed once. The classified frame is cached
+    * (MEMORY_AND_DISK) with the raw cells kept only on bad rows, the
+    * only rows that need them; the quarantine write is the first
+    * action and fills the cache, and the cache is released before the
+    * call returns, on failure too. With `preserveFileNames` each
+    * file's 1:1 write reads the cache filtered to its source, the
+    * writes run side by side, and the file's rows and quarantined rows
+    * arrive with its write through an [[Observation]] — no extra job.
+    * Every write settles before the first failure is rethrown, which
+    * fails the call. The bulk path writes the good rows once and
+    * counts per file with one aggregate over the cached columns. The
+    * driver-side results are per-FILE metadata (like the directory
+    * listing itself), not per-row data. */
   def convertChecked(spark: SparkSession, cfg: Config): Seq[FileReport] = {
     val qDir = cfg.quarantineDir.getOrElse(
       throw new IllegalArgumentException("quarantineDir not set"))
-    val csvs = discoverCsvs(cfg.sourceDir)
-    Files.createDirectories(Paths.get(cfg.parquetDir))
-    val checked = CsvIngest.readChecked(spark, csvs, cfg.schema)
-    val bad = CsvIngest.badRows(checked, cfg.schema)
-    bad.write.mode("overwrite")
-      .option("compression", "snappy").parquet(qDir)
-    if (cfg.preserveFileNames) {
-      csvs.foreach { csv =>
-        val name = Paths.get(csv).getFileName.toString
-          .replaceAll("(?i)\\.csv$", ".parquet")
-        val good = CsvIngest.goodRows(
-          CsvIngest.readChecked(spark, Seq(csv), cfg.schema), cfg.schema)
-        ParquetSink.writeSingleFile(good, s"${cfg.parquetDir}/$name")
+    val csvs = discover(spark, cfg)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // `_src_file` holds the scan's qualified, URL-encoded file URI.
+    def srcKey(csv: String): String = {
+      val p = new Path(csv)
+      p.getFileSystem(conf).makeQualified(p).toUri.toString
+    }
+    val reason = col(CsvIngest.ReasonCol)
+    val raws = cfg.schema.fieldNames.map(CsvIngest.rawName).toSet
+    val full = CsvIngest.readChecked(spark, csvs, cfg.schema)
+    val checked = full.select(full.columns.toIndexedSeq.map(c =>
+      if (raws(c)) when(reason.isNotNull, col(c)).as(c) else col(c)): _*)
+    checked.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      CsvIngest.badRows(checked, cfg.schema).write.mode("overwrite")
+        .option("compression", "snappy").parquet(qDir)
+      val reports = if (cfg.preserveFileNames) {
+        val outcomes = settled(spark, csvs.map { csv => () =>
+          val target = targetOf(cfg, csv)
+          val seen = Observation()
+          val file = checked.filter(col(CsvIngest.SrcFileCol) === srcKey(csv))
+            .observe(seen, count(lit(1)).as("rows"),
+              count(reason).as("quarantined"))
+          ParquetSink.writeSingleFile(
+            CsvIngest.goodRows(file, cfg.schema), target)
+          val m = seen.get
+          FileReport(csv, target, m("rows").asInstanceOf[Long],
+            m("quarantined").asInstanceOf[Long])
+        })
+        outcomes.collect { case Failure(e) => e } match {
+          case first +: rest =>
+            rest.foreach(first.addSuppressed)
+            throw first
+          case _ => outcomes.map(_.get)
+        }
+      } else {
+        ParquetSink.write(
+          CsvIngest.goodRows(checked, cfg.schema), cfg.parquetDir)
+        val counts = checked
+          .groupBy(col(CsvIngest.SrcFileCol))
+          .agg(count(lit(1)), count(reason))
+          .collect()
+          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+        csvs.map { csv =>
+          val (rows, q) = counts.getOrElse(srcKey(csv), (0L, 0L))
+          FileReport(csv, cfg.parquetDir, rows, q)
+        }
       }
-    } else {
-      ParquetSink.write(
-        CsvIngest.goodRows(checked, cfg.schema), cfg.parquetDir)
-    }
-    val counts = checked
-      .groupBy(col(CsvIngest.SrcFileCol))
-      .agg(count(lit(1)).as("rows"),
-        count(col(CsvIngest.ReasonCol)).as("quarantined"))
-      .collect()
-      .map(r => r.getString(0).replaceFirst("^file:/+", "/") ->
-        (r.getLong(1), r.getLong(2))).toMap
-    csvs.map { csv =>
-      val (rows, q) = counts.getOrElse(csv, (0L, 0L))
-      val name = Paths.get(csv).getFileName.toString
-        .replaceAll("(?i)\\.csv$", ".parquet")
-      val target = if (cfg.preserveFileNames)
-        s"${cfg.parquetDir}/$name" else cfg.parquetDir
-      if (q > 0) logWarning(s"$csv: quarantined $q of $rows row(s) → $qDir")
-      FileReport(csv, target, rows, q)
-    }
+      reports.filter(_.quarantined > 0).foreach(r => logWarning(
+        s"${r.source}: quarantined ${r.quarantined} of ${r.rows} row(s) → $qDir"))
+      reports
+    } finally checked.unpersist(blocking = true)
   }
 
-  /** Upload stage (K3): re-write the converted parquet to the
-    * configured s3a:// location. */
+  /** Upload stage (K3), the reference's `S3Uploader`: copy every
+    * converted file (each non-hidden regular file directly under
+    * `parquetDir`) byte for byte to the configured s3a:// location
+    * under its own name (P9), side by side on a bounded pool, through
+    * the Hadoop FileSystem API. The target is overwritten; `_SUCCESS`
+    * is written last. When any copy fails, every copy settles first,
+    * then one IOException names the files that failed (X2). */
   def upload(spark: SparkSession, cfg: Config): Option[String] =
     cfg.s3.map { s3 =>
       S3Conf.configure(spark, s3)
-      val df = spark.read.parquet(cfg.parquetDir)
-      ParquetSink.write(df, s3.uri)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val src = new Path(cfg.parquetDir)
+      val srcFs = src.getFileSystem(conf)
+      val dst = new Path(s3.uri)
+      val dstFs = dst.getFileSystem(conf)
+      val files = srcFs.listStatus(src).toSeq.filter(_.isFile)
+        .map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      dstFs.delete(dst, true)
+      dstFs.mkdirs(dst)
+      val outcomes = settled(spark, files.map { f => () =>
+        if (!FileUtil.copy(srcFs, f, dstFs, new Path(dst, f.getName),
+            false, true, conf))
+          throw new IOException(s"copy of $f returned false")
+      })
+      val failed = files.zip(outcomes).collect { case (f, Failure(e)) =>
+        (f.getName, e)
+      }
+      if (failed.nonEmpty) {
+        val e = new IOException(s"upload to ${s3.uri} failed for " +
+          s"${failed.size} of ${files.size} file(s): " +
+          failed.map(_._1).mkString(", "), failed.head._2)
+        failed.tail.foreach(f => e.addSuppressed(f._2))
+        throw e
+      }
+      dstFs.create(new Path(dst, "_SUCCESS"), true).close()
       s3.uri
     }
 

@@ -48,7 +48,9 @@ object ParquetSink {
 
   /** Write exactly one parquet FILE at `targetFile` (e.g.
     * `/out/sample1.parquet`), reproducing the reference's one-in →
-    * one-out naming. */
+    * one-out naming. These are the files `ConvertPipeline.upload`
+    * copies byte for byte. The staging move is `java.nio`, so the
+    * target must be a local path. */
   def writeSingleFile(df: DataFrame, targetFile: String): Unit = {
     val staging = targetFile + ".staging"
     write(df.coalesce(1), staging)

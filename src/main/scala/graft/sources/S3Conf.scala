@@ -7,14 +7,17 @@ import org.apache.spark.sql.SparkSession
 /** S3 sink configuration (SURVEY.md §2.3 K3): maps the reference's
   * `application.properties` keys (`S3Uploader.java:42-48` — endpoint
   * override, static credentials, region, bucket/prefix) onto the
-  * public `fs.s3a.*` Hadoop connector settings, so
-  * `df.write.parquet("s3a://bucket/prefix")` replaces the hand-rolled
-  * 4-thread `putObject` pool (X2) with Spark's parallel committer.
+  * public `fs.s3a.*` Hadoop connector settings. `ConvertPipeline.upload`
+  * then copies the converted files byte for byte to
+  * `s3a://bucket/prefix` through the Hadoop FileSystem API, on a
+  * bounded pool in place of the reference's 4-thread `putObject` pool
+  * (X2); the committer settings serve any Spark job that writes to an
+  * s3a URI directly (e.g. a bulk `ParquetSink.write`).
   *
-  * No live S3 exists in the test container, so this is exercised at
-  * the configuration level (settings land in the session's
-  * hadoopConfiguration) — the write path itself is the same
-  * `ParquetSink.write` used for local files, pointed at an s3a URI.
+  * The tests have no live S3: they check the settings at the
+  * configuration level (they land in the session's
+  * hadoopConfiguration) and run the copy against an `s3a://`
+  * stand-in over the local disk.
   */
 object S3Conf {
 

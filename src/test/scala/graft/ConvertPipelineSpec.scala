@@ -132,7 +132,7 @@ class ConvertPipelineSpec extends SparkSpec {
       assert(back.count() == 4)
       assert(back.columns.toSeq == Seq("id", "name", "age"))
       // objects physically landed under the bucket-mapped local root,
-      // committed (_SUCCESS) by the parquet job, not a client-side copy
+      // marked done (_SUCCESS) by the upload after its last file copy
       assert(Files.exists(Paths.get(bucketRoot, "upload", "_SUCCESS")))
     } finally hc.unset("fs.s3a.impl")
   }

@@ -1,0 +1,190 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
+import java.util.IdentityHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.sources.{CsvIngest, S3Conf}
+
+/** `ConvertPipeline.convertChecked` parses each CSV once, its observed
+  * per-file counts equal a recount, its cache never outlives the call,
+  * and `upload` copies the converted files byte for byte. */
+class ConvertSinglePassSpec extends SparkSpec {
+
+  private val schema = graft.schema.SchemaLoader.fromJson(
+    """{"fields": [
+      |  {"name": "id", "type": "INT32", "repetition": "REQUIRED"},
+      |  {"name": "name", "type": "BINARY", "logicalType": "STRING"},
+      |  {"name": "age", "type": "INT32"}
+      |]}""".stripMargin)
+
+  /** Three files: good rows everywhere, a failed cast in a.csv, a
+    * malformed (over-long) line and a short row in b.csv. */
+  private def mkCsvDir(): String = {
+    val dir = tmpDir("single_src")
+    def put(name: String, body: String): Unit =
+      Files.write(Paths.get(dir, name), body.getBytes("UTF-8"))
+    put("a.csv", "id,name,age\n1,Alice,25\n2,Bob,NaN\n3,Cara,35")
+    put("b.csv", "id,name,age\n4,Dan,40\n5,Eve,41,extra\n6,Fay")
+    put("c.csv", "id,name,age\n7,Gus,50\n8,Ivy,52")
+    put("notes.txt", "ignored")
+    dir
+  }
+
+  private def config(src: String, preserve: Boolean = true) =
+    ConvertPipeline.Config(src, tmpDir("single_out"), schema,
+      preserveFileNames = preserve,
+      quarantineDir = Some(tmpDir("single_bad") + "/quarantine"))
+
+  /** Counts the executed plans during which a CSV scan produced rows.
+    * A scan that feeds a cache is reached through the cached relation;
+    * it counts for the plan that filled the cache, not for the plans
+    * that read it afterwards (its row metric no longer moves). */
+  private class CsvScanCounter extends QueryExecutionListener {
+    private val rowsSeen = new IdentityHashMap[FileSourceScanExec, Long]()
+    @volatile var plans = 0
+
+    private def csvScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case s: FileSourceScanExec
+          if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => Seq(s)
+      case a: AdaptiveSparkPlanExec => csvScans(a.executedPlan)
+      case q: QueryStageExec => csvScans(q.plan)
+      case m: InMemoryTableScanExec => csvScans(m.relation.cachedPlan)
+      case other => (other.children ++ other.subqueries).flatMap(csvScans)
+    }
+
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit = synchronized {
+      val moved = csvScans(qe.executedPlan).distinct.map { s =>
+        val rows = s.metrics("numOutputRows").value
+        val before = Option(rowsSeen.put(s, rows)).getOrElse(0L)
+        rows > before
+      }
+      if (moved.contains(true)) plans += 1
+    }
+
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+  }
+
+  /** Execution listeners hear events asynchronously, in order: once an
+    * observed marker query's metrics arrive, every earlier event has
+    * been delivered. */
+  private def drainListeners(): Unit = {
+    val marker = Observation()
+    spark.range(1).observe(marker, count(lit(1))).collect()
+    marker.get
+  }
+
+  private def csvScanPlans(f: => Unit): Int = {
+    val counter = new CsvScanCounter
+    spark.listenerManager.register(counter)
+    try { f; drainListeners(); counter.plans }
+    finally spark.listenerManager.unregister(counter)
+  }
+
+  private def persisted: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("each CSV is parsed once: one executed plan per call scans CSV") {
+    val src = mkCsvDir()
+    for (preserve <- Seq(true, false)) {
+      val cfg = config(src, preserve)
+      assert(csvScanPlans(ConvertPipeline.convertChecked(spark, cfg)) == 1,
+        s"preserveFileNames=$preserve")
+    }
+  }
+
+  test("observed counts equal a recount; quarantine holds exactly the bad rows") {
+    val src = mkCsvDir()
+    val before = persisted
+    for (preserve <- Seq(true, false)) {
+      val cfg = config(src, preserve)
+      val reports = ConvertPipeline.convertChecked(spark, cfg)
+      assert(persisted == before, "a cache outlived the call")
+      val csvs = ConvertPipeline.discoverCsvs(src)
+      assert(reports.map(_.source) == csvs)
+      assert(reports.map(r => (r.rows, r.quarantined)) ==
+        Seq((3L, 1L), (3L, 1L), (2L, 0L)))
+      // A pruned CSV parse does not see an over-long line, so the
+      // recount parses every column, as the quarantine write does.
+      GraftSession.withConf(spark,
+          "spark.sql.csv.parser.columnPruning.enabled" -> "false") {
+        for (r <- reports) {
+          val fresh = CsvIngest.readChecked(spark, Seq(r.source), schema)
+          assert(r.rows == fresh.count(), r.source)
+          assert(r.quarantined ==
+            fresh.filter(col(CsvIngest.ReasonCol).isNotNull).count(), r.source)
+        }
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val all = CsvIngest.readChecked(spark, csvs, schema)
+      assert(rows(spark.read.parquet(cfg.quarantineDir.get)) ==
+        rows(CsvIngest.badRows(all, schema)))
+      if (preserve) for (r <- reports)
+        assert(rows(spark.read.parquet(r.target)) == rows(CsvIngest.goodRows(
+          CsvIngest.readChecked(spark, Seq(r.source), schema), schema)))
+      else
+        assert(rows(spark.read.parquet(cfg.parquetDir)) ==
+          rows(CsvIngest.goodRows(all, schema)))
+    }
+  }
+
+  test("a failed write fails the call after every write settled; no cache is left") {
+    val cfg = config(mkCsvDir())
+    // A non-empty directory at b's target makes its move fail.
+    Files.createDirectories(Paths.get(cfg.parquetDir, "b.parquet", "occupied"))
+    val before = persisted
+    intercept[java.io.IOException] {
+      ConvertPipeline.convertChecked(spark, cfg)
+    }
+    assert(persisted == before, "a cache outlived the failed call")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    for (name <- Seq("a.parquet", "c.parquet"))
+      assert(Files.isRegularFile(Paths.get(cfg.parquetDir, name)), name)
+  }
+
+  test("discovery and upload go through the Hadoop FileSystem API; upload is a byte copy") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.s3a.impl", classOf[MockS3AFileSystem].getName)
+    try {
+      val src = mkCsvDir()
+      val listed = ConvertPipeline.discoverCsvs(s"s3a://copy-bucket$src")
+      assert(listed == Seq("a", "b", "c").map(n => s"s3a://copy-bucket$src/$n.csv"))
+
+      val bucketRoot = tmpDir("copy_bucket")
+      val key = bucketRoot.stripPrefix("/") + "/up"
+      val remote = Paths.get(bucketRoot, "up")
+      Files.createDirectories(remote)
+      Files.write(remote.resolve("stale.parquet"), "old".getBytes("UTF-8"))
+      val cfg = config(src).copy(
+        s3 = Some(S3Conf.S3Settings(bucket = "copy-bucket", prefix = key)))
+      ConvertPipeline.convertChecked(spark, cfg)
+      assert(ConvertPipeline.upload(spark, cfg).contains(s"s3a://copy-bucket/$key"))
+
+      def sha256(p: java.nio.file.Path): String =
+        MessageDigest.getInstance("SHA-256").digest(Files.readAllBytes(p))
+          .map("%02x".format(_)).mkString
+      def names(dir: java.nio.file.Path): Seq[String] =
+        Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+          .toSeq.sorted
+      val local = Paths.get(cfg.parquetDir)
+      assert(names(local) == Seq("a.parquet", "b.parquet", "c.parquet"))
+      assert(names(remote) == "_SUCCESS" +: names(local))
+      for (n <- names(local))
+        assert(sha256(remote.resolve(n)) == sha256(local.resolve(n)), n)
+      assert(spark.read.parquet(s"s3a://copy-bucket/$key").count() == 6)
+    } finally hc.unset("fs.s3a.impl")
+  }
+}
