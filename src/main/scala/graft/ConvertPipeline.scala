@@ -10,7 +10,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -28,12 +28,14 @@ import graft.sources.{CsvIngest, ParquetSink, S3Conf}
   *
   * The reference's 4-thread file pool (X1) and 4-thread S3 putObject
   * pool (X2) become a bounded pool per call (at most
-  * `defaultParallelism` threads): [[convertChecked]] runs its per-file
-  * writes on it side by side, [[upload]] its per-file copies. The
-  * temp-file + atomic rename (K2) is Spark's commit protocol plus the
-  * staging move of [[ParquetSink.writeSingleFile]]. Upload sends the
-  * converted files byte for byte under their 1:1 names, as
-  * `S3Uploader` does: no row is decoded or encoded twice.
+  * `defaultParallelism` threads): the one conversion engine behind
+  * [[convert]], [[convertChecked]] and [[run]] parses every CSV once
+  * and runs the per-file writes on it side by side, [[upload]] its
+  * per-file copies. The temp-file + atomic rename (K2) is Spark's
+  * commit protocol plus the staging move of
+  * [[ParquetSink.writeSingleFile]]. Upload sends the converted files
+  * byte for byte under their 1:1 names, as `S3Uploader` does: no row
+  * is decoded or encoded twice.
   *
   * Property keys mirror the reference's `application.properties:1-8`
   * (`SourceFilePath`, `ParquetFilePath`, `bucketName`, `prefix`,
@@ -42,9 +44,10 @@ import graft.sources.{CsvIngest, ParquetSink, S3Conf}
   *
   * Error-isolation divergence (documented, SURVEY §7 step 2): the
   * reference silently skips a whole file on one bad row; here bad
-  * *values* become NULLs (PERMISSIVE) and the file survives. Strict
-  * per-file isolation is available via `preserveFileNames = true`,
-  * which runs one small job per input file (reference scale only).
+  * *values* become NULLs (PERMISSIVE) and the file survives, or, with
+  * a `quarantineDir`, bad rows are held back there. With
+  * `preserveFileNames = true` a failed write fails only its own file
+  * (X1); a failure of the shared parse fails the whole call.
   */
 object ConvertPipeline extends Logging {
 
@@ -56,10 +59,10 @@ object ConvertPipeline extends Logging {
       s3: Option[S3Conf.S3Settings] = None,
       quarantineDir: Option[String] = None)
 
-  /** Per-file conversion report (quarantine mode): input rows, rows
-    * quarantined, produced target. The reference's per-file abort
-    * (`CsvToParquetConverter.java:204-213`) becomes per-ROW isolation
-    * with a loud per-file account of what was held back. */
+  /** Per-file conversion report: input rows, rows quarantined (0
+    * without a `quarantineDir`), produced target. The reference's
+    * per-file abort (`CsvToParquetConverter.java:204-213`) becomes
+    * per-ROW isolation with a loud account of what was held back. */
   case class FileReport(source: String, target: String,
       rows: Long, quarantined: Long)
 
@@ -142,60 +145,25 @@ object ConvertPipeline extends Logging {
     finally pool.shutdown()
   }
 
-  /** Run the conversion stage. Returns the produced parquet targets. */
-  def convert(spark: SparkSession, cfg: Config): Seq[String] =
-    convertReporting(spark, cfg)._1
-
-  /** [[convert]]'s produced targets, and the sources that failed. */
-  private def convertReporting(spark: SparkSession,
-      cfg: Config): (Seq[String], Seq[String]) = {
-    val csvs = discover(spark, cfg)
-    if (cfg.preserveFileNames) {
-      // 1:1 naming parity (P9): x.csv → x.parquet, one small job per
-      // file; a failure converts that file only (reference X1
-      // isolation), others continue.
-      val outcomes = csvs.map { csv =>
-        val target = targetOf(cfg, csv)
-        csv -> (try {
-          val df = CsvIngest.read(spark, csv, cfg.schema)
-          ParquetSink.writeSingleFile(df, target)
-          Some(target)
-        } catch {
-          case e: Exception =>
-            logError(s"failed to convert $csv: ${e.getMessage}")
-            None
-        })
-      }
-      (outcomes.flatMap(_._2), outcomes.collect { case (csv, None) => csv })
-    } else {
-      // Scale path: one distributed job over all files.
-      val df = CsvIngest.readAll(spark, csvs, cfg.schema)
-      ParquetSink.write(df, cfg.parquetDir)
-      (Seq(cfg.parquetDir), Seq.empty)
-    }
-  }
-
-  /** Conversion with row-level quarantine: bad rows (malformed lines,
-    * failed strict casts) are diverted to `cfg.quarantineDir` with
-    * their raw cells + source file + reason, good rows written as
-    * usual.
+  /** The one conversion engine behind [[convert]], [[convertChecked]]
+    * and [[run]]: one outcome per source, in discovery order.
     *
-    * Each CSV is parsed once. The classified frame is cached
-    * (MEMORY_AND_DISK) with the raw cells kept only on bad rows, the
-    * only rows that need them; the quarantine write is the first
-    * action and fills the cache, and the cache is released before the
-    * call returns, on failure too. With `preserveFileNames` each
-    * file's 1:1 write reads the cache filtered to its source, the
-    * writes run side by side, and the file's rows and quarantined rows
-    * arrive with its write through an [[Observation]] — no extra job.
-    * Every write settles before the first failure is rethrown, which
-    * fails the call. The bulk path writes the good rows once and
-    * counts per file with one aggregate over the cached columns. The
-    * driver-side results are per-FILE metadata (like the directory
-    * listing itself), not per-row data. */
-  def convertChecked(spark: SparkSession, cfg: Config): Seq[FileReport] = {
-    val qDir = cfg.quarantineDir.getOrElse(
-      throw new IllegalArgumentException("quarantineDir not set"))
+    * Each CSV is parsed once into a cache (MEMORY_AND_DISK; raw cells
+    * kept only on bad rows) that one action fills before anything
+    * reads it — the quarantine write, or a count without a
+    * `quarantineDir` — and that is released before the call returns,
+    * on failure too. With a `quarantineDir`, bad rows (malformed
+    * lines, failed strict casts) go there with raw cells, source file
+    * and reason, and only good rows reach the outputs; without one,
+    * every row is written with [[CsvIngest.readAll]]'s lenient casts.
+    * With `preserveFileNames` the 1:1 writes read the cache filtered
+    * to their source side by side, each file's counts arrive with its
+    * write through an [[Observation]], and a failed write fails only
+    * its own source. The bulk path writes once and counts per file
+    * with one aggregate over the cache. A failed parse, quarantine
+    * write or bulk write fails the whole call. */
+  private def convertEach(spark: SparkSession,
+      cfg: Config): Seq[(String, Try[FileReport])] = {
     val csvs = discover(spark, cfg)
     val conf = spark.sparkContext.hadoopConfiguration
     // `_src_file` holds the scan's qualified, URL-encoded file URI.
@@ -204,50 +172,76 @@ object ConvertPipeline extends Logging {
       p.getFileSystem(conf).makeQualified(p).toUri.toString
     }
     val reason = col(CsvIngest.ReasonCol)
+    // Rows held back from the outputs: the bad ones, when quarantined.
+    val held = if (cfg.quarantineDir.isDefined) reason.isNotNull else lit(false)
+    def kept(df: DataFrame) =
+      df.filter(!held).select(cfg.schema.fieldNames.map(col).toIndexedSeq: _*)
     val raws = cfg.schema.fieldNames.map(CsvIngest.rawName).toSet
     val full = CsvIngest.readChecked(spark, csvs, cfg.schema)
     val checked = full.select(full.columns.toIndexedSeq.map(c =>
       if (raws(c)) when(reason.isNotNull, col(c)).as(c) else col(c)): _*)
     checked.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      CsvIngest.badRows(checked, cfg.schema).write.mode("overwrite")
-        .option("compression", "snappy").parquet(qDir)
-      val reports = if (cfg.preserveFileNames) {
-        val outcomes = settled(spark, csvs.map { csv => () =>
+      cfg.quarantineDir match {
+        case Some(q) => CsvIngest.badRows(checked, cfg.schema).write
+          .mode("overwrite").option("compression", "snappy").parquet(q)
+        case None => checked.count()
+      }
+      val outcomes = if (cfg.preserveFileNames) {
+        csvs.zip(settled(spark, csvs.map { csv => () =>
           val target = targetOf(cfg, csv)
           val seen = Observation()
           val file = checked.filter(col(CsvIngest.SrcFileCol) === srcKey(csv))
             .observe(seen, count(lit(1)).as("rows"),
-              count(reason).as("quarantined"))
-          ParquetSink.writeSingleFile(
-            CsvIngest.goodRows(file, cfg.schema), target)
+              count(when(held, true)).as("quarantined"))
+          ParquetSink.writeSingleFile(kept(file), target)
           val m = seen.get
           FileReport(csv, target, m("rows").asInstanceOf[Long],
             m("quarantined").asInstanceOf[Long])
-        })
-        outcomes.collect { case Failure(e) => e } match {
-          case first +: rest =>
-            rest.foreach(first.addSuppressed)
-            throw first
-          case _ => outcomes.map(_.get)
-        }
+        }))
       } else {
-        ParquetSink.write(
-          CsvIngest.goodRows(checked, cfg.schema), cfg.parquetDir)
+        ParquetSink.write(kept(checked), cfg.parquetDir)
         val counts = checked
           .groupBy(col(CsvIngest.SrcFileCol))
-          .agg(count(lit(1)), count(reason))
+          .agg(count(lit(1)), count(when(held, true)))
           .collect()
           .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
         csvs.map { csv =>
           val (rows, q) = counts.getOrElse(srcKey(csv), (0L, 0L))
-          FileReport(csv, cfg.parquetDir, rows, q)
+          csv -> Success(FileReport(csv, cfg.parquetDir, rows, q))
         }
       }
-      reports.filter(_.quarantined > 0).foreach(r => logWarning(
-        s"${r.source}: quarantined ${r.quarantined} of ${r.rows} row(s) → $qDir"))
-      reports
+      outcomes.foreach {
+        case (csv, Failure(e)) => logError(s"failed to convert $csv: $e")
+        case (_, Success(r)) if r.quarantined > 0 => logWarning(
+          s"${r.source}: quarantined ${r.quarantined} of ${r.rows} " +
+            s"row(s) → ${cfg.quarantineDir.get}")
+        case _ =>
+      }
+      outcomes
     } finally checked.unpersist(blocking = true)
+  }
+
+  /** Run the conversion stage. Returns the produced parquet targets
+    * (`parquetDir` itself in bulk mode); a source whose write failed
+    * is logged and left out. */
+  def convert(spark: SparkSession, cfg: Config): Seq[String] =
+    convertEach(spark, cfg).collect { case (_, Success(r)) => r.target }
+      .distinct
+
+  /** Conversion with row-level quarantine: [[convertEach]] with
+    * `cfg.quarantineDir` required. Returns one report per source; when
+    * any write failed, the first failure is rethrown (the others
+    * suppressed on it) once every write settled. */
+  def convertChecked(spark: SparkSession, cfg: Config): Seq[FileReport] = {
+    require(cfg.quarantineDir.isDefined, "quarantineDir not set")
+    val outcomes = convertEach(spark, cfg).map(_._2)
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.map(_.get)
+    }
   }
 
   /** Upload stage (K3), the reference's `S3Uploader`: copy every
@@ -289,13 +283,16 @@ object ConvertPipeline extends Logging {
       s3.uri
     }
 
-  /** Full EP1: convert then upload. Returns the sources that failed
-    * to convert; the others are converted and uploaded. */
+  /** Full EP1: convert then upload. Returns the sources whose write
+    * failed; the others are converted and uploaded. A failure of the
+    * shared parse (or of the bulk write) throws instead, so [[main]]
+    * exits non-zero either way. */
   def run(spark: SparkSession, cfg: Config): Seq[String] = {
-    val (produced, failed) = convertReporting(spark, cfg)
-    logInfo(s"converted ${produced.size} target(s)")
+    val outcomes = convertEach(spark, cfg)
+    logInfo(s"converted ${outcomes.count(_._2.isSuccess)} of " +
+      s"${outcomes.size} source(s)")
     upload(spark, cfg).foreach(u => logInfo(s"uploaded to $u"))
-    failed
+    outcomes.collect { case (csv, Failure(_)) => csv }
   }
 
   def main(args: Array[String]): Unit = {

@@ -2364,7 +2364,8 @@ object Dedup {
       // scheduled ingests, it is not operator cost.
       val n1 = Scaffold.setup {
         Thread.sleep(gapMillis)
-        corpus.filter(horizon === 1).coalesce(2).write
+        // one file: the horizon becomes visible in one step
+        corpus.filter(horizon === 1).coalesce(1).write
           .mode("append").parquet(srcDir)
         corpus.filter(horizon === 1).count()
       }

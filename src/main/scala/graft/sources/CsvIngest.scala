@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -142,9 +142,11 @@ object CsvIngest {
     * and land in quarantine — the conservative direction for an
     * isolation path (loudly held back, never silently wrong).
     *
-    * Still one scan + one projection, no UDFs: callers that select
-    * only the typed columns get the raw cells pruned away by Catalyst,
-    * so the good-row path costs the same as [[readAll]].
+    * Still one scan + one projection, no UDFs. The scan parses every
+    * column whatever the consumer selects (the per-read CSV option
+    * `columnPruning` = false): a parser that skips columns does not
+    * see an over-long line's extra tokens, so a pruned `count` of the
+    * bad rows would disagree with a `collect` of them.
     */
   def readChecked(spark: SparkSession, paths: Seq[String],
       schema: StructType, header: Boolean = true,
@@ -159,6 +161,7 @@ object CsvIngest {
       .option("enforceSchema", "true")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
+      .option("columnPruning", "false")
       .options(options)
       .schema(rawSchema)
       .csv(paths: _*)
@@ -210,21 +213,4 @@ object CsvIngest {
     checked.filter(col(ReasonCol).isNotNull)
       .select((Seq(SrcFileCol, ReasonCol) ++
         schema.fieldNames.map(rawName)).map(col): _*)
-
-  /** Column-level cast helper for programmatic use (same semantics as
-    * [[castSql]], for callers that already hold typed columns). */
-  def castTo(raw: Column, dt: DataType): Column = {
-    val cell = when(trim(raw) === "", lit(null).cast(StringType))
-      .otherwise(raw)
-    dt match {
-      case TimestampNTZType =>
-        coalesce(TimestampPatterns.map(p =>
-          try_to_timestamp(cell, lit(p)).cast(TimestampNTZType)) :+
-          lit(null).cast(TimestampNTZType): _*)
-      case TimestampType =>
-        coalesce(TimestampPatterns.map(p => try_to_timestamp(cell, lit(p))) :+
-          lit(null).cast(TimestampType): _*)
-      case other => cell.try_cast(other)
-    }
-  }
 }

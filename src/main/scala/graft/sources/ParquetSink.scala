@@ -50,21 +50,21 @@ object ParquetSink {
     * `/out/sample1.parquet`), reproducing the reference's one-in →
     * one-out naming. These are the files `ConvertPipeline.upload`
     * copies byte for byte. The staging move is `java.nio`, so the
-    * target must be a local path. */
+    * target must be a local path. The staging directory is removed
+    * whether or not the move succeeds. */
   def writeSingleFile(df: DataFrame, targetFile: String): Unit = {
     val staging = targetFile + ".staging"
-    write(df.coalesce(1), staging)
     val dir = Paths.get(staging)
-    val part = Files.list(dir).filter(p =>
-        p.getFileName.toString.startsWith("part-") &&
-        p.getFileName.toString.endsWith(".parquet"))
-      .findFirst()
-      .orElseThrow(() => new IllegalStateException(
-        s"no part file produced under $staging"))
-    Files.move(part, Paths.get(targetFile),
-      StandardCopyOption.REPLACE_EXISTING)
-    // clean staging dir (part file already moved out)
-    Files.walk(dir).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => Files.deleteIfExists(p))
+    try {
+      write(df.coalesce(1), staging)
+      val part = Files.list(dir).filter(p =>
+          p.getFileName.toString.startsWith("part-") &&
+          p.getFileName.toString.endsWith(".parquet"))
+        .findFirst()
+        .orElseThrow(() => new IllegalStateException(
+          s"no part file produced under $staging"))
+      Files.move(part, Paths.get(targetFile),
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 }

@@ -388,9 +388,10 @@ object EventStreams {
     * `srcDir` and write `batches.head` there, start the caller's query
     * over a parquet file stream of it (`start` gets the stream and a
     * fresh checkpoint under [[ckBase]]), process it to completion,
-    * then append each later batch and process again. The query is
-    * stopped and its checkpoint dropped however the run ends; a query
-    * failure is rethrown. Source writes count as
+    * then append each later batch as ONE file (so the running query's
+    * poll sees all of it or none: one micro-batch) and process again.
+    * The query is stopped and its checkpoint dropped however the run
+    * ends; a query failure is rethrown. Source writes count as
     * [[graft.Scaffold.setup]]; the transform, the sink and anything
     * read back after the run are the caller's. */
   private[graft] def replay(name: String, srcDir: String,
@@ -408,7 +409,9 @@ object EventStreams {
       try {
         q.processAllAvailable()
         batches.tail.foreach { b =>
-          graft.Scaffold.setup { b.write.mode("append").parquet(srcDir) }
+          graft.Scaffold.setup {
+            b.coalesce(1).write.mode("append").parquet(srcDir)
+          }
           q.processAllAvailable()
         }
       } finally q.stop()

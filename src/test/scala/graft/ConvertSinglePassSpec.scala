@@ -16,9 +16,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.sources.{CsvIngest, S3Conf}
 
-/** `ConvertPipeline.convertChecked` parses each CSV once, its observed
-  * per-file counts equal a recount, its cache never outlives the call,
-  * and `upload` copies the converted files byte for byte. */
+/** `ConvertPipeline`'s one conversion engine, behind `convert`, `run`
+  * and `convertChecked`, parses each CSV once, its observed per-file
+  * counts equal a recount, its cache never outlives the call, a failed
+  * write fails only its own file, and `upload` copies the converted
+  * files byte for byte. */
 class ConvertSinglePassSpec extends SparkSpec {
 
   private val schema = graft.schema.SchemaLoader.fromJson(
@@ -41,10 +43,12 @@ class ConvertSinglePassSpec extends SparkSpec {
     dir
   }
 
-  private def config(src: String, preserve: Boolean = true) =
+  private def config(src: String, preserve: Boolean = true,
+      quarantine: Boolean = true) =
     ConvertPipeline.Config(src, tmpDir("single_out"), schema,
       preserveFileNames = preserve,
-      quarantineDir = Some(tmpDir("single_bad") + "/quarantine"))
+      quarantineDir =
+        if (quarantine) Some(tmpDir("single_bad") + "/quarantine") else None)
 
   /** Counts the executed plans during which a CSV scan produced rows.
     * A scan that feeds a cache is reached through the cached relation;
@@ -96,13 +100,63 @@ class ConvertSinglePassSpec extends SparkSpec {
   private def persisted: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private def staged(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.filter(_.endsWith(".staging"))
+
   test("each CSV is parsed once: one executed plan per call scans CSV") {
     val src = mkCsvDir()
     for (preserve <- Seq(true, false)) {
       val cfg = config(src, preserve)
       assert(csvScanPlans(ConvertPipeline.convertChecked(spark, cfg)) == 1,
         s"preserveFileNames=$preserve")
+      for (quarantine <- Seq(false, true)) {
+        val what = s"preserveFileNames=$preserve quarantine=$quarantine"
+        assert(csvScanPlans(ConvertPipeline.convert(spark,
+          config(src, preserve, quarantine))) == 1, s"convert $what")
+        assert(csvScanPlans(ConvertPipeline.run(spark,
+          config(src, preserve, quarantine))) == 1, s"run $what")
+      }
     }
+  }
+
+  test("without quarantine, convert writes every row as CsvIngest.read reads it") {
+    val src = mkCsvDir()
+    // broken RFC-4180 quoting, next to the fixture's bad cast,
+    // over-long line and short row
+    Files.write(Paths.get(src, "d.csv"),
+      "id,name,age\n9,\"Hal,60\n10,Jo,61".getBytes("UTF-8"))
+    val csvs = ConvertPipeline.discoverCsvs(src)
+    val cfg = config(src, quarantine = false)
+    val produced = ConvertPipeline.convert(spark, cfg)
+    assert(produced == csvs.map(c =>
+      s"${cfg.parquetDir}/" + new java.io.File(c).getName
+        .replace(".csv", ".parquet")))
+    for ((csv, target) <- csvs.zip(produced)) {
+      val expected = CsvIngest.read(spark, csv, schema)
+      val back = spark.read.parquet(target)
+      assert(back.columns.toSeq == expected.columns.toSeq, target)
+      assert(rows(back) == rows(expected), target)
+    }
+    val bulk = config(src, preserve = false, quarantine = false)
+    assert(ConvertPipeline.convert(spark, bulk) == Seq(bulk.parquetDir))
+    assert(rows(spark.read.parquet(bulk.parquetDir)) ==
+      rows(CsvIngest.readAll(spark, csvs, schema)))
+  }
+
+  test("run with an occupied target returns only that source; the others convert") {
+    val src = mkCsvDir()
+    val cfg = config(src, quarantine = false)
+    Files.createDirectories(Paths.get(cfg.parquetDir, "b.parquet", "occupied"))
+    val before = persisted
+    assert(ConvertPipeline.run(spark, cfg) == Seq(s"$src/b.csv"))
+    assert(persisted == before, "a cache outlived the call")
+    for (name <- Seq("a", "c"))
+      assert(rows(spark.read.parquet(s"${cfg.parquetDir}/$name.parquet")) ==
+        rows(CsvIngest.read(spark, s"$src/$name.csv", schema)), name)
+    assert(staged(cfg.parquetDir).isEmpty)
   }
 
   test("observed counts equal a recount; quarantine holds exactly the bad rows") {
@@ -116,19 +170,12 @@ class ConvertSinglePassSpec extends SparkSpec {
       assert(reports.map(_.source) == csvs)
       assert(reports.map(r => (r.rows, r.quarantined)) ==
         Seq((3L, 1L), (3L, 1L), (2L, 0L)))
-      // A pruned CSV parse does not see an over-long line, so the
-      // recount parses every column, as the quarantine write does.
-      GraftSession.withConf(spark,
-          "spark.sql.csv.parser.columnPruning.enabled" -> "false") {
-        for (r <- reports) {
-          val fresh = CsvIngest.readChecked(spark, Seq(r.source), schema)
-          assert(r.rows == fresh.count(), r.source)
-          assert(r.quarantined ==
-            fresh.filter(col(CsvIngest.ReasonCol).isNotNull).count(), r.source)
-        }
+      for (r <- reports) {
+        val fresh = CsvIngest.readChecked(spark, Seq(r.source), schema)
+        assert(r.rows == fresh.count(), r.source)
+        assert(r.quarantined ==
+          fresh.filter(col(CsvIngest.ReasonCol).isNotNull).count(), r.source)
       }
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toString).sorted.toSeq
       val all = CsvIngest.readChecked(spark, csvs, schema)
       assert(rows(spark.read.parquet(cfg.quarantineDir.get)) ==
         rows(CsvIngest.badRows(all, schema)))
@@ -153,6 +200,7 @@ class ConvertSinglePassSpec extends SparkSpec {
     assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
     for (name <- Seq("a.parquet", "c.parquet"))
       assert(Files.isRegularFile(Paths.get(cfg.parquetDir, name)), name)
+    assert(staged(cfg.parquetDir).isEmpty)
   }
 
   test("discovery and upload go through the Hadoop FileSystem API; upload is a byte copy") {

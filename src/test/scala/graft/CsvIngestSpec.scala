@@ -179,6 +179,22 @@ class CsvIngestSpec extends SparkSpec {
       _.getAs[String](CsvIngest.ReasonCol) == "malformed_line"))
   }
 
+  test("readChecked's bad rows are the same under any projection, pruning on") {
+    assert(spark.conf.get("spark.sql.csv.parser.columnPruning.enabled") == "true")
+    val csv = writeCsv(
+      "1,Alice,25,1.00,1980-05-20,2023-01-01 12:00:00,1.00,1",
+      "2,Bob,NaN,2.00,1981-06-21,2023-01-01 12:00:00,2.00,2",
+      "3,\"unclosed,30,3.00,1982-07-22,2023-01-01 12:00:00,3.00,3",
+      "4,Dee,40,4.00,1983-08-23,2023-01-01 12:00:00,4.00,4,EXTRA",
+      "5,Eve")
+    import org.apache.spark.sql.functions.{col, count}
+    val checked = CsvIngest.readChecked(spark, Seq(csv), schema)
+    val bad = checked.filter(col(CsvIngest.ReasonCol).isNotNull)
+    val grouped = checked.groupBy(col(CsvIngest.SrcFileCol))
+      .agg(count(col(CsvIngest.ReasonCol))).collect().head.getLong(1)
+    assert((bad.count(), bad.collect().length.toLong, grouped) == (3L, 3L, 3L))
+  }
+
   test("positional binding ignores header names (S3)") {
     val dir = tmpDir("csv_pos")
     Files.write(Paths.get(dir, "in.csv"),

@@ -71,4 +71,22 @@ class JsonlIngestSpec extends SparkSpec {
     assert(bad.exists(_ == "bad_cast:id"))
     assert(bad.exists(_ == "bad_cast:born"))
   }
+
+  test("readChecked's bad rows are the same under any projection") {
+    import graft.sources.CsvIngest
+    import org.apache.spark.sql.functions.{col, count}
+    val dir = write(Seq(
+      """{"id": 1, "name": "good"}""",
+      """{"id": "oops", "name": "bad_cast"}""",
+      // broken in a field a pruned parse need not convert
+      """{"id": 3, "name": }""",
+      """{"id": 4, "name": "trailing"} junk""",
+      """this is not json at all"""))
+    val checked = JsonlIngest.readChecked(spark, Seq(dir), schema)
+    val bad = checked.filter(col(CsvIngest.ReasonCol).isNotNull)
+    val grouped = checked.groupBy(col(CsvIngest.SrcFileCol))
+      .agg(count(col(CsvIngest.ReasonCol))).collect().head.getLong(1)
+    val all = bad.collect().length.toLong
+    assert((bad.count(), grouped) == (all, all))
+  }
 }

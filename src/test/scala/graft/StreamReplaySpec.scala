@@ -38,6 +38,21 @@ class StreamReplaySpec extends SparkSpec {
       s"checkpoint $ck left behind")
   }
 
+  test("replay: each batch of several part files is one micro-batch") {
+    val batches = (0 until 30).map(i =>
+      spark.range(i * 8L, i * 8L + 8, 1, 8).toDF("id"))
+    assert(batches.forall(_.rdd.getNumPartitions == 8))
+    var q: StreamingQuery = null
+    EventStreams.replay("replay_spec_split", tmpDir("replay_split"),
+        batches) { (stream, c) =>
+      q = memory(stream, "replay_spec_split", c, "append")
+      q
+    }
+    assert(spark.table("replay_spec_split").count() == 240L)
+    assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq ==
+      Seq.fill(30)(8L))
+  }
+
   test("replay: a query failing on the second batch is rethrown, stopped and cleaned up") {
     val boom = udf { (id: Long) => require(id >= 0, "boom"); id }
     var q: StreamingQuery = null
