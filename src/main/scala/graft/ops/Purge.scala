@@ -7,10 +7,10 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.hadoop.fs.{FileStatus, Path => HadoopPath}
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.sources.ParquetSink
 
@@ -25,12 +25,14 @@ import graft.sources.ParquetSink
   *     (`AutoPurge.sql:44-57,100-105`).
   *   - Q3 raw-SQL action (`action='SQL'`), with the TRUNCATE fast path
   *     detected for logging (`AutoPurge.sql:129-138`).
-  *   - Q4 criteria delete (`action='CRITERIA'`): guard count first —
-  *     if `COUNT(*) WHERE criteria` exceeds `maxRecordCount` the purge
-  *     aborts (`AutoPurge.sql:141-149`); otherwise the delete runs as
-  *     an anti-rewrite: keep `NOT(criteria)`, write, swap
-  *     (`AutoPurge.sql:139-201`). On plain Parquet a delete IS a
-  *     rewrite; Delta/Iceberg would make it transactional at scale.
+  *   - Q4 criteria delete (`action='CRITERIA'`): if `COUNT(*) WHERE
+  *     criteria` exceeds `maxRecordCount` the purge aborts
+  *     (`AutoPurge.sql:141-149`); otherwise the delete runs as an
+  *     anti-rewrite: keep the rows the criteria is not TRUE for (a
+  *     NULL criteria keeps its row, as Oracle's `DELETE … WHERE`
+  *     does), write, swap (`AutoPurge.sql:139-201`). On plain Parquet
+  *     a delete IS a rewrite; Delta/Iceberg would make it
+  *     transactional at scale.
   *   - Q5 adaptive parallel degree → left to AQE (SURVEY §4).
   *   - Q6 FK disable/enable → N/A on Spark (no FK enforcement); audited
   *     as a no-op for parity of the audit trail.
@@ -41,9 +43,18 @@ import graft.sources.ParquetSink
   *     (`AutoPurge.sql:60-65`), returned to the caller and optionally
   *     appended to an audit parquet table.
   *
-  * Scale note: the guard count and the anti-rewrite are both single
-  * scans with pushed-down predicates; the rewrite parallelizes over
-  * input splits. Nothing here collects rows to the driver.
+  * Scale note: each config reads its table once and counts at most
+  * once. The reference counts first and deletes second; here the
+  * anti-rewrite writes the survivors to `<path>.staging` with an
+  * [[Observation]] of the table's row count and the criteria's match
+  * count attached, so that one job is the whole purge. The guard is
+  * checked on the observed counts before the swap; the audit lines keep
+  * the reference's order (pre-purge rows, guard count, then the
+  * outcome). A dry run and a partition-aligned delete take both counts
+  * from one aggregate. Trade-off: an aborted guard now pays a staging
+  * write (deleted again, the table untouched) instead of a count, so a
+  * batch of mostly aborting configs would read more than before.
+  * Nothing here collects rows to the driver.
   */
 object Purge extends Logging {
 
@@ -67,11 +78,15 @@ object Purge extends Logging {
     def pathOf(table: String): Option[String]
   }
 
-  /** Tables as parquet directories under a root: `<root>/<name>`. */
+  /** Tables as parquet directories under a root: `<root>/<name>`. The
+    * root may be any Hadoop FileSystem URI (`file:`, `hdfs:`, `s3a:`)
+    * or a plain local path; it is resolved with the active session's
+    * Hadoop configuration. */
   case class DirResolver(root: String) extends TableResolver {
     def pathOf(table: String): Option[String] = {
-      val p = java.nio.file.Paths.get(root, table)
-      if (java.nio.file.Files.exists(p)) Some(p.toString) else None
+      val p = new HadoopPath(root, table)
+      val conf = SparkSession.active.sessionState.newHadoopConf()
+      if (p.getFileSystem(conf).exists(p)) Some(p.toString) else None
     }
   }
 
@@ -85,6 +100,8 @@ object Purge extends Logging {
       retainBackups: Int = 0) {
 
     private val events = ArrayBuffer.empty[AuditEvent]
+    /** How many of `events` the audit table already holds. */
+    private var flushed = 0
 
     private def audit(msg: String, user: String, table: String): Unit = {
       val e = AuditEvent(new Timestamp(System.currentTimeMillis()),
@@ -111,10 +128,14 @@ object Purge extends Logging {
       auditLog
     }
 
+    /** Appends the events added since the previous flush. */
     private def flushAudit(): Unit = auditPath.foreach { p =>
       import spark.implicits._
-      if (events.nonEmpty)
-        events.toSeq.toDF().write.mode(SaveMode.Append).parquet(p)
+      val fresh = events.drop(flushed).toSeq
+      if (fresh.nonEmpty) {
+        fresh.toDF().write.mode(SaveMode.Append).parquet(p)
+        flushed = events.size
+      }
     }
 
     private def processTable(c: PurgeConfig): Unit = {
@@ -124,17 +145,21 @@ object Purge extends Logging {
           audit(s"table not found, skipping", c.userName, c.tableName)
         case Some(path) =>
           val df = spark.read.parquet(path)
-          // A2-style stats probe: pre-purge row count into the audit.
-          audit(s"pre-purge rows=${df.count()}", c.userName, c.tableName)
           c.action.toUpperCase match {
-            case "SQL"      => runSql(c, path)
+            case "SQL"      => runSql(c, path, df)
             case "CRITERIA" => runCriteria(c, path, df)
             case other =>
+              prePurge(c, df.count())
               audit(s"unknown action '$other', skipping", c.userName,
                 c.tableName)
           }
       }
     }
+
+    /** A2-style stats probe: the table's pre-purge row count, always a
+      * config's first audit line. */
+    private def prePurge(c: PurgeConfig, rows: Long): Unit =
+      audit(s"pre-purge rows=$rows", c.userName, c.tableName)
 
     /** `DELETE FROM <table> [WHERE <criteria>]` — the one mutating
       * statement shape the reference's SQL-action configs actually
@@ -147,9 +172,10 @@ object Purge extends Logging {
     private val MutatingVerbs =
       Set("UPDATE", "INSERT", "MERGE", "DROP", "ALTER", "CREATE")
 
-    private def runSql(c: PurgeConfig, path: String): Unit = {
+    private def runSql(c: PurgeConfig, path: String, df: DataFrame): Unit = {
       val stmt = c.sqlStatement.trim
       if (dryRun) {
+        prePurge(c, df.count())
         audit(s"DRY RUN: would execute: $stmt", c.userName, c.tableName)
         return
       }
@@ -157,39 +183,42 @@ object Purge extends Logging {
         case s if s.toUpperCase.startsWith("TRUNCATE") =>
           // TRUNCATE fast path (Q3): overwrite with an empty frame of
           // the same schema — no scan of the data.
-          val schema = spark.read.parquet(path).schema
-          val empty = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          replaceTable(path, empty)
+          prePurge(c, df.count())
+          replaceTable(path, emptyOf(df.schema))(commit = true)
           audit("TRUNCATE fast path: table emptied", c.userName,
             c.tableName)
         case DeleteStmt(table, whereOrNull) =>
-          val target =
-            if (table.equalsIgnoreCase(c.tableName)) Some(path)
-            else resolver.pathOf(table)
-          target match {
+          // The pre-purge count comes from the delete's own pass when
+          // it targets the config's table; another table's delete
+          // cannot supply it.
+          val same = table.equalsIgnoreCase(c.tableName)
+          val pre: Long => Unit =
+            if (same) prePurge(c, _)
+            else { prePurge(c, df.count()); _ => () }
+          (if (same) Some(path) else resolver.pathOf(table)) match {
             case None =>
               audit(s"DELETE target '$table' not found, skipping",
                 c.userName, c.tableName)
             case Some(p) =>
-              val df = spark.read.parquet(p)
+              val tdf = if (same) df else spark.read.parquet(p)
               Option(whereOrNull) match {
                 case Some(cond) =>
-                  val n = df.filter(expr(cond)).count()
-                  partitionPrunedDelete(p, cond) match {
-                    case Some((dropped, total)) =>
+                  deleteWhere(p, tdf, cond) { (rows, _) =>
+                    pre(rows); true
+                  }.foreach {
+                    case Dropped(dirs, total, n) =>
                       audit(s"SQL DELETE (partition-pruned): dropped " +
-                        s"$dropped of $total partitions ($n rows); " +
+                        s"$dirs of $total partitions ($n rows); " +
                         s"surviving partitions not rewritten",
                         c.userName, c.tableName)
-                    case None =>
-                      replaceTable(p, df.filter(!expr(cond)))
+                    case Rewritten(n) =>
                       audit(s"SQL DELETE: removed $n rows matching " +
                         s"'$cond'", c.userName, c.tableName)
                   }
                 case None =>
-                  val n = df.count()
-                  replaceTable(p, df.limit(0))
+                  val n = tdf.count()
+                  pre(n)
+                  replaceTable(p, emptyOf(tdf.schema))(commit = true)
                   audit(s"SQL DELETE: removed all $n rows", c.userName,
                     c.tableName)
               }
@@ -199,10 +228,12 @@ object Purge extends Logging {
           // Loud skip, not a silent temp-view no-op: plain parquet has
           // no in-place mutation; a table format (Delta/Iceberg) is
           // the scale answer for general DML.
+          prePurge(c, df.count())
           audit(s"UNSUPPORTED mutating statement on a parquet table, " +
             s"skipping: $stmt", c.userName, c.tableName)
         case _ =>
-          spark.read.parquet(path).createOrReplaceTempView(c.tableName)
+          prePurge(c, df.count())
+          df.createOrReplaceTempView(c.tableName)
           spark.sql(stmt)
           audit(s"executed SQL: $stmt", c.userName, c.tableName)
       }
@@ -211,29 +242,66 @@ object Purge extends Logging {
     private def runCriteria(c: PurgeConfig, path: String,
         df: DataFrame): Unit = {
       val criteria = c.sqlStatement
-      // A1 guard count, predicate pushed into the scan.
-      val toDelete = df.filter(expr(criteria)).count()
-      audit(s"guard count: $toDelete rows match '$criteria' " +
-        s"(max ${c.maxRecordCount})", c.userName, c.tableName)
-      if (toDelete > c.maxRecordCount) {
-        audit(s"ABORT: $toDelete exceeds maxRecordCount " +
-          s"${c.maxRecordCount}; no rows deleted", c.userName, c.tableName)
-      } else if (dryRun) {
-        audit(s"DRY RUN: would delete $toDelete rows", c.userName,
-          c.tableName)
-      } else {
-        partitionPrunedDelete(path, criteria) match {
-          case Some((dropped, total)) =>
-            audit(s"partition-pruned delete: dropped $dropped of $total " +
-              s"partitions ($toDelete rows); surviving partitions not " +
-              s"rewritten", c.userName, c.tableName)
-          case None =>
-            val remaining = df.filter(!expr(criteria))
-            replaceTable(path, remaining)
-            audit(s"deleted $toDelete rows", c.userName, c.tableName)
-        }
+      // A1 guard: audits both counts, then whether the purge may go on.
+      def guard(rows: Long, matched: Long): Boolean = {
+        prePurge(c, rows)
+        audit(s"guard count: $matched rows match '$criteria' " +
+          s"(max ${c.maxRecordCount})", c.userName, c.tableName)
+        val ok = matched <= c.maxRecordCount
+        if (!ok)
+          audit(s"ABORT: $matched exceeds maxRecordCount " +
+            s"${c.maxRecordCount}; no rows deleted", c.userName, c.tableName)
+        ok
+      }
+      if (dryRun) {
+        val (rows, matched) = countMatching(df, criteria)
+        if (guard(rows, matched))
+          audit(s"DRY RUN: would delete $matched rows", c.userName,
+            c.tableName)
+      } else deleteWhere(path, df, criteria)(guard).foreach {
+        case Dropped(dirs, total, n) =>
+          audit(s"partition-pruned delete: dropped $dirs of $total " +
+            s"partitions ($n rows); surviving partitions not rewritten",
+            c.userName, c.tableName)
+        case Rewritten(n) =>
+          audit(s"deleted $n rows", c.userName, c.tableName)
       }
     }
+
+    /** How [[deleteWhere]] removed the rows. */
+    private sealed trait Deleted
+    private case class Dropped(dirs: Int, partitions: Int, rows: Long)
+        extends Deleted
+    private case class Rewritten(rows: Long) extends Deleted
+
+    /** Deletes the rows `criteria` is TRUE for: as directory drops when
+      * the table's partition layout allows ([[prunedPartitions]]), else
+      * as an anti-rewrite. Either way `gate(rows, matched)` sees the
+      * table's row count and the matching count before the table
+      * changes, and may veto the delete. */
+    private def deleteWhere(path: String, df: DataFrame, criteria: String)(
+        gate: (Long, Long) => Boolean): Option[Deleted] =
+      prunedPartitions(path, criteria, df.schema) match {
+        case Some((doomed, total)) =>
+          val (rows, matched) = countMatching(df, criteria)
+          if (!gate(rows, matched)) None
+          else {
+            val conf = spark.sessionState.newHadoopConf()
+            doomed.foreach(d => d.getFileSystem(conf).delete(d, true))
+            Some(Dropped(doomed.size, total, matched))
+          }
+        case None => antiRewrite(path, df, criteria)(gate).map(Rewritten)
+      }
+
+    /** (rows, rows the criteria is TRUE for) in one aggregate. */
+    private def countMatching(df: DataFrame, criteria: String)
+        : (Long, Long) = {
+      val r = df.agg(count(lit(1)), count_if(expr(criteria))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+
+    private def emptyOf(schema: StructType): DataFrame =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
     private val HiveNullPart = "__HIVE_DEFAULT_PARTITION__"
 
@@ -263,15 +331,16 @@ object Purge extends Logging {
       *
       * The criteria is evaluated over the partition VALUES with
       * Spark's own expression semantics: directory names are parsed
-      * into a one-row-per-partition frame, cast to the types the
-      * partitioned read infers, and filtered by the same `expr` the
+      * into a one-row-per-partition frame, cast to the types of the
+      * partitioned read's `schema`, and filtered by the same `expr` the
       * row-level path would use — so the pruned and anti-rewrite paths
       * delete exactly the same rows whenever both apply.
       *
-      * Returns Some((dropped, totalPartitions)) when the pruned path
-      * applied, None to fall back to the anti-rewrite. */
-    private def partitionPrunedDelete(path: String, criteria: String)
-        : Option[(Int, Int)] = {
+      * Only decides; [[deleteWhere]] drops. Returns Some((directories to
+      * drop, totalPartitions)) when the pruned path applies, None to
+      * fall back to the anti-rewrite. */
+    private def prunedPartitions(path: String, criteria: String,
+        schema: StructType): Option[(Seq[HadoopPath], Int)] = {
       val root = new HadoopPath(path)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -299,31 +368,60 @@ object Purge extends Logging {
       if (refs.isEmpty ||
           !refs.subsetOf(partCols.map(_.toLowerCase).toSet)) return None
 
-      val inferred = spark.read.parquet(path).schema
       import spark.implicits._
       val valuesDf = leaves.map { case (spec, p) =>
         (p.toString, spec.map { case (_, v) => unescapeHive(v) })
       }.toDF("_dir", "_vals")
       val typed = partCols.zipWithIndex.foldLeft(valuesDf) {
         case (acc, (c, i)) =>
-          val t = inferred.find(_.name.equalsIgnoreCase(c))
+          val t = schema.find(_.name.equalsIgnoreCase(c))
             .map(_.dataType).getOrElse(StringType)
           acc.withColumn(c,
             when(col("_vals")(i) === HiveNullPart, lit(null))
               .otherwise(col("_vals")(i)).cast(t))
       }
       val doomed = typed.filter(expr(criteria))
-        .select(col("_dir")).collect().map(_.getString(0))
-      doomed.foreach(d => fs.delete(new HadoopPath(d), true))
-      Some((doomed.length, leaves.size))
+        .select(col("_dir")).collect().map(r => new HadoopPath(r.getString(0)))
+      Some((doomed.toSeq, leaves.size))
     }
 
-    /** Anti-rewrite swap: write survivors to a staging dir, then move
-      * it over the table path (the savepoint/commit analogue, Q7). */
-    private def replaceTable(path: String, replacement: DataFrame): Unit = {
-      val staging = path + ".staging"
-      ParquetSink.write(replacement, staging)
-      TableSwap.swapIn(spark, path, staging, retain = retainBackups)
+    /** Anti-rewrite in one job: the rows `criteria` is not TRUE for are
+      * written to staging while an [[Observation]] counts the table's
+      * rows and the rows the criteria is TRUE for. `commit(rows,
+      * matched)` then decides whether the staging replaces the table.
+      * Returns the matched count when it did. */
+    private def antiRewrite(path: String, df: DataFrame, criteria: String)(
+        commit: (Long, Long) => Boolean): Option[Long] = {
+      val seen = Observation()
+      val matches = expr(criteria)
+      val survivors = df
+        .observe(seen, count(lit(1)).as("rows"), count_if(matches).as("matched"))
+        .filter(not(coalesce(matches, lit(false))))
+      def counts = {
+        val m = seen.get
+        (m("rows").asInstanceOf[Long], m("matched").asInstanceOf[Long])
+      }
+      if (replaceTable(path, survivors)(commit.tupled(counts)))
+        Some(counts._2)
+      else None
+    }
+
+    /** Swap: write `replacement` to `<path>.staging`, then, if `commit`
+      * holds, move it over the table path (the savepoint/commit
+      * analogue, Q7). The staging directory never outlives the call:
+      * on an abort or a failed write the table stays as it was. */
+    private def replaceTable(path: String, replacement: DataFrame)(
+        commit: => Boolean): Boolean = {
+      val staging = new HadoopPath(path + ".staging")
+      try {
+        ParquetSink.write(replacement, staging.toString)
+        val ok = commit
+        if (ok)
+          TableSwap.swapIn(spark, path, staging.toString, retain = retainBackups)
+        ok
+      } finally
+        staging.getFileSystem(spark.sessionState.newHadoopConf())
+          .delete(staging, true)
     }
   }
 }

@@ -6,7 +6,6 @@ import java.util.IdentityHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Observation
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -79,15 +78,6 @@ class ConvertSinglePassSpec extends SparkSpec {
 
     override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = ()
-  }
-
-  /** Execution listeners hear events asynchronously, in order: once an
-    * observed marker query's metrics arrive, every earlier event has
-    * been delivered. */
-  private def drainListeners(): Unit = {
-    val marker = Observation()
-    spark.range(1).observe(marker, count(lit(1))).collect()
-    marker.get
   }
 
   private def csvScanPlans(f: => Unit): Int = {

@@ -1,6 +1,17 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ops.Purge
 import graft.sources.ParquetSink
@@ -149,5 +160,203 @@ class PurgeSpec extends SparkSpec {
       Set("logTimestamp", "logMessage", "userName", "tableName"))
     assert(audit.count() >= 3) // pre-stats, guard, deleted
     assert(audit.filter(col("logMessage").startsWith("deleted")).count() == 1)
+  }
+
+  // ---- single pass: one read per config, each count paid at most once
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case o => o.children ++ o.subqueries
+  }).flatMap(nodes)
+
+  /** Records every executed action that scans a parquet table, as
+    * "write" (it writes files), "aggregate" (it aggregates) or its
+    * action name. */
+  private class ParquetActions extends QueryExecutionListener {
+    val kinds = ArrayBuffer.empty[String]
+
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit = synchronized {
+      val all = nodes(qe.executedPlan)
+      if (all.exists {
+            case s: FileSourceScanExec =>
+              s.relation.fileFormat.isInstanceOf[ParquetFileFormat]
+            case _ => false
+          })
+        kinds += (
+          if (all.exists(_.isInstanceOf[DataWritingCommandExec])) "write"
+          else if (all.exists(_.isInstanceOf[BaseAggregateExec])) "aggregate"
+          else funcName)
+    }
+
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+  }
+
+  private def parquetActions[T](f: => T): (T, Seq[String]) = {
+    val listener = new ParquetActions
+    spark.listenerManager.register(listener)
+    try {
+      val out = f
+      drainListeners()
+      (out, listener.synchronized(listener.kinds.toSeq))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** (relative path, size, mtime) of every file under `dir`. */
+  private def inventory(dir: String): Set[(String, Long, Long)] = {
+    val base = Paths.get(dir)
+    Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => (base.relativize(p).toString, Files.size(p),
+        Files.getLastModifiedTime(p).toMillis)).toSet
+  }
+
+  private val AllRows = Long.MaxValue
+
+  test("a CRITERIA rewrite runs one action, the staging write") {
+    val root = tmpDir("purge")
+    val path = mkTable(root)
+    val (log, kinds) =
+      parquetActions(engine(root).run(Seq(cfg("status = 'EXPIRED'"))))
+    assert(kinds == Seq("write"))
+    assert(log.map(_.logMessage) == Seq(
+      "pre-purge rows=100",
+      s"guard count: 50 rows match 'status = 'EXPIRED'' (max $AllRows)",
+      "deleted 50 rows"))
+    assert(spark.read.parquet(path).count() == 50)
+    assert(!Files.exists(Paths.get(path + ".staging")))
+  }
+
+  test("SQL DELETE ... WHERE rewrites in one write; TRUNCATE counts once") {
+    val root = tmpDir("purge")
+    val path = mkTable(root)
+    val (log, kinds) = parquetActions(engine(root).run(Seq(
+      cfg("DELETE FROM t WHERE id <= 30", action = "SQL"))))
+    assert(kinds == Seq("write"))
+    assert(log.map(_.logMessage) == Seq("pre-purge rows=100",
+      "SQL DELETE: removed 30 rows matching 'id <= 30'"))
+    assert(spark.read.parquet(path).count() == 70)
+    val (tlog, tkinds) = parquetActions(engine(root).run(Seq(
+      cfg("TRUNCATE TABLE t", action = "SQL"))))
+    assert(tkinds == Seq("aggregate"))
+    assert(tlog.map(_.logMessage) == Seq("pre-purge rows=70",
+      "TRUNCATE fast path: table emptied"))
+    assert(spark.read.parquet(path).count() == 0)
+  }
+
+  test("a dry run and a partition-aligned delete each run one aggregate") {
+    val root = tmpDir("purge")
+    val path = mkTable(root)
+    val (log, kinds) = parquetActions(
+      engine(root, dryRun = true).run(Seq(cfg("status = 'EXPIRED'"))))
+    assert(kinds == Seq("aggregate"))
+    assert(log.map(_.logMessage) == Seq(
+      "pre-purge rows=100",
+      s"guard count: 50 rows match 'status = 'EXPIRED'' (max $AllRows)",
+      "DRY RUN: would delete 50 rows"))
+    assert(spark.read.parquet(path).count() == 100)
+
+    val proot = tmpDir("purge")
+    val ppath = mkPartitioned(proot)
+    val (plog, pkinds) =
+      parquetActions(engine(proot).run(Seq(cfg("status = 'EXPIRED'"))))
+    assert(pkinds == Seq("aggregate"))
+    assert(plog.map(_.logMessage) == Seq(
+      "pre-purge rows=100",
+      s"guard count: 50 rows match 'status = 'EXPIRED'' (max $AllRows)",
+      "partition-pruned delete: dropped 1 of 2 partitions (50 rows); " +
+        "surviving partitions not rewritten"))
+    assert(!Files.exists(Paths.get(ppath, "status=EXPIRED")))
+    assert(spark.read.parquet(ppath).count() == 50)
+  }
+
+  test("an aborted guard leaves the table's files untouched and no staging") {
+    for (partitioned <- Seq(false, true)) {
+      val root = tmpDir("purge")
+      val path = if (partitioned) mkPartitioned(root) else mkTable(root)
+      val before = inventory(path)
+      val log = engine(root).run(Seq(cfg("status = 'EXPIRED'", max = 10)))
+      assert(log.map(_.logMessage) == Seq(
+        "pre-purge rows=100",
+        "guard count: 50 rows match 'status = 'EXPIRED'' (max 10)",
+        "ABORT: 50 exceeds maxRecordCount 10; no rows deleted"),
+        s"partitioned=$partitioned")
+      assert(inventory(path) == before, s"partitioned=$partitioned")
+      assert(new java.io.File(root).list().toSeq == Seq("t"),
+        s"partitioned=$partitioned")
+    }
+  }
+
+  test("a failed staging write leaves the table as it was and no staging") {
+    val root = tmpDir("purge")
+    val path = mkTable(root)
+    val before = inventory(path)
+    intercept[Exception] {
+      engine(root).run(Seq(cfg(
+        "CASE WHEN id = 77 THEN raise_error('boom') " +
+          "ELSE status = 'EXPIRED' END")))
+    }
+    assert(inventory(path) == before)
+    assert(new java.io.File(root).list().toSeq == Seq("t"))
+  }
+
+  test("rows whose criteria is NULL survive; the audited count is the rows removed") {
+    for ((action, stmt, line) <- Seq(
+        ("CRITERIA", "status = 'EXPIRED'", "deleted 40 rows"),
+        ("SQL", "DELETE FROM t WHERE status = 'EXPIRED'",
+          "SQL DELETE: removed 40 rows matching 'status = 'EXPIRED''"))) {
+      val root = tmpDir("purge")
+      val path = s"$root/t"
+      // 50 ACTIVE, 40 EXPIRED, 10 NULL
+      ParquetSink.write((1 to 100).map(i => (i.toLong,
+        if (i % 10 == 0) null else if (i % 2 == 0) "EXPIRED" else "ACTIVE"))
+        .toDF("id", "status"), path)
+      val log = engine(root).run(Seq(cfg(stmt, action = action)))
+      val left = spark.read.parquet(path)
+      assert(left.count() == 60, action)
+      assert(left.filter($"status".isNull).count() == 10, action)
+      assert(left.filter($"status" === "EXPIRED").count() == 0, action)
+      assert(log.map(_.logMessage).contains(line), action)
+    }
+  }
+
+  test("a second run on one engine appends only its own audit events") {
+    val root = tmpDir("purge")
+    mkTable(root, "t1")
+    mkTable(root, "t2")
+    val auditPath = s"$root/audit"
+    val e = new Purge.Engine(spark, Purge.DirResolver(root),
+      auditPath = Some(auditPath))
+    e.run(Seq(cfg("status = 'EXPIRED'", table = "t1")))
+    e.run(Seq(cfg("status = 'EXPIRED'", table = "t2")))
+    val stored = spark.read.parquet(auditPath).as[Purge.AuditEvent]
+      .collect().toSeq
+    assert(e.auditLog.size == 6)
+    assert(stored.map(_.logMessage).sorted ==
+      e.auditLog.map(_.logMessage).sorted)
+  }
+
+  test("DirResolver resolves file: and s3a: roots through the Hadoop FileSystem API") {
+    val root = tmpDir("purge")
+    val path = mkTable(root)
+    val fileRoot = s"file://$root"
+    assert(Purge.DirResolver(fileRoot).pathOf("t").isDefined)
+    assert(Purge.DirResolver(fileRoot).pathOf("ghost").isEmpty)
+    val log = new Purge.Engine(spark, Purge.DirResolver(fileRoot))
+      .run(Seq(cfg("id <= 10")))
+    assert(!log.exists(_.logMessage.contains("not found")))
+    assert(log.map(_.logMessage).contains("deleted 10 rows"))
+    assert(spark.read.parquet(path).count() == 90)
+
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.s3a.impl", classOf[MockS3AFileSystem].getName)
+    try {
+      val s3Root = s"s3a://purge-bucket$root"
+      val s3log = new Purge.Engine(spark, Purge.DirResolver(s3Root))
+        .run(Seq(cfg("id <= 20")))
+      assert(s3log.map(_.logMessage).contains("deleted 10 rows"))
+      assert(spark.read.parquet(s"$s3Root/t").count() == 80)
+    } finally hc.unset("fs.s3a.impl")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per suite, lazily built;
@@ -36,6 +37,15 @@ trait SparkSpec extends AnyFunSuite {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  /** Execution listeners hear events asynchronously, in order: once an
+    * observed marker query's metrics arrive, every earlier event has
+    * been delivered. */
+  def drainListeners(): Unit = {
+    val marker = Observation()
+    spark.range(1).observe(marker, count(lit(1))).collect()
+    marker.get
   }
 
   def tmpDir(prefix: String): String =
