@@ -3,7 +3,6 @@ package graft
 import java.io.{FileNotFoundException, IOException}
 import java.nio.file.{Files, Paths}
 import java.util.Properties
-import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import scala.util.{Failure, Success, Try}
 
@@ -130,21 +129,6 @@ object ConvertPipeline extends Logging {
     s"${cfg.parquetDir}/" +
       new Path(csv).getName.replaceAll("(?i)\\.csv$", ".parquet")
 
-  /** Runs `tasks` side by side on a pool of at most
-    * `defaultParallelism` threads owned by this call, and returns each
-    * task's outcome, in order, once EVERY task has settled — so no
-    * write or copy is still running when a caller rethrows. */
-  private def settled[T](spark: SparkSession,
-      tasks: Seq[() => T]): Seq[Try[T]] = {
-    val pool = Executors.newFixedThreadPool(math.max(1,
-      math.min(tasks.size, spark.sparkContext.defaultParallelism)))
-    try tasks
-      .map(t => pool.submit(new Callable[T] { def call(): T = t() }))
-      .map(f => try Success(f.get())
-        catch { case e: ExecutionException => Failure(e.getCause) })
-    finally pool.shutdown()
-  }
-
   /** The one conversion engine behind [[convert]], [[convertChecked]]
     * and [[run]]: one outcome per source, in discovery order.
     *
@@ -188,7 +172,7 @@ object ConvertPipeline extends Logging {
         case None => checked.count()
       }
       val outcomes = if (cfg.preserveFileNames) {
-        csvs.zip(settled(spark, csvs.map { csv => () =>
+        csvs.zip(Settle.all(spark, csvs.map { csv => () =>
           val target = targetOf(cfg, csv)
           val seen = Observation()
           val file = checked.filter(col(CsvIngest.SrcFileCol) === srcKey(csv))
@@ -235,13 +219,7 @@ object ConvertPipeline extends Logging {
     * suppressed on it) once every write settled. */
   def convertChecked(spark: SparkSession, cfg: Config): Seq[FileReport] = {
     require(cfg.quarantineDir.isDefined, "quarantineDir not set")
-    val outcomes = convertEach(spark, cfg).map(_._2)
-    outcomes.collect { case Failure(e) => e } match {
-      case first +: rest =>
-        rest.foreach(first.addSuppressed)
-        throw first
-      case _ => outcomes.map(_.get)
-    }
+    Settle.values(convertEach(spark, cfg).map(_._2))
   }
 
   /** Upload stage (K3), the reference's `S3Uploader`: copy every
@@ -264,7 +242,7 @@ object ConvertPipeline extends Logging {
         .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
       dstFs.delete(dst, true)
       dstFs.mkdirs(dst)
-      val outcomes = settled(spark, files.map { f => () =>
+      val outcomes = Settle.all(spark, files.map { f => () =>
         if (!FileUtil.copy(srcFs, f, dstFs, new Path(dst, f.getName),
             false, true, conf))
           throw new IOException(s"copy of $f returned false")

@@ -1,5 +1,6 @@
 package graft.ops
 
+import java.net.URI
 import java.sql.Timestamp
 
 import scala.collection.mutable.ArrayBuffer
@@ -50,10 +51,24 @@ import graft.sources.ParquetSink
   * count attached, so that one job is the whole purge. The guard is
   * checked on the observed counts before the swap; the audit lines keep
   * the reference's order (pre-purge rows, guard count, then the
-  * outcome). A dry run and a partition-aligned delete take both counts
-  * from one aggregate. Trade-off: an aborted guard now pays a staging
-  * write (deleted again, the table untouched) instead of a count, so a
-  * batch of mostly aborting configs would read more than before.
+  * outcome). A dry run on a criteria that is not partition-aligned
+  * takes both counts from one aggregate. Trade-off: an aborted guard
+  * now pays a staging write (deleted again, the table untouched)
+  * instead of a count, so a batch of mostly aborting configs would
+  * read more than before.
+  *
+  * Metadata costs no job: the table is read with the schema of its
+  * first data file's footer ([[ParquetSink.schemaOf]]), not Spark's
+  * inference job, and every count without a predicate (TRUNCATE,
+  * `DELETE FROM t`, the other SQL shapes, an unknown action) and both
+  * counts of a partition-aligned guard (all files; the files under the
+  * doomed directories) are sums of footer row counts
+  * ([[ParquetSink.rowsOf]]). A footer count costs O(files) footer
+  * reads on the driver, side by side on a bounded pool; a table of
+  * very many small files pays for that in object-store GETs. Only the
+  * anti-rewrite's write, the empty write of a TRUNCATE or `DELETE FROM
+  * t`, a dry run's aggregate on a criteria that is not
+  * partition-aligned and the statement of an other SQL shape run jobs.
   * Nothing here collects rows to the driver.
   */
 object Purge extends Logging {
@@ -144,17 +159,26 @@ object Purge extends Logging {
           // Q2: skip-with-log on missing table (AutoPurge.sql:100-105)
           audit(s"table not found, skipping", c.userName, c.tableName)
         case Some(path) =>
-          val df = spark.read.parquet(path)
+          val df = readTable(path)
           c.action.toUpperCase match {
             case "SQL"      => runSql(c, path, df)
             case "CRITERIA" => runCriteria(c, path, df)
             case other =>
-              prePurge(c, df.count())
+              prePurge(c, rowsOf(df))
               audit(s"unknown action '$other', skipping", c.userName,
                 c.tableName)
           }
       }
     }
+
+    /** The table at `path`, read with its footer schema
+      * ([[ParquetSink.schemaOf]]): no schema-inference job. */
+    private def readTable(path: String): DataFrame =
+      spark.read.schema(ParquetSink.schemaOf(spark, path)).parquet(path)
+
+    /** `df`'s rows from its files' footers: no Spark job. */
+    private def rowsOf(df: DataFrame): Long =
+      ParquetSink.rowsOf(spark, df.inputFiles)
 
     /** A2-style stats probe: the table's pre-purge row count, always a
       * config's first audit line. */
@@ -175,7 +199,7 @@ object Purge extends Logging {
     private def runSql(c: PurgeConfig, path: String, df: DataFrame): Unit = {
       val stmt = c.sqlStatement.trim
       if (dryRun) {
-        prePurge(c, df.count())
+        prePurge(c, rowsOf(df))
         audit(s"DRY RUN: would execute: $stmt", c.userName, c.tableName)
         return
       }
@@ -183,7 +207,7 @@ object Purge extends Logging {
         case s if s.toUpperCase.startsWith("TRUNCATE") =>
           // TRUNCATE fast path (Q3): overwrite with an empty frame of
           // the same schema — no scan of the data.
-          prePurge(c, df.count())
+          prePurge(c, rowsOf(df))
           replaceTable(path, emptyOf(df.schema))(commit = true)
           audit("TRUNCATE fast path: table emptied", c.userName,
             c.tableName)
@@ -194,13 +218,13 @@ object Purge extends Logging {
           val same = table.equalsIgnoreCase(c.tableName)
           val pre: Long => Unit =
             if (same) prePurge(c, _)
-            else { prePurge(c, df.count()); _ => () }
+            else { prePurge(c, rowsOf(df)); _ => () }
           (if (same) Some(path) else resolver.pathOf(table)) match {
             case None =>
               audit(s"DELETE target '$table' not found, skipping",
                 c.userName, c.tableName)
             case Some(p) =>
-              val tdf = if (same) df else spark.read.parquet(p)
+              val tdf = if (same) df else readTable(p)
               Option(whereOrNull) match {
                 case Some(cond) =>
                   deleteWhere(p, tdf, cond) { (rows, _) =>
@@ -216,7 +240,7 @@ object Purge extends Logging {
                         s"'$cond'", c.userName, c.tableName)
                   }
                 case None =>
-                  val n = tdf.count()
+                  val n = rowsOf(tdf)
                   pre(n)
                   replaceTable(p, emptyOf(tdf.schema))(commit = true)
                   audit(s"SQL DELETE: removed all $n rows", c.userName,
@@ -228,11 +252,11 @@ object Purge extends Logging {
           // Loud skip, not a silent temp-view no-op: plain parquet has
           // no in-place mutation; a table format (Delta/Iceberg) is
           // the scale answer for general DML.
-          prePurge(c, df.count())
+          prePurge(c, rowsOf(df))
           audit(s"UNSUPPORTED mutating statement on a parquet table, " +
             s"skipping: $stmt", c.userName, c.tableName)
         case _ =>
-          prePurge(c, df.count())
+          prePurge(c, rowsOf(df))
           df.createOrReplaceTempView(c.tableName)
           spark.sql(stmt)
           audit(s"executed SQL: $stmt", c.userName, c.tableName)
@@ -254,7 +278,8 @@ object Purge extends Logging {
         ok
       }
       if (dryRun) {
-        val (rows, matched) = countMatching(df, criteria)
+        val (rows, matched) = prunedPartitions(path, criteria, df.schema)
+          .fold(countMatching(df, criteria))(p => partitionCounts(df, p._1))
         if (guard(rows, matched))
           audit(s"DRY RUN: would delete $matched rows", c.userName,
             c.tableName)
@@ -283,7 +308,7 @@ object Purge extends Logging {
         gate: (Long, Long) => Boolean): Option[Deleted] =
       prunedPartitions(path, criteria, df.schema) match {
         case Some((doomed, total)) =>
-          val (rows, matched) = countMatching(df, criteria)
+          val (rows, matched) = partitionCounts(df, doomed)
           if (!gate(rows, matched)) None
           else {
             val conf = spark.sessionState.newHadoopConf()
@@ -298,6 +323,20 @@ object Purge extends Logging {
         : (Long, Long) = {
       val r = df.agg(count(lit(1)), count_if(expr(criteria))).head()
       (r.getLong(0), r.getLong(1))
+    }
+
+    /** (rows, rows under the `doomed` directories) from the footers of
+      * `df`'s files: the partition-aligned guard's counts, no job. */
+    private def partitionCounts(df: DataFrame, doomed: Seq[HadoopPath])
+        : (Long, Long) = {
+      val conf = spark.sessionState.newHadoopConf()
+      val dirs = doomed.map(d => d.getFileSystem(conf).makeQualified(d)).toSet
+      def underDoomed(f: String): Boolean =
+        Iterator.iterate(new HadoopPath(new URI(f)))(_.getParent)
+          .takeWhile(_ != null).exists(dirs)
+      val (gone, kept) = df.inputFiles.toSeq.partition(underDoomed)
+      val matched = ParquetSink.rowsOf(spark, gone)
+      (matched + ParquetSink.rowsOf(spark, kept), matched)
     }
 
     private def emptyOf(schema: StructType): DataFrame =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Scaffold, Tables}
+import graft.{Scaffold, Settle, Tables}
 import graft.streaming.EventStreams
 
 /** Similarity search over `embeddings` (64-dim unit float vectors):
@@ -3446,21 +3446,14 @@ object Similarity {
     // a small thread pool overlaps each build's shuffle tail with
     // the next build's scan (guide §2.6 — actions are sequential
     // only because the driver calls them sequentially). Results are
-    // unchanged: each build is deterministic and isolated.
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    // blocking{}: these futures spend their life in blocking Spark
-    // actions, so tell the global fork-join pool to compensate rather
-    // than starve; Future.sequence awaits all three TOGETHER so one
-    // failed build settles the whole set instead of rethrowing while
-    // the other two keep submitting jobs in the background.
-    val builds = Seq(l0 -> n0, l1 -> n1, l2 -> n2).map { case (nl, nn) =>
-      Future(blocking { layerAdj(nl, nn) })
-    }
-    val Seq((e0, adj0), (e1, adj1), (e2, adj2)) =
-      Await.result(Future.sequence(builds), Duration.Inf)
+    // unchanged: each build is deterministic and isolated. The pool
+    // is this call's own, and every build settles before the first
+    // failure is rethrown (the others suppressed on it), so no build
+    // keeps submitting jobs behind a failed one.
+    val Seq((e0, adj0), (e1, adj1), (e2, adj2)) = Settle.values(
+      Settle.all(s, Seq(l0 -> n0, l1 -> n1, l2 -> n2).map { case (nl, nn) =>
+        () => layerAdj(nl, nn)
+      }))
     val qframe = leveled.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nm").as("qn")).localCheckpoint()

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.sources.{CsvIngest, S3Conf}
+import graft.sources.{CsvIngest, ParquetSink, S3Conf}
 
 /** `ConvertPipeline`'s one conversion engine, behind `convert`, `run`
   * and `convertChecked`, parses each CSV once, its observed per-file
@@ -223,6 +223,21 @@ class ConvertSinglePassSpec extends SparkSpec {
       for (n <- names(local))
         assert(sha256(remote.resolve(n)) == sha256(local.resolve(n)), n)
       assert(spark.read.parquet(s"s3a://copy-bucket/$key").count() == 6)
+    } finally hc.unset("fs.s3a.impl")
+  }
+
+  test("writeSingleFile moves through the Hadoop FileSystem API: an s3a:// target gets one file") {
+    import spark.implicits._
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.s3a.impl", classOf[MockS3AFileSystem].getName)
+    try {
+      val dir = tmpDir("single_s3a")
+      val source = (1 to 25).map(i => (i, s"n$i")).toDF("id", "name")
+      val target = s"s3a://single-bucket$dir/x.parquet"
+      ParquetSink.writeSingleFile(source, target)
+      assert(new java.io.File(dir).list().toSeq == Seq("x.parquet"))
+      assert(Files.isRegularFile(Paths.get(dir, "x.parquet")))
+      assert(rows(spark.read.parquet(target)) == rows(source))
     } finally hc.unset("fs.s3a.impl")
   }
 }

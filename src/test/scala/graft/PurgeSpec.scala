@@ -239,13 +239,13 @@ class PurgeSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == 70)
     val (tlog, tkinds) = parquetActions(engine(root).run(Seq(
       cfg("TRUNCATE TABLE t", action = "SQL"))))
-    assert(tkinds == Seq("aggregate"))
+    assert(tkinds == Seq())
     assert(tlog.map(_.logMessage) == Seq("pre-purge rows=70",
       "TRUNCATE fast path: table emptied"))
     assert(spark.read.parquet(path).count() == 0)
   }
 
-  test("a dry run and a partition-aligned delete each run one aggregate") {
+  test("a dry run runs one aggregate; a partition-aligned delete runs none") {
     val root = tmpDir("purge")
     val path = mkTable(root)
     val (log, kinds) = parquetActions(
@@ -261,7 +261,7 @@ class PurgeSpec extends SparkSpec {
     val ppath = mkPartitioned(proot)
     val (plog, pkinds) =
       parquetActions(engine(proot).run(Seq(cfg("status = 'EXPIRED'"))))
-    assert(pkinds == Seq("aggregate"))
+    assert(pkinds == Seq())
     assert(plog.map(_.logMessage) == Seq(
       "pre-purge rows=100",
       s"guard count: 50 rows match 'status = 'EXPIRED'' (max $AllRows)",
@@ -358,5 +358,122 @@ class PurgeSpec extends SparkSpec {
       assert(s3log.map(_.logMessage).contains("deleted 10 rows"))
       assert(spark.read.parquet(s"$s3Root/t").count() == 80)
     } finally hc.unset("fs.s3a.impl")
+  }
+
+  // ---- footer planning: the schema and every predicate-free count
+  //      come from Parquet footers, not Spark jobs
+
+  test("jobs per config: none for a partition-aligned delete, one per write, two for a dry-run aggregate") {
+    val proot = tmpDir("purge")
+    mkPartitioned(proot)
+    val (plog, pjobs) =
+      jobsRun(engine(proot).run(Seq(cfg("status = 'EXPIRED'"))))
+    assert(pjobs == 0)
+    assert(plog.last.logMessage.startsWith("partition-pruned delete: dropped 1 of 2"))
+
+    val root = tmpDir("purge")
+    mkTable(root)
+    val (_, djobs) =
+      jobsRun(engine(root, dryRun = true).run(Seq(cfg("status = 'EXPIRED'"))))
+    assert(djobs == 2) // one aggregate under AQE
+    val (_, pdjobs) =
+      jobsRun(engine(proot, dryRun = true).run(Seq(cfg("status = 'ACTIVE'"))))
+    assert(pdjobs == 0)
+    for (c <- Seq(cfg("status = 'EXPIRED'"),
+        cfg("SELECT count(*) FROM t", action = "NOOP"),
+        cfg("TRUNCATE TABLE t", action = "SQL"))) {
+      val (_, jobs) = jobsRun(engine(root).run(Seq(c)))
+      assert(jobs == (if (c.action == "NOOP") 0 else 1), c.sqlStatement)
+    }
+    assert(spark.read.parquet(s"$root/t").count() == 0)
+  }
+
+  test("schemaOf equals Spark's inferred schema") {
+    val root = tmpDir("purge")
+    def same(path: String): Unit =
+      assert(ParquetSink.schemaOf(spark, path) == spark.read.parquet(path).schema,
+        path)
+    same(mkTable(root, "plain"))
+
+    val keyed = s"$root/keyed"
+    ParquetSink.writePartitioned(Seq(
+        (1L, "a", Some(1), Some("x y")), (2L, "b", Some(2), Some("50%/50")),
+        (3L, "c", None, Some("=")), (4L, "d", Some(12), None))
+      .toDF("id", "v", "k", "s"), keyed, Seq("k", "s"))
+    assert(new java.io.File(keyed).list().contains("k=__HIVE_DEFAULT_PARTITION__"))
+    same(keyed)
+    assert(spark.read.parquet(keyed).schema("k").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+
+    val typed = s"$root/typed"
+    spark.range(5).selectExpr(
+      "CAST(id AS DECIMAL(12, 3)) AS amount",
+      "date_add(DATE'2024-02-27', CAST(id AS INT)) AS day",
+      "timestamp_seconds(1700000000 + id) AS ts",
+      "array(id, id + 1) AS xs",
+      "named_struct('a', id, 'b', CAST(id AS STRING)) AS st")
+      .write.parquet(typed)
+    same(typed)
+
+    val odd = tmpDir("purge") + "/with space%25x"
+    same(mkPartitioned(odd))
+    val log = engine(odd).run(Seq(cfg("status = 'EXPIRED'")))
+    assert(log.map(_.logMessage).contains("partition-pruned delete: " +
+      "dropped 1 of 2 partitions (50 rows); surviving partitions not rewritten"))
+    assert(spark.read.parquet(s"$odd/t").count() == 50)
+
+    val truncated = mkTable(root, "t")
+    engine(root).run(Seq(cfg("TRUNCATE TABLE t", action = "SQL")))
+    same(truncated)
+  }
+
+  test("a directory with no data file fails as spark.read.parquet does") {
+    val root = tmpDir("purge")
+    val path = Paths.get(root, "t")
+    Files.createDirectories(path)
+    Files.write(path.resolve("_SUCCESS"), Array.emptyByteArray)
+    val want = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(path.toString))
+    val got = intercept[org.apache.spark.sql.AnalysisException](
+      engine(root).run(Seq(cfg("id <= 10"))))
+    assert(got.getCondition == want.getCondition)
+  }
+
+  test("footer counts equal a recount: several row groups, several files per partition") {
+    val root = tmpDir("purge")
+    val path = s"$root/t"
+    spark.range(0, 20000, 1, 3)
+      .selectExpr("id", "CAST(id % 4 AS INT) AS k",
+        "sha2(CAST(id AS STRING), 256) AS pad")
+      .write.option("parquet.block.size", 16 * 1024).partitionBy("k")
+      .parquet(path)
+    val df = spark.read.parquet(path)
+    val total = df.count()
+    val files = df.inputFiles.toSeq
+    val conf = spark.sessionState.newHadoopConf()
+    val groups = files.map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFooter.getBlocks.size finally r.close()
+    }
+    assert(groups.max > 1, "no file has several row groups")
+    assert(files.groupBy(f => new java.net.URI(f).resolve(".")).values
+      .exists(_.size > 1), "no partition has several files")
+    assert(ParquetSink.rowsOf(spark, files) == total)
+    assert(ParquetSink.rowsOf(spark, Seq.empty) == 0)
+
+    val (log, jobs) =
+      jobsRun(engine(root, dryRun = true).run(Seq(cfg("k IN (1, 3)"))))
+    assert(jobs == 0)
+    val matched = df.filter("k IN (1, 3)").count()
+    assert(log.map(_.logMessage) == Seq(
+      s"pre-purge rows=$total",
+      s"guard count: $matched rows match 'k IN (1, 3)' (max $AllRows)",
+      s"DRY RUN: would delete $matched rows"))
+    val tlog = engine(root).run(Seq(cfg("DELETE FROM t", action = "SQL")))
+    assert(tlog.map(_.logMessage) == Seq(s"pre-purge rows=$total",
+      s"SQL DELETE: removed all $total rows"))
+    assert(spark.read.parquet(path).count() == 0)
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,6 +49,30 @@ trait SparkSpec extends AnyFunSuite {
     val marker = Observation()
     spark.range(1).observe(marker, count(lit(1))).collect()
     marker.get
+  }
+
+  /** Runs `f` and counts the Spark jobs it started, schema-inference
+    * and other metadata jobs included: every job submitted while `f`
+    * runs carries a job tag of this call (threads `f` starts inherit
+    * it), and a listener counts the tagged job starts. */
+  def jobsRun[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-run-${java.util.UUID.randomUUID()}"
+    val started = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag)))
+          started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      val out = try f finally sc.removeJobTag(tag)
+      drainListeners()
+      (out, started.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   def tmpDir(prefix: String): String =
