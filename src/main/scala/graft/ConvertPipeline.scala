@@ -132,14 +132,15 @@ object ConvertPipeline extends Logging {
   /** The one conversion engine behind [[convert]], [[convertChecked]]
     * and [[run]]: one outcome per source, in discovery order.
     *
-    * Each CSV is parsed once into a cache (MEMORY_AND_DISK; raw cells
-    * kept only on bad rows) that one action fills before anything
-    * reads it — the quarantine write, or a count without a
-    * `quarantineDir` — and that is released before the call returns,
-    * on failure too. With a `quarantineDir`, bad rows (malformed
-    * lines, failed strict casts) go there with raw cells, source file
-    * and reason, and only good rows reach the outputs; without one,
-    * every row is written with [[CsvIngest.readAll]]'s lenient casts.
+    * Each CSV is parsed once into a cache (MEMORY_AND_DISK) that holds
+    * [[CsvIngest.readChecked]] as it comes (raw cells on bad rows
+    * only), that one action fills before anything reads it — the
+    * quarantine write, or a count without a `quarantineDir` — and
+    * that is released before the call returns, on failure too. With
+    * a `quarantineDir`, bad rows (malformed lines, failed strict
+    * casts) go there with raw cells, source file and reason, and only
+    * good rows reach the outputs; without one, every row is written
+    * with [[CsvIngest.readAll]]'s lenient casts.
     * With `preserveFileNames` the 1:1 writes read the cache filtered
     * to their source side by side, each file's counts arrive with its
     * write through an [[Observation]], and a failed write fails only
@@ -155,15 +156,12 @@ object ConvertPipeline extends Logging {
       val p = new Path(csv)
       p.getFileSystem(conf).makeQualified(p).toUri.toString
     }
-    val reason = col(CsvIngest.ReasonCol)
     // Rows held back from the outputs: the bad ones, when quarantined.
-    val held = if (cfg.quarantineDir.isDefined) reason.isNotNull else lit(false)
+    val held = if (cfg.quarantineDir.isEmpty) lit(false)
+      else col(CsvIngest.ReasonCol).isNotNull
     def kept(df: DataFrame) =
       df.filter(!held).select(cfg.schema.fieldNames.map(col).toIndexedSeq: _*)
-    val raws = cfg.schema.fieldNames.map(CsvIngest.rawName).toSet
-    val full = CsvIngest.readChecked(spark, csvs, cfg.schema)
-    val checked = full.select(full.columns.toIndexedSeq.map(c =>
-      if (raws(c)) when(reason.isNotNull, col(c)).as(c) else col(c)): _*)
+    val checked = CsvIngest.readChecked(spark, csvs, cfg.schema)
     checked.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       cfg.quarantineDir match {

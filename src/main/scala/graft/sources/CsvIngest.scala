@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,10 +45,14 @@ object CsvIngest {
     "yyyy-MM-dd HH:mm:ss.SSS",
     "yyyy-MM-dd HH:mm:ss")
 
+  /** Raw string column `c` with empty and whitespace-only cells as
+    * NULL (P7): the input of every cast. */
+  private def blankToNull(c: String): String =
+    s"(CASE WHEN TRIM($c) = '' THEN NULL ELSE $c END)"
+
   /** SQL expression casting raw string column `c` to `dt` (P2–P7). */
   def castSql(c: String, dt: DataType, strict: Boolean = false): String = {
-    // Empty-string→NULL normalization (P7) before the cast.
-    val cell = s"(CASE WHEN TRIM($c) = '' THEN NULL ELSE $c END)"
+    val cell = blankToNull(c)
     def cast(to: String) =
       if (strict) s"CAST($cell AS $to)" else s"TRY_CAST($cell AS $to)"
     dt match {
@@ -105,7 +109,7 @@ object CsvIngest {
   // `CsvToParquetConverter.java:204-213` aborts the WHOLE file on one
   // unparseable int/long/date/timestamp. A distributed engine does
   // better than both silent NULLing and whole-file loss: every row is
-  // classified in the same single codegen'd projection, good rows flow
+  // classified in the same scan and codegen'd stage, good rows flow
   // to the sink, bad rows land in a quarantine table with their raw
   // cells, source file, and a reason — loud isolation, no data loss.
 
@@ -114,11 +118,13 @@ object CsvIngest {
   val ReasonCol = "_bad_reason"
   val CorruptCol = "_corrupt_record"
   def rawName(field: String): String = s"_raw_$field"
+  // [[classify]]'s working columns, dropped from its output.
+  private val MalformedCol = "_malformed"
+  private val FailedCol = "_failed_casts"
 
   /** Types whose unparseable values abort a file in the reference
-    * (P2–P5). DECIMAL stays lenient (warn + NULL) there too (P6).
-    * Shared with [[JsonlIngest.readChecked]]. */
-  private[sources] def strictCastType(dt: DataType): Boolean = dt match {
+    * (P2–P5). DECIMAL stays lenient (warn + NULL) there too (P6). */
+  private def strictCastType(dt: DataType): Boolean = dt match {
     case IntegerType | LongType | DateType | TimestampType |
          TimestampNTZType => true
     case _ => false
@@ -131,7 +137,8 @@ object CsvIngest {
     * when (a) the line itself is malformed — extra tokens or broken
     * RFC-4180 quoting, captured via PERMISSIVE's corrupt-record column
     * — or (b) a non-empty cell of a strict type fails its cast.
-    * [[ReasonCol]] is NULL for good rows.
+    * [[ReasonCol]] and the raw cells are NULL on good rows: raw cells
+    * are for the quarantine ([[badRows]]).
     *
     * Short rows are NOT malformed: the reference reads missing
     * trailing cells as NULL (`CsvToParquetConverter.java:159`, P7) and
@@ -142,11 +149,11 @@ object CsvIngest {
     * and land in quarantine — the conservative direction for an
     * isolation path (loudly held back, never silently wrong).
     *
-    * Still one scan + one projection, no UDFs. The scan parses every
-    * column whatever the consumer selects (the per-read CSV option
-    * `columnPruning` = false): a parser that skips columns does not
-    * see an over-long line's extra tokens, so a pruned `count` of the
-    * bad rows would disagree with a `collect` of them.
+    * One scan, no UDFs, each cell cast once ([[classify]]). The scan
+    * parses every column whatever the consumer selects (the per-read
+    * CSV option `columnPruning` = false): a parser that skips columns
+    * does not see an over-long line's extra tokens, so a pruned
+    * `count` of the bad rows would disagree with a `collect` of them.
     */
   def readChecked(spark: SparkSession, paths: Seq[String],
       schema: StructType, header: Boolean = true,
@@ -165,20 +172,6 @@ object CsvIngest {
       .options(options)
       .schema(rawSchema)
       .csv(paths: _*)
-    // Per-column failed-cast markers: non-empty raw cell, NULL typed
-    // value. Catalyst's common-subexpression elimination shares the
-    // cast between the value column and its check.
-    val badMarks = schema.fields.zipWithIndex.collect {
-      case (f, i) if strictCastType(f.dataType) =>
-        s"""CASE WHEN TRIM(COALESCE(_c$i, '')) <> ''
-           |  AND (${castSql(s"_c$i", f.dataType)}) IS NULL
-           |  THEN '${f.name}' END""".stripMargin
-    }
-    // concat_ws skips NULL elements natively (codegen'd — no
-    // interpreted higher-order FILTER in the per-row path).
-    val badJoined = concat_ws(",", expr(
-      if (badMarks.isEmpty) "ARRAY(CAST(NULL AS STRING))"
-      else badMarks.mkString("ARRAY(", ", ", ")")))
     // Spark sets the corrupt marker for under-length rows too; a raw
     // line with fewer tokens than the schema is a SHORT row (good, P7),
     // not a malformed one. Token count via regex-quoted delimiter.
@@ -186,21 +179,50 @@ object CsvIngest {
     val shortRow =
       size(split(corrupt, java.util.regex.Pattern.quote(delimiter))) <
         lit(schema.length)
-    val reason =
-      when(corrupt.isNotNull && !shortRow, lit("malformed_line"))
-        .when(length(badJoined) > 0,
-          concat(lit("bad_cast:"), badJoined))
-        .otherwise(lit(null).cast(StringType))
-    val typed = schema.fields.zipWithIndex.map { case (f, i) =>
-      expr(castSql(s"_c$i", f.dataType)).as(f.name)
+    classify(raw, schema, schema.indices.map(i => s"_c$i"),
+      corrupt.isNotNull && !shortRow)
+  }
+
+  /** The row classifier behind both `readChecked`s: `cells(i)` is the
+    * SQL reference to field i's string cell in `raw`; `malformed`
+    * flags a line that did not parse. Three stacked projections cast
+    * each cell once per row and build the failed-cast list once:
+    * (1) [[readAll]]'s casts, the raw cells, each strict cast's input
+    * (blank → NULL), the source file, the malformed flag; (2) the
+    * failed strict casts (a non-NULL input whose typed value IS NULL)
+    * joined by `concat_ws`; (3) the reason, raw cells on bad rows only.
+    * `CollapseProject` keeps them apart: it does not inline an
+    * expensive alias referenced twice. Merged, each strict cell would
+    * be parsed three times (CSE does not reach into conditional
+    * branches). The cast input is the cast's own subexpression, so
+    * codegen evaluates it once in a method of its own; that keeps the
+    * 28-column reference schema's per-row method under HotSpot's
+    * 8 000-byte JIT limit (BASELINE.md). */
+  private[sources] def classify(raw: DataFrame, schema: StructType,
+      cells: Seq[String], malformed: Column): DataFrame = {
+    val names = schema.fieldNames.toSeq
+    def at(name: String) = col(s"`$name`")
+    def input(name: String) = s"_input_$name"
+    val strict = schema.fields.toSeq.zip(cells)
+      .filter { case (f, _) => strictCastType(f.dataType) }
+    val typed = raw.select(schema.fields.toSeq.zip(cells).map {
+      case (f, c) => expr(castSql(c, f.dataType)).as(f.name)
+    } ++ names.zip(cells).map { case (n, c) => expr(c).as(rawName(n)) } ++
+      strict.map { case (f, c) => expr(blankToNull(c)).as(input(f.name)) } ++
+      Seq(input_file_name().as(SrcFileCol), malformed.as(MalformedCol)): _*)
+    val failed = strict.map { case (f, _) =>
+      when(at(f.name).isNull && at(input(f.name)).isNotNull, lit(f.name))
     }
-    val raws = schema.fields.zipWithIndex.map { case (f, i) =>
-      col(s"_c$i").as(rawName(f.name))
-    }
-    raw.select(
-      (typed ++ raws ++ Seq(
-        input_file_name().as(SrcFileCol),
-        reason.as(ReasonCol))).toIndexedSeq: _*)
+    val listed =
+      typed.select(col("*"), concat_ws(",", failed: _*).as(FailedCol))
+    val castFailed = col(FailedCol) =!= ""
+    val bad = col(MalformedCol) || castFailed
+    listed.select(names.map(at) ++
+      names.map(n => when(bad, at(rawName(n))).as(rawName(n))) ++ Seq(
+        col(SrcFileCol),
+        when(col(MalformedCol), lit("malformed_line"))
+          .when(castFailed, concat(lit("bad_cast:"), col(FailedCol)))
+          .as(ReasonCol)): _*)
   }
 
   /** Clean rows of a [[readChecked]] frame, schema columns only. */

@@ -46,17 +46,16 @@ object JsonlIngest {
   }
 
   /** Row-classified JSONL read — the quarantine contract of
-    * [[CsvIngest.readChecked]] on the JSONL source: same output
-    * layout (typed columns ++ `_raw_<name>` cells ++ source file ++
-    * reason), so [[CsvIngest.goodRows]]/[[CsvIngest.badRows]] split
-    * it identically. A row is bad when the LINE is unparseable JSON
+    * [[CsvIngest.readChecked]] on the JSONL source, on the same
+    * classifier: same output layout (typed columns ++ `_raw_<name>`
+    * cells, set on bad rows only ++ source file ++ reason), so
+    * [[CsvIngest.goodRows]]/[[CsvIngest.badRows]] split it
+    * identically. A row is bad when the LINE is unparseable JSON
     * (PERMISSIVE corrupt-record marker — there is no CSV-style
     * short-row demotion: a missing JSON field is legitimately null)
-    * or a present, non-empty cell of a strict type fails its cast.
-    * One scan + one codegen'd projection. */
+    * or a present, non-empty cell of a strict type fails its cast. */
   def readChecked(spark: SparkSession, paths: Seq[String],
       schema: StructType): DataFrame = {
-    import org.apache.spark.sql.functions._
     val corrupt = CsvIngest.CorruptCol
     val rawSchema = StructType(schema.fields.map(f =>
       StructField(f.name, StringType, nullable = true)) :+
@@ -66,26 +65,7 @@ object JsonlIngest {
       .option("columnNameOfCorruptRecord", corrupt)
       .schema(rawSchema)
       .json(paths: _*)
-    val badMarks = schema.fields.collect {
-      case f if CsvIngest.strictCastType(f.dataType) =>
-        s"""CASE WHEN TRIM(COALESCE(`${f.name}`, '')) <> ''
-           |  AND (${CsvIngest.castSql(s"`${f.name}`", f.dataType)}) IS NULL
-           |  THEN '${f.name}' END""".stripMargin
-    }
-    val badJoined = concat_ws(",", expr(
-      if (badMarks.isEmpty) "ARRAY(CAST(NULL AS STRING))"
-      else badMarks.mkString("ARRAY(", ", ", ")")))
-    val reason =
-      when(col(corrupt).isNotNull, lit("malformed_line"))
-        .when(length(badJoined) > 0, concat(lit("bad_cast:"), badJoined))
-        .otherwise(lit(null).cast(StringType))
-    val typed = schema.fields.map(f =>
-      expr(CsvIngest.castSql(s"`${f.name}`", f.dataType)).as(f.name))
-    val raws = schema.fields.map(f =>
-      col(s"`${f.name}`").as(CsvIngest.rawName(f.name)))
-    raw.select(
-      (typed ++ raws ++ Seq(
-        input_file_name().as(CsvIngest.SrcFileCol),
-        reason.as(CsvIngest.ReasonCol))).toIndexedSeq: _*)
+    CsvIngest.classify(raw, schema, schema.fieldNames.toSeq.map(n => s"`$n`"),
+      org.apache.spark.sql.functions.col(corrupt).isNotNull)
   }
 }

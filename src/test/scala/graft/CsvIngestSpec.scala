@@ -195,6 +195,30 @@ class CsvIngestSpec extends SparkSpec {
     assert((bad.count(), bad.collect().length.toLong, grouped) == (3L, 3L, 3L))
   }
 
+  test("readChecked casts each strict cell once per row, as readAll does") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{Cast, ToTimestamp}
+    val csv = writeCsv(
+      "1,Alice,25,1.00,1980-05-20,2023-01-01 12:00:00,1.00,1")
+    // The string-parsing sites of raw cell `cell` in the optimized plan.
+    def parses(df: DataFrame, cell: String): Int =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect {
+          case e @ (_: Cast | _: ToTimestamp)
+              if e.children.head.dataType == StringType &&
+                e.references.exists(_.name == cell) => e
+        }).size
+    val checked = CsvIngest.readChecked(spark, Seq(csv), schema)
+    val lenient = CsvIngest.readAll(spark, Seq(csv), schema)
+    for ((f, i) <- schema.fields.zipWithIndex) f.dataType match {
+      case IntegerType | LongType | DateType | TimestampNTZType =>
+        val once = parses(lenient, s"_c$i")
+        assert(once > 0, f.name)
+        assert(parses(checked, s"_c$i") == once, f.name)
+      case _ =>
+    }
+  }
+
   test("positional binding ignores header names (S3)") {
     val dir = tmpDir("csv_pos")
     Files.write(Paths.get(dir, "in.csv"),
