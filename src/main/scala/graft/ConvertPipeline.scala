@@ -132,21 +132,32 @@ object ConvertPipeline extends Logging {
   /** The one conversion engine behind [[convert]], [[convertChecked]]
     * and [[run]]: one outcome per source, in discovery order.
     *
-    * Each CSV is parsed once into a cache (MEMORY_AND_DISK) that holds
-    * [[CsvIngest.readChecked]] as it comes (raw cells on bad rows
-    * only), that one action fills before anything reads it — the
-    * quarantine write, or a count without a `quarantineDir` — and
-    * that is released before the call returns, on failure too. With
-    * a `quarantineDir`, bad rows (malformed lines, failed strict
-    * casts) go there with raw cells, source file and reason, and only
-    * good rows reach the outputs; without one, every row is written
-    * with [[CsvIngest.readAll]]'s lenient casts.
-    * With `preserveFileNames` the 1:1 writes read the cache filtered
-    * to their source side by side, each file's counts arrive with its
-    * write through an [[Observation]], and a failed write fails only
-    * its own source. The bulk path writes once and counts per file
-    * with one aggregate over the cache. A failed parse, quarantine
-    * write or bulk write fails the whole call. */
+    * Each CSV is parsed once into a lazy local checkpoint
+    * (MEMORY_AND_DISK) that stores [[CsvIngest.readChecked]]'s rows as
+    * they come (raw cells on bad rows only), that one action fills
+    * before anything reads it — the quarantine write, or a count
+    * without a `quarantineDir` — and whose blocks are released before
+    * the call returns, on failure too. With a `quarantineDir`, bad
+    * rows (malformed lines, failed strict casts) go there with raw
+    * cells, source file and reason, and only good rows reach the
+    * outputs; without one, every row is written with
+    * [[CsvIngest.readAll]]'s lenient casts.
+    * With `preserveFileNames` the 1:1 writes read the checkpoint
+    * filtered to their source side by side, each file's counts arrive
+    * with its write through an [[Observation]], and a failed write
+    * fails only its own source. The bulk path writes once and counts
+    * per file with one aggregate over the checkpoint. A failed parse,
+    * quarantine write or bulk write fails the whole call.
+    *
+    * A checkpoint, not the columnar cache: each row is read back once,
+    * by its own file's write, so the copied rows are stored as they
+    * are instead of being encoded and compressed column by column
+    * (BASELINE.md, "Columnar cache vs row checkpoint"). The trade-off:
+    * a checkpoint has no lineage, so a lost executor fails the writes
+    * that need its blocks — the call fails and a re-run is
+    * idempotent, as after any other failed write — and each file's
+    * filter scans every stored partition, where the cache skipped
+    * batches by their `_src_file` statistics. */
   private def convertEach(spark: SparkSession,
       cfg: Config): Seq[(String, Try[FileReport])] = {
     val csvs = discover(spark, cfg)
@@ -162,7 +173,7 @@ object ConvertPipeline extends Logging {
     def kept(df: DataFrame) =
       df.filter(!held).select(cfg.schema.fieldNames.map(col).toIndexedSeq: _*)
     val checked = CsvIngest.readChecked(spark, csvs, cfg.schema)
-    checked.persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK)
     try {
       cfg.quarantineDir match {
         case Some(q) => CsvIngest.badRows(checked, cfg.schema).write
@@ -201,7 +212,7 @@ object ConvertPipeline extends Logging {
         case _ =>
       }
       outcomes
-    } finally checked.unpersist(blocking = true)
+    } finally Checkpoint.release(checked, blocking = true)
   }
 
   /** Run the conversion stage. Returns the produced parquet targets

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Scaffold, Tables}
+import graft.{Checkpoint, Scaffold, Tables}
 import graft.streaming.EventStreams
 import graft.functions.TextFunctions._
 
@@ -472,11 +472,11 @@ object Dedup {
       val newSum = labelSum(prop)
       changed = if (newSum == prevSum) 0L else 1L
       prevSum = newSum
-      labels.unpersist(blocking = false) // superseded — drop its storage
+      Checkpoint.release(labels) // superseded — drop its storage
       labels = prop
       iter += 1
     }
-    edges.unpersist(blocking = false)
+    Checkpoint.release(edges)
     labels.select(col("id").as("doc_id"), col("label").as("component"))
       .orderBy(col("doc_id"))
   }
@@ -542,7 +542,7 @@ object Dedup {
     while (!converged && rounds < 30) {
       val next = smallStar(largeStar(edges)).localCheckpoint()
       converged = isStarForest(next)
-      edges.unpersist(blocking = false)
+      Checkpoint.release(edges)
       edges = next
       rounds += 1
     }

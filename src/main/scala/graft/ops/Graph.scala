@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Checkpoint, Tables}
 
 /** Iterative graph analytics beyond connected components
   * ([[Dedup.componentsOver]] / star contraction): PageRank over the
@@ -1792,7 +1792,7 @@ object Graph {
       val cur = laySum(next)
       changed = cur != prev
       prev = cur
-      layers.unpersist(blocking = false)
+      Checkpoint.release(layers)
       layers = next
       iter += 1
     }

@@ -17,9 +17,9 @@ import graft.sources.{CsvIngest, ParquetSink, S3Conf}
 
 /** `ConvertPipeline`'s one conversion engine, behind `convert`, `run`
   * and `convertChecked`, parses each CSV once, its observed per-file
-  * counts equal a recount, its cache never outlives the call, a failed
-  * write fails only its own file, and `upload` copies the converted
-  * files byte for byte. */
+  * counts equal a recount, its outputs keep file order, its checkpoint
+  * never outlives the call, a failed write fails only its own file,
+  * and `upload` copies the converted files byte for byte. */
 class ConvertSinglePassSpec extends SparkSpec {
 
   private val schema = graft.schema.SchemaLoader.fromJson(
@@ -49,13 +49,16 @@ class ConvertSinglePassSpec extends SparkSpec {
       quarantineDir =
         if (quarantine) Some(tmpDir("single_bad") + "/quarantine") else None)
 
-  /** Counts the executed plans during which a CSV scan produced rows.
-    * A scan that feeds a cache is reached through the cached relation;
-    * it counts for the plan that filled the cache, not for the plans
-    * that read it afterwards (its row metric no longer moves). */
+  /** Counts the CSV scans that produced rows during a call: each
+    * distinct `FileSourceScanExec` over CSV in any plan executed in the
+    * call (a cached relation's plan included) whose row metric has
+    * moved off zero once the call's events have drained. A lazy
+    * checkpoint's action is reported with the scan still at 0 rows;
+    * the rows arrive later, when the first action over the
+    * checkpoint fills it, and that action's own plan reads the stored
+    * rows, not the CSV. */
   private class CsvScanCounter extends QueryExecutionListener {
-    private val rowsSeen = new IdentityHashMap[FileSourceScanExec, Long]()
-    @volatile var plans = 0
+    private val seen = new IdentityHashMap[FileSourceScanExec, Unit]()
 
     private def csvScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case s: FileSourceScanExec
@@ -68,22 +71,21 @@ class ConvertSinglePassSpec extends SparkSpec {
 
     override def onSuccess(funcName: String, qe: QueryExecution,
         durationNs: Long): Unit = synchronized {
-      val moved = csvScans(qe.executedPlan).distinct.map { s =>
-        val rows = s.metrics("numOutputRows").value
-        val before = Option(rowsSeen.put(s, rows)).getOrElse(0L)
-        rows > before
-      }
-      if (moved.contains(true)) plans += 1
+      csvScans(qe.executedPlan).foreach(seen.put(_, ()))
     }
 
     override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = ()
+
+    def scansWithRows: Int = synchronized {
+      seen.keySet.asScala.count(_.metrics("numOutputRows").value > 0)
+    }
   }
 
   private def csvScanPlans(f: => Unit): Int = {
     val counter = new CsvScanCounter
     spark.listenerManager.register(counter)
-    try { f; drainListeners(); counter.plans }
+    try { f; drainListeners(); counter.scansWithRows }
     finally spark.listenerManager.unregister(counter)
   }
 
@@ -98,18 +100,72 @@ class ConvertSinglePassSpec extends SparkSpec {
 
   test("each CSV is parsed once: one executed plan per call scans CSV") {
     val src = mkCsvDir()
+    val before = persisted
     for (preserve <- Seq(true, false)) {
       val cfg = config(src, preserve)
       assert(csvScanPlans(ConvertPipeline.convertChecked(spark, cfg)) == 1,
         s"preserveFileNames=$preserve")
+      assert(persisted == before, s"preserveFileNames=$preserve")
       for (quarantine <- Seq(false, true)) {
         val what = s"preserveFileNames=$preserve quarantine=$quarantine"
         assert(csvScanPlans(ConvertPipeline.convert(spark,
           config(src, preserve, quarantine))) == 1, s"convert $what")
         assert(csvScanPlans(ConvertPipeline.run(spark,
           config(src, preserve, quarantine))) == 1, s"run $what")
+        assert(persisted == before, what)
       }
     }
+    // negative control: two reads of the same files are two scans
+    val csvs = ConvertPipeline.discoverCsvs(src)
+    assert(csvScanPlans {
+      CsvIngest.readChecked(spark, csvs, schema).count()
+      CsvIngest.readChecked(spark, csvs, schema).count()
+    } == 2)
+  }
+
+  test("each 1:1 output holds its file's good rows in file order") {
+    val src = tmpDir("order_src")
+    val rnd = new scala.util.Random(16)
+    // ids in a shuffled order, so that no sort can pass for file order
+    val ids = rnd.shuffle((1 to 25000).toVector)
+    def body(part: Seq[Int]): String = part.map { id =>
+      if (id % 997 == 0) s"$id,bad$id,NaN" else s"$id,n$id,${id % 90}"
+    }.mkString("id,name,age\n", "\n", "\n")
+    // big.csv: more rows than one columnar cache batch (10 000) holds
+    val files = Seq("big" -> ids.take(22000), "s1" -> ids.slice(22000, 23500),
+      "s2" -> ids.drop(23500))
+    for ((name, part) <- files)
+      Files.write(Paths.get(src, s"$name.csv"), body(part).getBytes("UTF-8"))
+    def check(what: String): Unit = {
+      val cfg = config(src)
+      ConvertPipeline.convertChecked(spark, cfg)
+      for ((name, part) <- files) {
+        val back = spark.read.parquet(s"${cfg.parquetDir}/$name.parquet")
+          .collect().map(_.getInt(0)).toSeq
+        assert(back == part.filter(_ % 997 != 0), s"$what $name.parquet")
+      }
+    }
+    check("one split per file")
+    // 16 KB splits: big.csv's rows arrive in several scan partitions
+    GraftSession.withConf(spark,
+      "spark.sql.files.maxPartitionBytes" -> (16 * 1024).toString) {
+      assert(CsvIngest.readChecked(spark, ConvertPipeline.discoverCsvs(src),
+        schema).rdd.getNumPartitions > 3)
+      check("16 KB splits")
+    }
+  }
+
+  test("a failed quarantine write fails the call before any 1:1 write") {
+    val src = mkCsvDir()
+    val blocker = Paths.get(tmpDir("single_bad"), "file")
+    Files.write(blocker, "not a directory".getBytes("UTF-8"))
+    val cfg = config(src).copy(quarantineDir = Some(s"$blocker/quarantine"))
+    val before = persisted
+    intercept[Exception] {
+      ConvertPipeline.convertChecked(spark, cfg)
+    }
+    assert(persisted == before, "a checkpoint outlived the failed call")
+    assert(new java.io.File(cfg.parquetDir).list().isEmpty)
   }
 
   test("without quarantine, convert writes every row as CsvIngest.read reads it") {
@@ -142,7 +198,7 @@ class ConvertSinglePassSpec extends SparkSpec {
     Files.createDirectories(Paths.get(cfg.parquetDir, "b.parquet", "occupied"))
     val before = persisted
     assert(ConvertPipeline.run(spark, cfg) == Seq(s"$src/b.csv"))
-    assert(persisted == before, "a cache outlived the call")
+    assert(persisted == before, "a checkpoint outlived the call")
     for (name <- Seq("a", "c"))
       assert(rows(spark.read.parquet(s"${cfg.parquetDir}/$name.parquet")) ==
         rows(CsvIngest.read(spark, s"$src/$name.csv", schema)), name)
@@ -155,7 +211,7 @@ class ConvertSinglePassSpec extends SparkSpec {
     for (preserve <- Seq(true, false)) {
       val cfg = config(src, preserve)
       val reports = ConvertPipeline.convertChecked(spark, cfg)
-      assert(persisted == before, "a cache outlived the call")
+      assert(persisted == before, "a checkpoint outlived the call")
       val csvs = ConvertPipeline.discoverCsvs(src)
       assert(reports.map(_.source) == csvs)
       assert(reports.map(r => (r.rows, r.quarantined)) ==
@@ -186,7 +242,7 @@ class ConvertSinglePassSpec extends SparkSpec {
     intercept[java.io.IOException] {
       ConvertPipeline.convertChecked(spark, cfg)
     }
-    assert(persisted == before, "a cache outlived the failed call")
+    assert(persisted == before, "a checkpoint outlived the failed call")
     assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
     for (name <- Seq("a.parquet", "c.parquet"))
       assert(Files.isRegularFile(Paths.get(cfg.parquetDir, name)), name)
